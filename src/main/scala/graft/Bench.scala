@@ -213,21 +213,9 @@ object BenchGate {
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // default to the whole machine, capped at the target topology's 32
-    // threads — the recorded bench artifact should measure the intended
-    // local[32] configuration, not an arbitrary 4-thread slice
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+    val spark = GraftSession.start(GraftSession.builder()
       .config("spark.sql.streaming.streamingQueryListeners",
-        classOf[StreamMeter].getName)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.plans.GraftRules.register(spark)
+        classOf[StreamMeter].getName))
     // Synthetic-regression seam: SPARK_GRAFT_BENCH_SLEEP="qname:millis[,…]"
     // injects a sleep INSIDE the timed window of the named queries — in the
     // pass AND in the isolated adjudication — so the self-adjudicating gate
@@ -243,23 +231,6 @@ object Bench {
     // scans. Counting the executed plan's row RDD computes every emitted
     // column without collecting rows to the driver.
     def run(df: org.apache.spark.sql.DataFrame): Long = df.queryExecution.toRdd.count()
-    // Release every piece of JVM state a query can leave behind. The catalog
-    // holds 60+ localCheckpoint sites; their pinned blocks are never needed
-    // after the query that created them returns, but nothing unpersists them
-    // automatically. Round 4's recorded artifact showed what happens when
-    // 176x2 reps accumulate: the lexicographic tail (q60-q99, run AFTER all
-    // q100+ entries) degraded 3.5-150x vs isolated runs purely from block-
-    // manager pressure. This models a long-lived production session leaking
-    // pinned blocks — the fix belongs in the harness loop, between reps.
-    def cleanup(): Unit = {
-      spark.streams.active.foreach(q => try q.stop() catch { case _: Throwable => () })
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(rdd => try rdd.unpersist(blocking = false) catch { case _: Throwable => () })
-      spark.catalog.clearCache()
-      try spark.catalog.listTables().collect().filter(_.isTemporary)
-        .foreach(t => spark.catalog.dropTempView(t.name))
-      catch { case _: Throwable => () }
-    }
     // One timed execution of a named query, with the planted-sleep seam.
     def timedOnce(name: String,
         fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
@@ -281,7 +252,7 @@ object Bench {
       // inside the first timed streaming rep
       SparkEntry.queries.get("q103_streaming_kmv").foreach(f => run(f(spark, sfDir)))
     } catch { case _: Throwable => () }
-    cleanup()
+    GraftSession.reset(spark)
     // MEASURED per-start engine floor (round 15, ratifying the round-11
     // target's retirement): a minimal one-file AvailableNow stream through
     // a memory sink — planning + offset/commit log and nothing else —
@@ -323,7 +294,7 @@ object Bench {
           med((6 to 10).map(once(_, stateful = true))))
       } catch { case _: Throwable => (0.0, 0.0) }
     }
-    cleanup()
+    GraftSession.reset(spark)
     // Counters start at ZERO for the timed pass: warmup and the floor
     // probes above must not ride the emitted stream metrics (the advisor's
     // mixed-denominator finding).
@@ -361,7 +332,7 @@ object Bench {
     // q122–q136 in r14), forcing a phantom-adjudication round-trip each
     // time; across two different orders a transient window double-hits at
     // most the few queries where the orders cross in time, and min-of-2
-    // absorbs the rest. cleanup() now runs after EVERY timed run (it used
+    // absorbs the rest. GraftSession.reset now runs after EVERY timed run (it used
     // to run between queries, i.e. after both reps): with interleaving,
     // cross-query block accumulation — the round-4 artifact corruption —
     // would otherwise leak across every neighbor in both orders.
@@ -377,7 +348,7 @@ object Bench {
       val t = timedOnce(name, fn)
       runsByName(name) =
         (t, StreamMeter.since(s0)) :: runsByName.getOrElse(name, Nil)
-      cleanup()
+      GraftSession.reset(spark)
     }
     val results = catalog.map { case (name, _) =>
       val best = runsByName(name).minBy(_._1)
@@ -496,7 +467,7 @@ object Bench {
           // recorded), so adjudicating colder would bias toward
           // confirming phantoms
           val iso = (1 to 3).map(_ => timedOnce(n, qmap(n))).min
-          cleanup()
+          GraftSession.reset(spark)
           BenchGate.Flag(n, t, expected(n), iso,
             BenchGate.verdictOf(iso, expected(n)))
         } ++ movers.drop(16).map { case (n, t) =>
@@ -612,6 +583,7 @@ object Bench {
     // verdict's scaling-opacity item): the artifact itself must prove the
     // run honored $SPARK_GRAFT_CPUS instead of leaving
     // `suspect_cpus_ignored` undecidable from the outside.
+    val cpus = GraftSession.cpus
     val envTag = s""""cpus":$cpus,"master":"local[$cpus]""""
     val line = s"""{"metric":"total","value":$total,"unit":"sec","mode":"min-of-$reps",$envTag,"streaming_engine_s":$streamingS,"streaming_engine_adjudicated_s":${f"$streamingSAdj%.2f"},"streaming_starts":$minRepStarts,"streaming_stateful_starts":$minRepStatefulStarts,"streaming_batches":$minRepBatches,"streaming_trigger_s":$minRepTriggerS,"streaming_planning_s":${f"$minRepPlanningS%.2f"},"streaming_addbatch_s":${f"$minRepAddBatchS%.2f"},"streaming_wal_s":${f"$minRepWalS%.2f"},"streaming_starts_all_reps":${StreamMeter.starts.get},"streaming_floor_per_start_s":${f"$floorStatelessS%.3f"},"streaming_floor_stateful_s":${f"$floorStatefulS%.3f"},"streaming_floor_provenance":"median-of-5","streaming_floor_s":${f"$streamingFloorS%.2f"},"streaming_floor_ratio":${f"$streamingRatio%.3f"},"streaming_floor_ratio_adjudicated":${f"$streamingRatioAdj%.3f"},"flags":$flagsJson,"queries":$qs,"t0":$t0s,"sf":"$sfDir"$knobTag}"""
     println(line)

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev utility: print the formatted physical plan of one or more catalog
   * queries. `sbt "runMain graft.Explain <sfDir> [namePrefix,...]"`.
   * Used to audit scan pushdown (PushedFilters/ReadSchema), join strategies
@@ -11,13 +9,7 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
     val prefixes = if (args.length > 1) args(1).split(",").toSeq else Seq("")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .getOrCreate()
+    val spark = GraftSession.start()
     spark.sparkContext.setLogLevel("ERROR")
     SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => prefixes.exists(n.startsWith) }

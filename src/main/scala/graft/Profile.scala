@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 
 /** Dev utility (round 18, guide §1): per-JOB wall-time attribution for one
   * or more catalog queries. Runs each named query `reps` times (first run
@@ -16,16 +15,7 @@ object Profile {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val prefixes = if (args.length > 1) args(1).split(",").toSeq else Seq("")
     val reps = if (args.length > 2) args(2).toInt else 2
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.plans.GraftRules.register(spark)
+    val spark = GraftSession.start()
 
     case class J(id: Int, site: String, t0: Long, var t1: Long = -1L,
         var tasks: Int = 0)
@@ -44,22 +34,13 @@ object Profile {
         Option(jobs.get(e.jobId)).foreach(_.t1 = e.time)
       }
     })
-    def cleanup(): Unit = {
-      spark.streams.active.foreach(q => try q.stop() catch { case _: Throwable => () })
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(rdd => try rdd.unpersist(blocking = false) catch { case _: Throwable => () })
-      spark.catalog.clearCache()
-      try spark.catalog.listTables().collect().filter(_.isTemporary)
-        .foreach(t => spark.catalog.dropTempView(t.name))
-      catch { case _: Throwable => () }
-    }
     SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => prefixes.exists(n.startsWith) }
       .foreach { case (name, fn) =>
         (1 until reps).foreach { _ =>
           try fn(spark, sfDir).queryExecution.toRdd.count()
           catch { case e: Throwable => println(s"[profile] warmup $name: $e") }
-          cleanup()
+          GraftSession.reset(spark)
         }
         jobs.clear(); record = true
         val t0 = System.nanoTime()
@@ -67,7 +48,7 @@ object Profile {
         catch { case e: Throwable => println(s"[profile] $name FAILED: $e") }
         val wall = (System.nanoTime() - t0) / 1e9
         record = false
-        cleanup()
+        GraftSession.reset(spark)
         import scala.jdk.CollectionConverters._
         val js = jobs.values.asScala.toSeq.sortBy(_.t0)
         val sumJ = js.map(j => math.max(0L, j.t1 - j.t0)).sum / 1e3

@@ -1,20 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Mirrors the driver's smoke check: SparkEntry.entry must return > 0 rows on
   * the sf0.001 testdata. Run: `sbt "runMain graft.Smoke"`.
   */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.start()
     val n = SparkEntry.entry(spark).count()
     println(s"[smoke] entry rows = $n")
     require(n > 0, "entry returned no rows")

@@ -24,9 +24,15 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("q05_star_join")(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
+  /** One entry per implemented operator from SURVEY.md §2. Each entry
+    * installs graft's rules into the session it is given, so every query
+    * plans the same whoever built that session.
+    */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    catalog.map(q => q.name -> q.fn).toMap
+    catalog.map(q => q.name -> { (s: SparkSession, dir: String) =>
+      graft.plans.GraftRules.register(s)
+      q.fn(s, dir)
+    }).toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted for non-SQL-expressible ops.

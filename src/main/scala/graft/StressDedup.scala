@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.dedup.{Components, MinHashLSH, NgramJaccard}
 
@@ -29,13 +29,7 @@ object StressDedup {
 
   def main(args: Array[String]): Unit = {
     val copies = sys.env.getOrElse("SPARK_GRAFT_STRESS_COPIES", "10").toInt
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.start()
 
     // ---- corpus: 5 000 sf0.1 docs × `copies`, three families by base id ----
     //  30% boilerplate: 7 distinct template texts shared by ~`0.3·N/7` docs

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.ops.ActionLog
@@ -36,13 +35,9 @@ object StressMeta {
   def main(args: Array[String]): Unit = {
     val n = sys.env.getOrElse("SPARK_GRAFT_STRESS_COMMITS", "2000").toInt
     val ckptEvery = 250
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 4) // 1-row commits
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .getOrCreate()
+    val spark = GraftSession.start()
     spark.sparkContext.setLogLevel("ERROR")
+    spark.conf.set("spark.sql.shuffle.partitions", 4L) // 1-row commits
     import spark.implicits._
 
     val root = java.nio.file.Files.createTempDirectory("stress-meta").toString

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -11,17 +10,7 @@ object Verify {
     val nameFilter: String => Boolean =
       if (args.length > 2) { val ps = args(2).split(","); (n: String) => ps.exists(n.startsWith) }
       else _ => true
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.plans.GraftRules.register(spark)
+    val spark = GraftSession.start()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.filter(kv => nameFilter(kv._1)).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
@@ -29,16 +18,7 @@ object Verify {
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // Same harness hygiene as Bench: queries localCheckpoint internally and
-      // nothing unpersists those pinned blocks; across 176 dumps they would
-      // accumulate in the block manager and slow the tail (round-4 lesson).
-      spark.streams.active.foreach(sq => try sq.stop() catch { case _: Throwable => () })
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(rdd => try rdd.unpersist(blocking = false) catch { case _: Throwable => () })
-      spark.catalog.clearCache()
-      try spark.catalog.listTables().collect().filter(_.isTemporary)
-        .foreach(t => spark.catalog.dropTempView(t.name))
-      catch { case _: Throwable => () }
+      GraftSession.reset(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -78,24 +78,34 @@ final class EodPipeline(warehouse: String, minTickers: Long = 100L) {
 
   /** Stage 2-3 of the lifecycle: bronze CSV for one date → RAW append with
     * the V1 row-count gate evaluated by `observe` ON the write pass (one
-    * scan, not two). A failing gate compensates by deleting the partition
-    * just written — at scale the saved re-read of the bronze batch outweighs
-    * the rare rollback delete.
+    * scan, not two). The pass writes into a hidden staging dir that no RAW
+    * reader lists; only a batch that passes the gate has its files moved
+    * into `trade_date=D`, so a rejected reload never touches rows an earlier
+    * load published, and a crash before the move publishes nothing.
     */
   def loadRaw(spark: SparkSession, bronzeCsv: String, tradeDate: String): Long = {
     val obs = org.apache.spark.sql.Observation(s"v1-gate-$tradeDate")
-    val bronze = EodSource.readBronzeCsv(spark, bronzeCsv)
-      .withColumn("trade_date", to_date(lit(tradeDate)))
+    val part = new org.apache.hadoop.fs.Path(s"$rawPath/trade_date=$tradeDate")
+    val stage = new org.apache.hadoop.fs.Path(s"$rawPath/.trade_date=$tradeDate.stage")
+    val fs = part.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    EodSource.readBronzeCsv(spark, bronzeCsv)
+      .drop("trade_date") // the partition dir carries it, as partitionBy would
       .observe(obs, count(lit(1)).as("rows"))
-    bronze.write.mode(SaveMode.Append).partitionBy("trade_date").parquet(rawPath)
+      .write.mode(SaveMode.Overwrite).parquet(stage.toString)
     val n = obs.get("rows").asInstanceOf[Long]
-    if (n < minTickers) { // V1 (eod_data_downloader.py:138-145), compensating
-      val p = new org.apache.hadoop.fs.Path(s"$rawPath/trade_date=$tradeDate")
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(p)) fs.delete(p, true)
+    if (n < minTickers) { // V1 (eod_data_downloader.py:138-145)
+      fs.delete(stage, true)
       throw new IllegalArgumentException(
         s"bronze $tradeDate: expected >= $minTickers rows, got $n")
     }
+    fs.mkdirs(part)
+    fs.listStatus(stage).map(_.getPath).filter(_.getName.startsWith("part-"))
+      .foreach { f =>
+        if (!fs.rename(f, new org.apache.hadoop.fs.Path(part, f.getName)))
+          throw new java.io.IOException(s"RAW publish failed: $f -> $part")
+      }
+    fs.delete(stage, true)
+    spark.catalog.refreshByPath(rawPath)
     n
   }
 

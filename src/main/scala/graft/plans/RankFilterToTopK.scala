@@ -87,8 +87,10 @@ object RankFilterToTopK extends Rule[LogicalPlan] with PredicateHelper {
   }
 }
 
-/** Idempotent live-session registration (Verify/Bench/tests build their own
-  * sessions; `GraftExtensions` installs the same rule at builder time).
+/** The one install path for graft's planner strategy, optimizer rules and
+  * SQL functions. It registers into a LIVE session, idempotently, so it
+  * reaches sessions built outside this library too: [[graft.GraftSession]]
+  * calls it at start and `SparkEntry.queries` before every catalog query.
   */
 object GraftRules {
   def register(spark: SparkSession): Unit = {
@@ -109,17 +111,22 @@ object GraftRules {
     * `spark.sql("SELECT jaro_winkler(a, b) ...")` works exactly like the
     * Column API (q175 exercises this path end to end). Arity is validated
     * here so a bad call fails at analysis with a readable message, not with
-    * a MatchError from the builder.
+    * a MatchError from the builder. A name the session already resolves is
+    * left alone, so the per-query call from `SparkEntry.queries` neither
+    * rebuilds the registry entry nor logs a replacement warning.
     */
   def registerFunctions(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
     def arity(name: String, n: Int)(
         build: Seq[org.apache.spark.sql.catalyst.expressions.Expression] =>
-          org.apache.spark.sql.catalyst.expressions.Expression) =
-      reg.createOrReplaceTempFunction(name, { args =>
-        require(args.length == n, s"$name expects $n argument(s), got ${args.length}")
-        build(args)
-      }, "built-in")
+          org.apache.spark.sql.catalyst.expressions.Expression): Unit =
+      if (!reg.functionExists(
+          org.apache.spark.sql.catalyst.FunctionIdentifier(name)))
+        reg.createOrReplaceTempFunction(name, { args =>
+          require(args.length == n, s"$name expects $n argument(s), got ${args.length}")
+          build(args)
+        }, "built-in")
+    arity("dot_product", 2) { case Seq(a, b) => graft.functions.DotProduct(a, b) }
     arity("jaro_winkler", 2) { case Seq(a, b) => graft.functions.JaroWinkler(a, b) }
     arity("nfc_normalize", 1) { case Seq(a) => graft.functions.NfcNormalize(a) }
     arity("hilbert_xy2d", 3) { case Seq(x, y, b) =>

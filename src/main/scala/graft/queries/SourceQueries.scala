@@ -4293,7 +4293,6 @@ object SourceQueries {
         |  round(CAST(sum(CAST(o_totalprice AS DECIMAL(12,2))) AS DOUBLE), 2)
         |    AS total_sum
         |FROM orders GROUP BY 1""".stripMargin) { (s, dir) =>
-      graft.plans.GraftRules.register(s) // idempotent; driver sessions vary
       val fact = Tables.load(s, dir, "orders")
         .select(col("o_custkey").as("ckey"),
           col("o_orderpriority").as("opri"),

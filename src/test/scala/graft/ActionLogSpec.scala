@@ -75,4 +75,19 @@ class ActionLogSpec extends AnyFunSuite {
     val (files, _, ckpt) = ActionLog.resolve(spark, dir, 3L)
     assert(ckpt.contains(2L) && files.size == 1)
   }
+
+  test("a staged file whose stats column is entirely NULL is refused, table unchanged") {
+    // Kept as a refusal: an add line without stats would break the
+    // all-files-have-stats invariant that maintenance planning (IvfIndex
+    // rebalance) and range pruning rely on.
+    val dir = TestSpark.tmpDir("al-nullstats")
+    ActionLog.append(df(1L, 2L).coalesce(1), dir, statsCol = Some("k"))
+    val e = intercept[IllegalArgumentException] {
+      ActionLog.append(Seq(Option.empty[Long], None).toDF("k").coalesce(1), dir,
+        statsCol = Some("k"))
+    }
+    assert(e.getMessage.contains("entirely NULL"), e.getMessage)
+    assert(ActionLog.versions(spark, dir) == Seq(1L))
+    assert(ActionLog.read(spark, dir).as[Long].collect().sorted.toSeq == Seq(1L, 2L))
+  }
 }

@@ -134,4 +134,28 @@ class EodPipelineSpec extends AnyFunSuite {
     }
     assert(e.getMessage.contains("expected >= 100"))
   }
+
+  test("V1 gate: a rejected reload leaves the date's earlier RAW load intact") {
+    val bronze = TestSpark.tmpDir("bronze3")
+    val wh = TestSpark.tmpDir("wh3")
+    val pipe = new EodPipeline(wh, minTickers = 2)
+    val full = writeCsv(bronze, "2026-08-10", Seq(
+      "2026-08-10,AAPL,1,1,1,1,1",
+      "2026-08-10,MSFT,2,2,2,2,2"))
+    pipe.runDate(spark, full, "2026-08-10")
+    val short = new java.io.File(TestSpark.tmpDir("bronze3b"), "short.csv")
+    java.nio.file.Files.writeString(short.toPath,
+      "trade_date,symbol,open,high,low,close,volume\n2026-08-10,AAPL,3,3,3,3,3\n")
+    val e = intercept[IllegalArgumentException] {
+      pipe.runDate(spark, short.toString, "2026-08-10")
+    }
+    assert(e.getMessage.contains("expected >= 2"))
+    val raw = spark.read.parquet(pipe.rawPath)
+      .filter($"trade_date" === "2026-08-10")
+      .select($"symbol", $"close".cast("double")).as[(String, Double)]
+      .collect().sorted
+    assert(raw === Array(("AAPL", 1.0), ("MSFT", 2.0)))
+    assert(new java.io.File(pipe.rawPath).list().forall(!_.startsWith(".trade_date")),
+      "the rejected batch's staging dir is removed")
+  }
 }

@@ -2,7 +2,8 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.functions.{DotProduct, GraftExtensions}
+import graft.functions.DotProduct
+import graft.plans.GraftRules
 
 /** Native DotProduct expression: eval + codegen paths, type dispatch,
   * null/length semantics, SQL registration, parity with the HOF fold.
@@ -40,7 +41,7 @@ class FunctionsSpec extends AnyFunSuite {
   }
 
   test("SQL registration exposes dot_product") {
-    GraftExtensions.register(spark)
+    GraftRules.register(spark)
     val r = spark.sql("SELECT dot_product(array(1.0D, 2.0D), array(3.0D, 4.0D)) AS d").head()
     assert(r.getDouble(0) === 11.0)
   }
@@ -84,7 +85,7 @@ class FunctionsSpec extends AnyFunSuite {
   }
 
   test("SQL registration exposes jaro_winkler; expression stays codegen'd") {
-    GraftExtensions.register(spark)
+    GraftRules.register(spark)
     val r = spark.sql("SELECT jaro_winkler('MARTHA', 'MARHTA') AS jw").head()
     assert(math.abs(r.getDouble(0) - 0.9611111111111111) < 2e-15)
     // no interpreted-projection fallback: over a real scan (literals would

@@ -2,27 +2,17 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One shared session for the whole test JVM (Test / fork := true). */
+/** One shared session for the whole test JVM (Test / fork := true): the
+  * shared [[GraftSession]] configuration on a fixed 4-core master with its
+  * own throwaway warehouse.
+  */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // standards-track timestamps (round 18): Spark's default INT96 is
-      // deprecated, refused by Spark's OWN reader inside LIST elements
-      // (array<timestamp> columns), and unreadable by the engine's
-      // row/Group readers, which speak annotated INT64 micros
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-wh").toString)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    graft.plans.GraftRules.register(s)
-    s
-  }
+  lazy val spark: SparkSession = GraftSession.start(GraftSession.builder()
+    .master("local[4]")
+    .appName("graft-test")
+    .config("spark.sql.shuffle.partitions", "4")
+    .config("spark.sql.warehouse.dir",
+      java.nio.file.Files.createTempDirectory("graft-wh").toString))
 
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
