@@ -38,17 +38,11 @@ object BloomIndex {
     * at 100 TB that doubles the index build's read volume for one
     * number the footers already hold. O(files) metadata reads, no job.
     */
-  private def footerMaxRows(spark: SparkSession, paths: Seq[Path]): Long = {
-    val conf = spark.sparkContext.hadoopConfiguration
+  private def footerMaxRows(spark: SparkSession, paths: Seq[Path]): Long =
     // independent metadata round-trips — bounded-parallel so sizing a
     // many-file build doesn't serialize one footer open per file (r18
     // verdict #4, same discipline as ActionLog.addLines)
-    graft.ParallelActions.mapOrdered(paths) { p =>
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf)
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-      try r.getRecordCount finally r.close()
-    }.foldLeft(0L)(math.max)
-  }
+    graft.source.GraftMeta.footerRows(spark, paths).foldLeft(0L)(math.max)
 
   private def visibleFiles(spark: SparkSession, dir: Path): Seq[Path] = {
     val all = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)

@@ -18,20 +18,23 @@ import org.apache.hadoop.fs.Path
   *    broadcast-sized — a daily increment almost always is, so Spark picks a
   *    broadcast anti join and the TB-sized target never shuffles.
   *  - With a date-partitioned target and a single-date source, callers should
-  *    pre-filter the target to the affected partitions (partition pruning) and
-  *    rewrite only those — see [[EodPipelineSpec]] usage; rewriting 1 partition
-  *    of 3650 is what makes the daily run O(day) instead of O(history).
+  *    read only the affected partition's directory and rewrite only it, as
+  *    `EodPipeline.runDate` does: rewriting 1 partition of 3650 is what makes
+  *    the daily run O(day) instead of O(history). Reading the table root and
+  *    filtering on the date prunes the scan but still lists every partition.
   */
 object Upsert {
 
   /** Key-match upsert: source row wins on key collision, target row survives
     * otherwise. Column set is taken from the target.
     */
-  def merge(target: DataFrame, source: DataFrame, keys: Seq[String]): DataFrame = {
-    val srcKeys = source.select(keys.map(col): _*).distinct()
-    val survivors = target.join(srcKeys, keys, "left_anti")
-    survivors.unionByName(source.select(target.columns.map(col).toIndexedSeq: _*))
-  }
+  def merge(target: DataFrame, source: DataFrame, keys: Seq[String]): DataFrame =
+    survivors(target, source, keys)
+      .unionByName(source.select(target.columns.map(col).toIndexedSeq: _*))
+
+  /** The target rows an upsert keeps: those whose key the source lacks. */
+  def survivors(target: DataFrame, source: DataFrame, keys: Seq[String]): DataFrame =
+    target.join(source.select(keys.map(col): _*).distinct(), keys, "left_anti")
 
   /** Insert-only merge (WHEN NOT MATCHED THEN INSERT): append source rows whose
     * key is absent from the target (merge_dim_security.sql:5-14).

@@ -1,10 +1,12 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import graft.model.Schemas
 import graft.ops._
-import graft.source.EodSource
+import graft.source.{EodSource, GraftMeta}
 
 /** One daily run's outcome — the reference's XCom metadata + V4/V5 metric
   * rows collapsed into plain Scala values (SURVEY §3.1: "XCom becomes plain
@@ -19,6 +21,12 @@ final case class PipelineReport(
     factRows: Long,
     rowParity: Boolean)
 
+/** Row counts one partition upsert observed on its write pass: the
+  * partition before the merge (`target`), the rows of it the merge kept
+  * (`survivors`) and the rows written.
+  */
+private final case class MergeCounts(target: Long, survivors: Long, written: Long)
+
 /** The daily ELT lifecycle of the reference
   * (`polygon_modern_elt_v2`, dags/get_securities_data.py:71-233) as one Spark
   * driver program: bronze CSV → RAW (append, lineage) → CORE (dedup + MERGE)
@@ -31,6 +39,11 @@ final case class PipelineReport(
   * (merge_core.sql:12 etc.) is partition pruning, and the daily MERGE
   * rewrites exactly one partition — O(day), not O(history). At 100 TB that
   * partition discipline *is* the pipeline's scalability story.
+  *
+  * Every read names the date's partition dir, never a table root, so no
+  * read lists the history. The reference's V4/V5 `COUNT(*)`s, which
+  * Snowflake answers from micro-partition metadata, cost no Spark job here
+  * either: V4 rides the CORE write and V5 reads the committed footers.
   */
 final class EodPipeline(warehouse: String, minTickers: Long = 100L) {
 
@@ -48,32 +61,50 @@ final class EodPipeline(warehouse: String, minTickers: Long = 100L) {
   def dimDate(spark: SparkSession): DataFrame =
     VersionedTable.read(spark, dimDatePath)
 
-  private def readIfExists(spark: SparkSession, path: String,
-      schema: org.apache.spark.sql.types.StructType): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // a writer crash between snapshotWrite's two renames leaves `path` absent
-    // with its retired sibling complete — heal before deciding "empty"
-    Upsert.recoverSnapshot(fs, p)
-    if (fs.exists(p)) spark.read.schema(schema).parquet(path)
-    else spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-  }
+  /** One date's partition of a `trade_date`-partitioned table. Only the
+    * partition dir is listed, so the read costs O(day) however long the
+    * history; `basePath` keeps `trade_date` a column typed by `schema`.
+    */
+  private def readDay(spark: SparkSession, tablePath: String,
+      schema: StructType, tradeDate: String): DataFrame =
+    spark.read.schema(schema).option("basePath", tablePath)
+      .parquet(s"$tablePath/trade_date=$tradeDate")
 
   /** Single-date partition upsert: read only the affected partition, merge,
     * swap that partition's directory. The rest of the table is untouched
-    * (never read, never rewritten).
+    * (never read, never rewritten). The partition's rows, the rows of it the
+    * merge keeps and the rows written are observed on the write pass itself.
     */
   private def upsertDatePartition(spark: SparkSession, tablePath: String,
-      tradeDate: String, source: DataFrame, keys: Seq[String]): Unit = {
+      tradeDate: String, source: DataFrame, keys: Seq[String]): MergeCounts = {
     val partPath = s"$tablePath/trade_date=$tradeDate"
     val src = source.drop("trade_date")
-    val p = new org.apache.hadoop.fs.Path(partPath)
+    val p = new Path(partPath)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     Upsert.recoverSnapshot(fs, p) // heal a crash between a prior swap's renames
-    val merged =
-      if (!fs.exists(p)) src
-      else Upsert.merge(spark.read.schema(src.schema).parquet(partPath), src, keys)
-    Upsert.snapshotWrite(merged, partPath)
+    val rows = count(lit(1)).as("rows")
+    val written = Observation()
+    val observed = if (fs.exists(p)) Some((Observation(), Observation())) else None
+    val merged = observed.fold(src) { case (target, kept) =>
+      Upsert.survivors(
+          spark.read.schema(src.schema).parquet(partPath).observe(target, rows), src, keys)
+        .observe(kept, rows)
+        .unionByName(src)
+    }
+    Upsert.snapshotWrite(merged.observe(written, rows), partPath)
+    def n(o: Observation) = o.get("rows").asInstanceOf[Long]
+    val (target, kept) = observed.fold((0L, 0L)) { case (t, k) => (n(t), n(k)) }
+    MergeCounts(target, kept, n(written))
+  }
+
+  /** Rows committed in a partition dir, summed from its parquet footers:
+    * what a reader of the partition sees, read without a Spark job.
+    */
+  private def committedRows(spark: SparkSession, partPath: String): Long = {
+    val dir = new Path(partPath)
+    val parts = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .listStatus(dir).toSeq.map(_.getPath).filter(_.getName.startsWith("part-"))
+    GraftMeta.footerRows(spark, parts).sum
   }
 
   /** Stage 2-3 of the lifecycle: bronze CSV for one date → RAW append with
@@ -84,9 +115,9 @@ final class EodPipeline(warehouse: String, minTickers: Long = 100L) {
     * load published, and a crash before the move publishes nothing.
     */
   def loadRaw(spark: SparkSession, bronzeCsv: String, tradeDate: String): Long = {
-    val obs = org.apache.spark.sql.Observation(s"v1-gate-$tradeDate")
-    val part = new org.apache.hadoop.fs.Path(s"$rawPath/trade_date=$tradeDate")
-    val stage = new org.apache.hadoop.fs.Path(s"$rawPath/.trade_date=$tradeDate.stage")
+    val obs = Observation(s"v1-gate-$tradeDate")
+    val part = new Path(s"$rawPath/trade_date=$tradeDate")
+    val stage = new Path(s"$rawPath/.trade_date=$tradeDate.stage")
     val fs = part.getFileSystem(spark.sparkContext.hadoopConfiguration)
     EodSource.readBronzeCsv(spark, bronzeCsv)
       .drop("trade_date") // the partition dir carries it, as partitionBy would
@@ -101,7 +132,7 @@ final class EodPipeline(warehouse: String, minTickers: Long = 100L) {
     fs.mkdirs(part)
     fs.listStatus(stage).map(_.getPath).filter(_.getName.startsWith("part-"))
       .foreach { f =>
-        if (!fs.rename(f, new org.apache.hadoop.fs.Path(part, f.getName)))
+        if (!fs.rename(f, new Path(part, f.getName)))
           throw new java.io.IOException(s"RAW publish failed: $f -> $part")
       }
     fs.delete(stage, true)
@@ -114,7 +145,7 @@ final class EodPipeline(warehouse: String, minTickers: Long = 100L) {
     * (eod_data_downloader.py:134-136, get_securities_data.py:109-112).
     */
   private def hasData(spark: SparkSession, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
+    val p = new Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.exists(p) && Quality.nonEmpty(EodSource.readBronzeCsv(spark, path))
   }
@@ -181,34 +212,39 @@ final class EodPipeline(warehouse: String, minTickers: Long = 100L) {
       .option("header", "true").option("emptyValue", "").csv(bronzeStage)
     val dates = typed.select(col("trade_date").cast("string")).distinct()
       .collect().map(_.getString(0)).sorted // bounded: one row per trading day
-    val paths = dates.map(dt => dt -> s"$bronzeStage/pdate=$dt").toMap
-    runRange(spark, dates.toIndexedSeq)(paths.get)
+    // every date came from the fetched rows, so each staged file is
+    // non-empty: no V2 probe, just the causal replay
+    dates.toIndexedSeq.map(dt => runDate(spark, s"$bronzeStage/pdate=$dt", dt))
   }
 
   /** The full daily run (stages 4-8). `bronzeCsv` may contain duplicate rows
     * (FORCE=TRUE reload semantics) — W1 dedup keeps the latest by
     * (_ingest_ts, _src_file) exactly like merge_core.sql:13-16.
+    *
+    * A day issues only its necessary writes. Every RAW/CORE/FACT read names
+    * the date's partition dir, so no read lists the table's history. The V4
+    * forecast rides the single CORE write as observed counts, and the V5
+    * reconciliation sums the committed partitions' parquet footers — neither
+    * launches a Spark job of its own.
     */
   def runDate(spark: SparkSession, bronzeCsv: String, tradeDate: String): PipelineReport = {
     val rawRows = loadRaw(spark, bronzeCsv, tradeDate)
-    val d = to_date(lit(tradeDate))
 
-    // CORE: incremental slice of RAW → normalize → dedup-latest → MERGE.
-    val raw = spark.read.schema(Schemas.raw).parquet(rawPath)
-      .filter(col("trade_date") === d) // partition pruning at scale
+    // CORE: the date's RAW partition → normalize → dedup-latest → MERGE.
+    val raw = readDay(spark, rawPath, Schemas.raw, tradeDate)
       .withColumn("symbol", Normalize.normKey(col("symbol")))
     val deduped = Dedup.latestBy(raw,
       Seq(col("symbol"), col("trade_date")),
       Seq(col("_ingest_ts"), col("_src_file")))
-    val coreExisting = readIfExists(spark, corePath, Schemas.core)
-      .filter(col("trade_date") === d)
-    val premerge = Quality.premergeMetrics(
-      raw.select(col("symbol"), col("trade_date")),
-      coreExisting.select(col("symbol"), col("trade_date")),
-      Seq("symbol", "trade_date")).head()
     val coreBatch = Normalize.withLoadTs(deduped)
       .select(Schemas.core.fieldNames.map(col).toIndexedSeq: _*)
-    upsertDatePartition(spark, corePath, tradeDate, coreBatch, Seq("symbol"))
+    val merge = upsertDatePartition(spark, corePath, tradeDate, coreBatch, Seq("symbol"))
+    // V4 (premerge_metrics.sql) from the merge's own counts. Each CORE
+    // partition holds unique `symbol` keys, so every existing row the merge
+    // replaced is one matched key, and the batch's keys are the rows it
+    // wrote beyond the survivors.
+    val estUpdates = merge.target - merge.survivors
+    val keyRows = merge.written - merge.survivors
 
     // DIM_SECURITY ∥ DIM_DATE — key-disjoint insert-only merges. Dims are
     // whole-table snapshots with a single writer, so they use the
@@ -217,8 +253,7 @@ final class EodPipeline(warehouse: String, minTickers: Long = 100L) {
     // and readers never see a missing or partial dim even if this run dies
     // mid-write (the reference gets this from Snowflake's transactional
     // MERGE, merge_dim_security.sql / merge_dim_date.sql).
-    val core = spark.read.schema(Schemas.core).parquet(corePath)
-    val coreDay = core.filter(col("trade_date") === d)
+    val coreDay = readDay(spark, corePath, Schemas.core, tradeDate)
     val dimSec0 = VersionedTable.readOrEmpty(spark, dimSecurityPath, Schemas.dimSecurity)
     val newSyms = coreDay.select(col("symbol")).distinct()
       .join(dimSec0, Seq("symbol"), "left_anti")
@@ -243,16 +278,12 @@ final class EodPipeline(warehouse: String, minTickers: Long = 100L) {
       .select(Schemas.factDailyPrice.fieldNames.map(col).toIndexedSeq: _*)
     upsertDatePartition(spark, factPath, tradeDate, factBatch, Seq("security_id", "date_sk"))
 
-    // V5 reconciliation for the date.
-    val factDay = spark.read.schema(Schemas.factDailyPrice).parquet(factPath)
-      .filter(col("trade_date") === d)
-    val coreAfter = spark.read.schema(Schemas.core).parquet(corePath)
-      .filter(col("trade_date") === d)
-    val parity = Quality.postmergeParity(coreAfter, factDay).head()
+    // V5 reconciliation for the date (postmerge_metrics.sql), read back from
+    // the committed partitions' footers.
+    val coreRows = committedRows(spark, s"$corePath/trade_date=$tradeDate")
+    val factRows = committedRows(spark, s"$factPath/trade_date=$tradeDate")
 
-    PipelineReport(tradeDate, rawRows,
-      premerge.getAs[Long]("est_inserts"), premerge.getAs[Long]("est_updates"),
-      parity.getAs[Long]("core_rows"), parity.getAs[Long]("fact_rows"),
-      parity.getAs[Boolean]("row_parity"))
+    PipelineReport(tradeDate, rawRows, keyRows - estUpdates, estUpdates,
+      coreRows, factRows, coreRows == factRows)
   }
 }

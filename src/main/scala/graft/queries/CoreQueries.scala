@@ -174,8 +174,8 @@ object CoreQueries {
         |FROM c1, c2, c3""".stripMargin) { (s, dir) =>
       // fused single-scan form: both "slices" come from the same table, so
       // one pass + one shuffle replaces 4 scans + 3 shuffles (same contract
-      // as Quality.premergeMetrics, which the EOD pipeline uses across two
-      // distinct tables)
+      // as Quality.premergeMetrics, the two-table reference form that the
+      // EOD pipeline's observed V4 counts are checked against)
       val ev = Tables.load(s, dir, "events")
         .select(col("user_id"), Normalize.normKey(col("event_type")).as("et"), col("ts"))
       Quality.premergeMetricsFused(ev, Seq("user_id", "et"),

@@ -341,6 +341,19 @@ object GraftMeta {
     relax(schema).asInstanceOf[StructType]
   }
 
+  /** Each file's row count from its parquet footer: O(files) metadata
+    * reads, bounded-parallel, no Spark job and no data page opened.
+    */
+  def footerRows(spark: org.apache.spark.sql.SparkSession,
+      files: Seq[org.apache.hadoop.fs.Path]): Seq[Long] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    graft.ParallelActions.mapOrdered(files) { p =>
+      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf)
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+      try r.getRecordCount finally r.close()
+    }
+  }
+
   /** Table schema from ONE parquet footer, driver-side (round 18, guide
     * §1.2): the catalog used to derive every table's schema via
     * `spark.read.parquet(path).schema`, which builds a file index and

@@ -1,8 +1,11 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
+import graft.ops.{Normalize, Quality}
 import graft.pipeline.EodPipeline
+import graft.source.EodSource
 
 /** End-to-end daily lifecycle (SURVEY §3.1): two days + a FORCE-reload rerun
   * over reference-shaped bronze CSVs; star-schema invariants after each run.
@@ -157,5 +160,95 @@ class EodPipelineSpec extends AnyFunSuite {
     assert(raw === Array(("AAPL", 1.0), ("MSFT", 2.0)))
     assert(new java.io.File(pipe.rawPath).list().forall(!_.startsWith(".trade_date")),
       "the rejected batch's staging dir is removed")
+  }
+
+  test("V4/V5 differential: observed merge counts equal the COUNT(*) reference forms") {
+    val bronze = TestSpark.tmpDir("bronze5")
+    val wh = TestSpark.tmpDir("wh5")
+    val pipe = new EodPipeline(wh, minTickers = 1)
+    val date = "2026-08-10"
+    pipe.runDate(spark, writeCsv(bronze, date, Seq(
+      "2026-08-10,AAPL,189.5,191.2,188.9,190.4,51234567",
+      "2026-08-10,MSFT,421.1,425.0,419.8,424.3,18345678",
+      "2026-08-10,IBM,170.0,171.0,169.5,170.5,3456789")), date)
+
+    // FORCE reload: AAPL revised, GOOG new, MSFT twice under two spellings
+    val reload = new java.io.File(TestSpark.tmpDir("bronze5b"), s"eod_prices_$date.csv")
+    java.nio.file.Files.write(reload.toPath, java.util.Arrays.asList(
+      "trade_date,symbol,open,high,low,close,volume",
+      "2026-08-10,AAPL,189.5,191.2,188.9,192.0,51234567",
+      "2026-08-10,GOOG,141.0,143.5,140.2,142.9,9876543",
+      "2026-08-10,msft ,421.1,425.0,419.8,424.3,18345678",
+      "2026-08-10,MSFT,421.1,425.0,419.8,424.9,18345679"))
+
+    // V4 reference over the slices the reload merges: the date's RAW rows
+    // once the batch has landed, and its CORE rows before the merge
+    def keys(df: org.apache.spark.sql.DataFrame) =
+      df.select(Normalize.normKey($"symbol").as("symbol"), $"trade_date")
+    val rawSlice = keys(spark.read.parquet(pipe.rawPath).filter($"trade_date" === date))
+      .unionByName(keys(EodSource.readBronzeCsv(spark, reload.toString)))
+    val coreSlice = spark.read.parquet(pipe.corePath).filter($"trade_date" === date)
+      .select($"symbol", $"trade_date")
+    val pre = Quality.premergeMetrics(rawSlice, coreSlice, Seq("symbol", "trade_date")).head()
+
+    val r = pipe.runDate(spark, reload.toString, date)
+    val post = Quality.postmergeParity(
+      spark.read.parquet(pipe.corePath).filter($"trade_date" === date),
+      spark.read.parquet(pipe.factPath).filter($"trade_date" === date)).head()
+
+    assert(r.estInserts === pre.getAs[Long]("est_inserts"))
+    assert(r.estUpdates === pre.getAs[Long]("est_updates"))
+    assert((r.estInserts, r.estUpdates) === ((1L, 3L)),
+      "GOOG is new; AAPL, MSFT and IBM (from the date's first load) are matched keys")
+    assert(r.coreRows === post.getAs[Long]("core_rows"))
+    assert(r.factRows === post.getAs[Long]("fact_rows"))
+    assert(r.rowParity === post.getAs[Boolean]("row_parity"))
+    assert((r.coreRows, r.factRows, r.rowParity) === ((4L, 4L, true)))
+  }
+
+  test("O(day): past the listing threshold a day's run lists no table history") {
+    val threshold = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    val before = spark.conf.getOption(threshold)
+    val bronze = TestSpark.tmpDir("bronze6")
+    val pipe = new EodPipeline(TestSpark.tmpDir("wh6"), minTickers = 1)
+    val days = (10 to 13).map(d => f"2026-08-$d%02d")
+    val sc = spark.sparkContext
+    val descriptions = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        descriptions.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse(""))
+    }
+    // the bus is asynchronous and delivers in order: a marker job on each
+    // side of the 4th day brackets exactly that day's jobs
+    def marker(name: String): Unit = {
+      sc.setJobDescription(name)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+    }
+    spark.conf.set(threshold, "2")
+    sc.addSparkListener(listener)
+    try {
+      days.init.foreach(d => pipe.runDate(spark, writeCsv(bronze, d, Seq(
+        s"$d,AAPL,1,1,1,1,1", s"$d,MSFT,2,2,2,2,2")), d))
+      val last = writeCsv(bronze, days.last, Seq(
+        s"${days.last},AAPL,1,1,1,1,1", s"${days.last},MSFT,2,2,2,2,2"))
+      marker("listing-guard-begin")
+      pipe.runDate(spark, last, days.last)
+      marker("listing-guard-end")
+      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+      while (!descriptions.contains("listing-guard-end") && System.nanoTime() < deadline)
+        Thread.sleep(20)
+      import scala.jdk.CollectionConverters._
+      val day4 = descriptions.asScala.toSeq
+        .dropWhile(_ != "listing-guard-begin").drop(1).takeWhile(_ != "listing-guard-end")
+      assert(descriptions.contains("listing-guard-end"), "listener saw the closing marker")
+      assert(day4.nonEmpty, "the day's own jobs were seen")
+      assert(day4.filter(_.startsWith("Listing leaf files")).isEmpty,
+        "the 4th day listed its table history")
+      assert(new java.io.File(pipe.corePath).list().count(_.startsWith("trade_date=")) === 4)
+    } finally {
+      sc.removeSparkListener(listener)
+      before.fold(spark.conf.unset(threshold))(spark.conf.set(threshold, _))
+    }
   }
 }
