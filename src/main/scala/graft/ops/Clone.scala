@@ -35,14 +35,13 @@ object Clone {
       s"Clone.shallow: source $srcDir version $srcVersion is missing or incomplete")
     require(VersionedTable.currentVersion(spark, dstDir).isEmpty,
       s"Clone.shallow: destination $dstDir already exists")
-    val vd = VersionedTable.verDir(dstDir, 1L)
-    fs.mkdirs(vd)
-    val out = fs.create(new Path(vd, CloneSrcName), true)
-    try out.write(srcVd.toString.getBytes(StandardCharsets.UTF_8))
-    finally out.close()
-    fs.create(new Path(vd, "_SUCCESS"), true).close()
-    VersionedTable.stampCommitTs(fs, dstDir, 1L)
-    VersionedTable.flipPointer(fs, dstDir, 1L)
+    val next = VersionedTable.stageWith(spark, dstDir) { vd =>
+      val out = fs.create(new Path(vd, CloneSrcName), true)
+      try out.write(srcVd.toString.getBytes(StandardCharsets.UTF_8))
+      finally out.close()
+      fs.create(new Path(vd, "_SUCCESS"), true).close()
+    }
+    VersionedTable.publish(spark, dstDir, next)
   }
 
   /** The source version dir a cloned version references, if it is a

@@ -193,28 +193,24 @@ object ColumnMapping {
     val fs = fsOf(spark, dir)
     val cur = VersionedTable.currentVersion(spark, dir).getOrElse(
       sys.error(s"ColumnMapping($dir): no complete snapshot"))
-    VersionedTable.listVersions(fs, dir).filter(_ > cur)
-      .foreach(v => fs.delete(VersionedTable.verDir(dir, v), true))
-    val next = cur + 1L
-    val vd = VersionedTable.verDir(dir, next)
-    fs.mkdirs(vd)
-    writeManifest(fs, vd, fields, maxId)
-    // defaults carry forward across metadata commits, restricted to ids
-    // still in the manifest
-    val carried = (defaults(spark, dir, cur) ++ extraDefaults)
-      .filter { case (id, _) => fields.exists(_.id == id) }
-    if (carried.nonEmpty) {
-      val out = fs.create(new Path(vd, DefaultsName), true)
-      try out.write(carried.toSeq.sortBy(_._1)
-        .map { case (id, d) => s"$id=$d" }.mkString("\n")
+    val next = VersionedTable.stageWith(spark, dir) { vd =>
+      writeManifest(fs, vd, fields, maxId)
+      // defaults carry forward across metadata commits, restricted to ids
+      // still in the manifest
+      val carried = (defaults(spark, dir, cur) ++ extraDefaults)
+        .filter { case (id, _) => fields.exists(_.id == id) }
+      if (carried.nonEmpty) {
+        val out = fs.create(new Path(vd, DefaultsName), true)
+        try out.write(carried.toSeq.sortBy(_._1)
+          .map { case (id, d) => s"$id=$d" }.mkString("\n")
+          .getBytes(StandardCharsets.UTF_8)) finally out.close()
+      }
+      val out = fs.create(new Path(vd, DataFromName), true)
+      try out.write(dataVersion(spark, dir, cur).toString
         .getBytes(StandardCharsets.UTF_8)) finally out.close()
+      fs.create(new Path(vd, "_SUCCESS"), true).close()
     }
-    val out = fs.create(new Path(vd, DataFromName), true)
-    try out.write(dataVersion(spark, dir, cur).toString
-      .getBytes(StandardCharsets.UTF_8)) finally out.close()
-    fs.create(new Path(vd, "_SUCCESS"), true).close()
-    VersionedTable.stampCommitTs(fs, dir, next)
-    VersionedTable.flipPointer(fs, dir, next)
+    VersionedTable.publish(spark, dir, next)
     next
   }
 

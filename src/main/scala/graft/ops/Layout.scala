@@ -157,8 +157,8 @@ object Layout {
     * 100 TB: a daily OPTIMIZE touches the day's small-file tail (kilobytes
     * × thousands) and leaves the compacted history (terabytes) untouched —
     * [[compact]]'s whole-dir rewrite would re-encode the table every day.
-    * Same crash-safety as every commit: the pointer flips only after the
-    * staged version is complete.
+    * Same stage → publish commit as every write: the pointer flips only
+    * after the staged version is complete, and the txn map is carried.
     *
     * Returns (version, rewritten, carried); no new version when fewer than
     * two small files exist (nothing to pack).
@@ -173,25 +173,14 @@ object Layout {
       !st.getPath.getName.startsWith("_") && !st.getPath.getName.startsWith("."))
     val (small, big) = files.partition(_.getLen < smallBytes)
     if (small.size < 2) return (cur, 0, files.size)
-    VersionedTable.listVersions(fs, dir).filter(_ > cur)
-      .foreach(v => fs.delete(VersionedTable.verDir(dir, v), true))
-    val next = cur + 1L
-    val vd = VersionedTable.verDir(dir, next)
     val want = math.max(1,
       math.ceil(small.map(_.getLen).sum.toDouble / smallBytes).toInt)
-    spark.read.parquet(small.map(_.getPath.toString): _*).coalesce(want)
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(vd.toString)
-    // independent per-file carries — bounded-parallel, flat in file count
-    graft.ParallelActions.mapOrdered(big) { st =>
-      org.apache.hadoop.fs.FileUtil.copy(fs, st.getPath, fs,
-        new Path(vd, st.getPath.getName), false,
-        spark.sparkContext.hadoopConfiguration)
+    val next = VersionedTable.stageWith(spark, dir) { vd =>
+      spark.read.parquet(small.map(_.getPath.toString): _*).coalesce(want)
+        .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(vd.toString)
+      VersionedTable.carry(spark, big, vd)
     }
-    require(VersionedTable.complete(fs, vd),
-      s"binPackVersioned: staged $vd missing _SUCCESS")
-    VersionedTable.stampCommitTs(fs, dir, next)
-    VersionedTable.flipPointer(fs, dir, next)
-    spark.catalog.refreshByPath(vd.toString)
+    VersionedTable.publish(spark, dir, next)
     (next, small.size, big.size)
   }
 }

@@ -94,61 +94,46 @@ object PartitionEvolution {
     case Bucket(c, n) => pmod(hash(col(c)), lit(n))
   }
 
-  /** Commit a data version: write `df`'s files under `spec` into the staged
-    * dir's own epoch, chain to the previous data version, publish.
+  /** Stage the next version — `data` (if any) under the active spec in
+    * the version's own epoch dir, the spec list, the `_prev` chain link,
+    * `_SUCCESS` (the version dir has no committer of its own) — and
+    * publish it.
     */
-  private def commitData(df: DataFrame, dir: String, specs: Seq[Spec],
-      active: Int): Long = {
-    val spark = df.sparkSession
+  private def commit(spark: SparkSession, dir: String, data: Option[DataFrame],
+      specs: Seq[Spec], active: Int, prev: Option[Long]): Long = {
     val fs = fsOf(spark, dir)
-    val cur = VersionedTable.currentVersion(spark, dir)
-    VersionedTable.listVersions(fs, dir).filter(_ > cur.getOrElse(-1L))
-      .foreach(v => fs.delete(VersionedTable.verDir(dir, v), true))
-    val next = cur.getOrElse(0L) + 1L
-    val vd = VersionedTable.verDir(dir, next)
     val spec = specs.find(_.id == active).getOrElse(
       sys.error(s"PartitionEvolution($dir): active spec $active not declared"))
-    df.withColumn("p", pExpr(spec.t))
-      .write.mode(SaveMode.Overwrite).partitionBy("p")
-      .parquet(new Path(vd, DataName).toString)
-    writeSpecs(fs, vd, specs, active)
-    cur.foreach { v =>
-      val out = fs.create(new Path(vd, PrevName), true)
-      try out.write(v.toString.getBytes(StandardCharsets.UTF_8))
-      finally out.close()
+    val next = VersionedTable.stageWith(spark, dir) { vd =>
+      data.foreach(_.withColumn("p", pExpr(spec.t))
+        .write.mode(SaveMode.Overwrite).partitionBy("p")
+        .parquet(new Path(vd, DataName).toString))
+      writeSpecs(fs, vd, specs, active)
+      prev.foreach { v =>
+        val out = fs.create(new Path(vd, PrevName), true)
+        try out.write(v.toString.getBytes(StandardCharsets.UTF_8))
+        finally out.close()
+      }
+      fs.create(new Path(vd, "_SUCCESS"), true).close()
     }
-    fs.create(new Path(vd, "_SUCCESS"), true).close()
-    VersionedTable.stampCommitTs(fs, dir, next)
-    VersionedTable.flipPointer(fs, dir, next)
+    VersionedTable.publish(spark, dir, next)
     next
   }
 
   /** Bootstrap under the first spec. */
   def init(df: DataFrame, dir: String, t: Transform): Long =
-    commitData(df, dir, Seq(Spec(1, t)), 1)
+    commit(df.sparkSession, dir, Some(df), Seq(Spec(1, t)), 1,
+      VersionedTable.currentVersion(df.sparkSession, dir))
 
   /** Change the active spec — METADATA-ONLY: the new version holds the spec
     * list and the chain pointer, zero data bytes. Spec ids only grow.
     */
   def evolve(spark: SparkSession, dir: String, t: Transform): Long = {
-    val fs = fsOf(spark, dir)
     val cur = VersionedTable.currentVersion(spark, dir).getOrElse(
       sys.error(s"PartitionEvolution.evolve($dir): no complete snapshot"))
     val (specs, _) = specsOf(spark, dir, cur)
-    VersionedTable.listVersions(fs, dir).filter(_ > cur)
-      .foreach(v => fs.delete(VersionedTable.verDir(dir, v), true))
-    val next = cur + 1L
-    val vd = VersionedTable.verDir(dir, next)
-    fs.mkdirs(vd)
     val newSpec = Spec(specs.map(_.id).max + 1, t)
-    writeSpecs(fs, vd, specs :+ newSpec, newSpec.id)
-    val out = fs.create(new Path(vd, PrevName), true)
-    try out.write(cur.toString.getBytes(StandardCharsets.UTF_8))
-    finally out.close()
-    fs.create(new Path(vd, "_SUCCESS"), true).close()
-    VersionedTable.stampCommitTs(fs, dir, next)
-    VersionedTable.flipPointer(fs, dir, next)
-    next
+    commit(spark, dir, None, specs :+ newSpec, newSpec.id, Some(cur))
   }
 
   /** Append rows under the ACTIVE spec (new files only; older epochs are
@@ -158,7 +143,7 @@ object PartitionEvolution {
     val cur = VersionedTable.currentVersion(df.sparkSession, dir).getOrElse(
       sys.error(s"PartitionEvolution.append($dir): no complete snapshot"))
     val (specs, active) = specsOf(df.sparkSession, dir, cur)
-    commitData(df, dir, specs, active)
+    commit(df.sparkSession, dir, Some(df), specs, active, Some(cur))
   }
 
   /** The chain of data-bearing versions for `version`, oldest first, each

@@ -33,14 +33,12 @@ object PartitionOverwrite {
   /** Bootstrap the partitioned table (version 1). */
   def init(df: DataFrame, dir: String, partCol: String): Long = {
     val spark = df.sparkSession
-    val fs = fsOf(spark, dir)
-    val cur = VersionedTable.currentVersion(spark, dir)
-    require(cur.isEmpty, s"PartitionOverwrite.init($dir): table exists")
-    val vd = VersionedTable.verDir(dir, 1L)
-    df.write.mode(SaveMode.Overwrite).partitionBy(partCol).parquet(vd.toString)
-    VersionedTable.stampCommitTs(fs, dir, 1L)
-    VersionedTable.flipPointer(fs, dir, 1L)
-    1L
+    require(VersionedTable.currentVersion(spark, dir).isEmpty,
+      s"PartitionOverwrite.init($dir): table exists")
+    val next = VersionedTable.stageWith(spark, dir)(vd =>
+      df.write.mode(SaveMode.Overwrite).partitionBy(partCol).parquet(vd.toString))
+    VersionedTable.publish(spark, dir, next)
+    next
   }
 
   /** Replace exactly the partitions present in `df`; carry the rest.
@@ -61,11 +59,9 @@ object PartitionOverwrite {
     val incoming = df.select(col(partCol).cast("string")).distinct()
       .collect().map(_.getString(0)).toSet // bounded by the partition count
     val live = VersionedTable.verDir(dir, cur)
-    VersionedTable.listVersions(fs, dir).filter(_ > cur)
-      .foreach(v => fs.delete(VersionedTable.verDir(dir, v), true))
-    val next = cur + 1L
+    val next = VersionedTable.stageWith(spark, dir)(vd =>
+      df.write.mode(SaveMode.Overwrite).partitionBy(partCol).parquet(vd.toString))
     val vd = VersionedTable.verDir(dir, next)
-    df.write.mode(SaveMode.Overwrite).partitionBy(partCol).parquet(vd.toString)
     val replaced = fs.listStatus(vd).toSeq
       .filter(st => st.isDirectory && st.getPath.getName.startsWith(s"$partCol="))
       .map(_.getPath.getName)
@@ -76,17 +72,8 @@ object PartitionOverwrite {
     val carried = fs.listStatus(live).toSeq.filter(st => st.isDirectory &&
       st.getPath.getName.startsWith(s"$partCol=") &&
       !replaced.contains(st.getPath.getName))
-    // independent per-dir carries — bounded-parallel, flat in dir count
-    graft.ParallelActions.mapOrdered(carried) { st =>
-      org.apache.hadoop.fs.FileUtil.copy(fs, st.getPath, fs,
-        new Path(vd, st.getPath.getName), false,
-        spark.sparkContext.hadoopConfiguration)
-    }
-    require(VersionedTable.complete(fs, vd),
-      s"PartitionOverwrite: staged $vd missing _SUCCESS")
-    VersionedTable.stampCommitTs(fs, dir, next)
-    VersionedTable.flipPointer(fs, dir, next)
-    spark.catalog.refreshByPath(vd.toString)
+    VersionedTable.carry(spark, carried, vd)
+    VersionedTable.publish(spark, dir, next)
     (next, replaced.sorted, carried.size)
   }
 

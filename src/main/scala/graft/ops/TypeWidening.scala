@@ -102,19 +102,21 @@ object TypeWidening {
     finally out.close()
   }
 
-  private def sealCommit(spark: SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem, dir: String, next: Long): Unit = {
-    fs.create(new Path(VersionedTable.verDir(dir, next), "_SUCCESS"), true).close()
-    VersionedTable.stampCommitTs(fs, dir, next)
-    VersionedTable.flipPointer(fs, dir, next)
-  }
-
-  private def nextVersion(spark: SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem, dir: String): (Option[Long], Long) = {
-    val cur = VersionedTable.currentVersion(spark, dir)
-    VersionedTable.listVersions(fs, dir).filter(_ > cur.getOrElse(-1L))
-      .foreach(v => fs.delete(VersionedTable.verDir(dir, v), true))
-    (cur, cur.getOrElse(0L) + 1L)
+  /** Stage the next version with `data` (if any) stored under `data/`,
+    * the `types` manifest and the `_prev` chain link, plant `_SUCCESS`
+    * (the version dir has no committer of its own) and publish.
+    */
+  private def commit(spark: SparkSession, dir: String, data: Option[DataFrame],
+      types: Seq[(String, DataType)], prev: Option[Long]): Long = {
+    val fs = fsOf(spark, dir)
+    val next = VersionedTable.stageWith(spark, dir) { vd =>
+      data.foreach(_.write.mode(SaveMode.Overwrite).parquet(new Path(vd, DataName).toString))
+      writeTypes(fs, vd, types)
+      prev.foreach(writePrev(fs, vd, _))
+      fs.create(new Path(vd, "_SUCCESS"), true).close()
+    }
+    VersionedTable.publish(spark, dir, next)
+    next
   }
 
   /** Bootstrap: manifest = the frame's own schema.
@@ -131,18 +133,12 @@ object TypeWidening {
       s"TypeWidening.init($dir): this dir holds a branch-plane table " +
         "(_heads exists) — the epoch-chain layout does not compose with " +
         "the branch plane; keep the typed table on its own path")
-    val (_, next) = nextVersion(spark, fs, dir)
-    val vd = VersionedTable.verDir(dir, next)
-    df.write.mode(SaveMode.Overwrite).parquet(new Path(vd, DataName).toString)
-    writeTypes(fs, vd, df.schema.fields.toSeq.map(f => f.name -> f.dataType))
-    sealCommit(spark, fs, dir, next)
-    next
+    commit(spark, dir, Some(df), df.schema.fields.toSeq.map(f => f.name -> f.dataType), None)
   }
 
   /** ALTER COLUMN TYPE — metadata-only; only widening conversions land. */
   def widen(spark: SparkSession, dir: String, column: String,
       to: DataType): Long = {
-    val fs = fsOf(spark, dir)
     val cur = VersionedTable.currentVersion(spark, dir).getOrElse(
       sys.error(s"TypeWidening.widen($dir): no complete snapshot"))
     val types = typesOf(spark, dir, cur)
@@ -151,14 +147,8 @@ object TypeWidening {
     require(isWidening(from, to),
       s"TypeWidening.widen($dir): ${from.catalogString} -> ${to.catalogString} " +
         "is not a lossless widening — a narrowing would silently truncate history")
-    val (_, next) = nextVersion(spark, fs, dir)
-    val vd = VersionedTable.verDir(dir, next)
-    fs.mkdirs(vd)
-    writeTypes(fs, vd,
-      types.map { case (n, t) => if (n == column) n -> to else n -> t })
-    writePrev(fs, vd, cur)
-    sealCommit(spark, fs, dir, next)
-    next
+    commit(spark, dir, None,
+      types.map { case (n, t) => if (n == column) n -> to else n -> t }, Some(cur))
   }
 
   /** Append rows: new files only, stored AT the live manifest types (the
@@ -167,7 +157,6 @@ object TypeWidening {
     */
   def append(df: DataFrame, dir: String): Long = {
     val spark = df.sparkSession
-    val fs = fsOf(spark, dir)
     val cur = VersionedTable.currentVersion(spark, dir).getOrElse(
       sys.error(s"TypeWidening.append($dir): no complete snapshot — use init"))
     val types = typesOf(spark, dir, cur)
@@ -179,13 +168,7 @@ object TypeWidening {
           s"wider than the manifest ${t.catalogString} — widen the table first")
     }
     val stored = df.select(types.map { case (n, t) => col(n).cast(t).as(n) }: _*)
-    val (_, next) = nextVersion(spark, fs, dir)
-    val vd = VersionedTable.verDir(dir, next)
-    stored.write.mode(SaveMode.Overwrite).parquet(new Path(vd, DataName).toString)
-    writeTypes(fs, vd, types)
-    writePrev(fs, vd, cur)
-    sealCommit(spark, fs, dir, next)
-    next
+    commit(spark, dir, Some(stored), types, Some(cur))
   }
 
   /** Whole-snapshot REWRITE at the live manifest types (the commit shape
@@ -198,7 +181,6 @@ object TypeWidening {
     */
   def rewrite(df: DataFrame, dir: String): Long = {
     val spark = df.sparkSession
-    val fs = fsOf(spark, dir)
     val cur = VersionedTable.currentVersion(spark, dir).getOrElse(
       sys.error(s"TypeWidening.rewrite($dir): no complete snapshot"))
     val types = typesOf(spark, dir, cur)
@@ -215,12 +197,7 @@ object TypeWidening {
           s"wider than the manifest ${t.catalogString} — widen the table first")
     }
     val stored = df.select(types.map { case (n, t) => col(n).cast(t).as(n) }: _*)
-    val (_, next) = nextVersion(spark, fs, dir)
-    val vd = VersionedTable.verDir(dir, next)
-    stored.write.mode(SaveMode.Overwrite).parquet(new Path(vd, DataName).toString)
-    writeTypes(fs, vd, types)
-    sealCommit(spark, fs, dir, next)
-    next
+    commit(spark, dir, Some(stored), types, None)
   }
 
   /** The sidecars a STAGED rewrite dir needs before its OCC claim: the

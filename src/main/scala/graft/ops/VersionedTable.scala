@@ -19,12 +19,20 @@ import java.nio.charset.StandardCharsets
   *   dir/_v-00000041/    # previous version, kept until gc
   * }}}
   *
-  * Write protocol: stage the FULL new snapshot to `_v-(N+1)` (the parquet
-  * committer plants `_SUCCESS` last), then flip `_ptr`. A crash before the
-  * flip leaves a dangling higher version that the next write sweeps; a crash
-  * during the flip is covered by the reader fallback (highest version with
-  * `_SUCCESS`). Readers resolve the pointer and read ONE immutable dir —
-  * concurrent with any number of writes.
+  * Write protocol: [[stage]] → [[publish]] is the single path by which a
+  * single writer creates a version. Staging ([[stageWith]]) sweeps dangling
+  * versions above the live one and fills the FULL new snapshot into
+  * `_v-(N+1)` (the parquet committer plants `_SUCCESS` last); publishing
+  * checks `_SUCCESS` and the successor, carries the txn map, stamps the
+  * commit time and flips `_ptr`. Sidecar writers (Constraints, Protocol,
+  * RowTracking, ColumnMapping, TypeWidening, PartitionEvolution, Clone)
+  * fill the staged dir with their own files — metadata-only commits plant
+  * `_SUCCESS` themselves — and publish the same way. A crash before the
+  * flip leaves a dangling higher version that the next stage sweeps; a
+  * crash during the flip is covered by the reader fallback (highest version
+  * with `_SUCCESS`). Readers resolve the pointer and read ONE immutable dir
+  * — concurrent with any number of writes. (Occ's concurrent claim protocol
+  * rolls its claimed versions forward on its own.)
   *
   * Single-writer by design (the daily pipeline's dims/snapshots have exactly
   * one writer); concurrent writers would race the pointer and need a
@@ -226,10 +234,10 @@ object VersionedTable {
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
     }
 
-  /** Write `df` as the next version and flip the pointer. Returns the new
-    * version number. The input may lazily read THIS table's live version —
-    * that dir is immutable and survives until [[gc]], so the
-    * read-merge-write cycle needs no localCheckpoint.
+  /** Write `df` as the next version and flip the pointer: [[stage]] then
+    * [[publish]]. Returns the new version number. The input may lazily
+    * read THIS table's live version — that dir is immutable and survives
+    * until [[gc]], so the read-merge-write cycle needs no localCheckpoint.
     *
     * `statsCols` additionally builds the [[DataSkipping]] per-file min/max
     * index inside the staged version dir (before the flip, so a version is
@@ -239,32 +247,8 @@ object VersionedTable {
     */
   def write(df: DataFrame, dir: String, txn: Map[String, Long] = Map.empty,
       statsCols: Seq[String] = Nil): Long = {
-    val spark = df.sparkSession
-    val fs = fsOf(spark, dir)
-    val cur = currentVersion(spark, dir)
-    // sweep dangling versions above the pointer — crashed writes that never
-    // flipped (or half-written stage dirs without _SUCCESS)
-    listVersions(fs, dir).filter(v => v > cur.getOrElse(-1L))
-      .foreach(v => fs.delete(verDir(dir, v), true))
-    val next = cur.getOrElse(0L) + 1L
-    val vd = verDir(dir, next)
-    df.write.mode(SaveMode.Overwrite).parquet(vd.toString)
-    require(complete(fs, vd), s"stage $vd missing _SUCCESS after write")
-    if (statsCols.nonEmpty) DataSkipping.writeStats(spark, vd.toString, statsCols)
-    // transaction markers: carry the live version's map forward (so gc of
-    // old versions never loses the last-applied batchId) and overlay this
-    // write's own txn. Written BEFORE the flip: a version reachable via the
-    // mid-flip reader fallback always carries its full txn map, and a crash
-    // right here leaves the pointer intact (this dangling dir is swept by
-    // the next write, whose re-applied batch is then the FIRST application).
-    val carried = cur.map(v => readTxnMap(fs, verDir(dir, v))).getOrElse(Map.empty)
-    (carried ++ txn).foreach { case (app, batch) =>
-      val out = fs.create(new Path(vd, TxnPrefix + app), true)
-      try out.write(batch.toString.getBytes(StandardCharsets.UTF_8)) finally out.close()
-    }
-    stampCommitTs(fs, dir, next)
-    flipPointer(fs, dir, next)
-    spark.catalog.refreshByPath(vd.toString)
+    val next = stage(df, dir, statsCols)
+    publish(df.sparkSession, dir, next, txn)
     next
   }
 
@@ -291,27 +275,44 @@ object VersionedTable {
     * needs no cleanup transaction. This is Iceberg's WAP pattern on the
     * same pointer protocol the normal write uses.
     */
-  def stage(df: DataFrame, dir: String, statsCols: Seq[String] = Nil): Long = {
-    val spark = df.sparkSession
+  def stage(df: DataFrame, dir: String, statsCols: Seq[String] = Nil): Long =
+    stageWith(df.sparkSession, dir) { vd =>
+      df.write.mode(SaveMode.Overwrite).parquet(vd.toString)
+      if (statsCols.nonEmpty) DataSkipping.writeStats(df.sparkSession, vd.toString, statsCols)
+    }
+
+  /** The one staging primitive every single-writer commit shares: sweep
+    * the dangling versions above the live one (crashed writes that never
+    * flipped, or half-written stage dirs without `_SUCCESS`), allocate the
+    * next version and let `fill` populate its dir. Data commits fill it
+    * through a parquet committer (which plants `_SUCCESS` last);
+    * metadata-only commits write their sidecars and plant `_SUCCESS`
+    * themselves. Nothing is live until [[publish]].
+    */
+  private[ops] def stageWith(spark: SparkSession, dir: String)(fill: Path => Unit): Long = {
     val fs = fsOf(spark, dir)
     val cur = currentVersion(spark, dir)
-    listVersions(fs, dir).filter(v => v > cur.getOrElse(-1L))
+    listVersions(fs, dir).filter(_ > cur.getOrElse(-1L))
       .foreach(v => fs.delete(verDir(dir, v), true))
     val next = cur.getOrElse(0L) + 1L
-    val vd = verDir(dir, next)
-    df.write.mode(SaveMode.Overwrite).parquet(vd.toString)
-    require(complete(fs, vd), s"stage $vd missing _SUCCESS after write")
-    if (statsCols.nonEmpty) DataSkipping.writeStats(spark, vd.toString, statsCols)
+    fill(verDir(dir, next))
     next
   }
 
   /** The staged (not yet live) version's data dir, for audit reads. */
   def stagedDir(dir: String, version: Long): String = verDir(dir, version).toString
 
-  /** Publish a staged version: carry the live txn map forward (overlaid
-    * with `txn`, written BEFORE the flip — same ordering contract as
-    * [[write]]), then flip. Fails fast if the staged snapshot is
-    * missing/incomplete or is not the next version after the live one.
+  /** Publish a staged version — the one place a single writer's version
+    * goes live. Fails fast if the staged snapshot is missing/incomplete or
+    * is not the next version after the live one. Then, all BEFORE the
+    * flip: carry the live version's txn map forward overlaid with `txn`
+    * (so every commit — compaction, partition overwrite and metadata-only
+    * ones included — keeps the last-applied batchIds, and gc of old
+    * versions never loses them), and stamp the commit time. A version
+    * reachable via the mid-flip reader fallback therefore always carries
+    * its full txn map and stamp, and a crash before the flip leaves the
+    * pointer intact (the dangling dir is swept by the next stage, whose
+    * re-applied batch is then the FIRST application).
     */
   def publish(spark: SparkSession, dir: String, version: Long,
       txn: Map[String, Long] = Map.empty): Unit = {
@@ -348,6 +349,20 @@ object VersionedTable {
     fsOf(spark, dir).delete(verDir(dir, version), true)
   }
 
+  /** Copy `files` into the staged version dir `vd` as raw bytes — the
+    * carry of untouched files (or partition dirs) that compaction, range
+    * delete and partition overwrite share. The copies are independent, so
+    * they run bounded-parallel, flat in the file count.
+    */
+  private[ops] def carry(spark: SparkSession, files: Seq[org.apache.hadoop.fs.FileStatus],
+      vd: Path): Unit = {
+    val fs = fsOf(spark, vd.toString)
+    graft.ParallelActions.mapOrdered(files) { st =>
+      org.apache.hadoop.fs.FileUtil.copy(fs, st.getPath, fs,
+        new Path(vd, st.getPath.getName), false, spark.sparkContext.hadoopConfiguration)
+    }
+  }
+
   /** Surgical range delete — the compliance-delete shape at 100 TB: remove
     * every row with `c` in `[lo, hi]` WITHOUT rewriting the table. The
     * stats index locates the files whose [min, max] can intersect the band
@@ -374,39 +389,24 @@ object VersionedTable {
     val live = verDir(dir, cur)
     val (affected, total) = DataSkipping.selectFiles(spark, live.toString, c, lo, hi)
     if (affected.isEmpty) return (cur, 0, total.toInt) // provably nothing to delete
-    listVersions(fs, dir).filter(_ > cur).foreach(v => fs.delete(verDir(dir, v), true))
-    val next = cur + 1L
-    val vd = verDir(dir, next)
     val affectedNames = affected.map(p => new Path(p).getName).toSet
-    // rewrite ONLY the affected files (their committer plants _SUCCESS)
-    spark.read.parquet(affected.toIndexedSeq: _*)
-      .filter(col(c).isNull || col(c) < lo || col(c) > hi)
-      .write.mode(SaveMode.Overwrite).parquet(vd.toString)
-    // carry the untouched files in as raw byte copies — bounded-parallel:
-    // the carries are independent, and at 100 TB the carry set is nearly
-    // the whole table (a surgical delete rewrites a handful of band files)
-    val carrySrc = fs.listStatus(live)
-      .filter(st => st.isFile && !st.getPath.getName.startsWith("_") &&
-        !st.getPath.getName.startsWith(".") && !affectedNames(st.getPath.getName))
-      .toSeq
-    graft.ParallelActions.mapOrdered(carrySrc) { st =>
-      org.apache.hadoop.fs.FileUtil.copy(fs, st.getPath, fs,
-        new Path(vd, st.getPath.getName), false,
-        spark.sparkContext.hadoopConfiguration)
+    val next = stageWith(spark, dir) { vd =>
+      // rewrite ONLY the affected files (their committer plants _SUCCESS)
+      spark.read.parquet(affected.toIndexedSeq: _*)
+        .filter(col(c).isNull || col(c) < lo || col(c) > hi)
+        .write.mode(SaveMode.Overwrite).parquet(vd.toString)
+      // carry the untouched files in as raw byte copies: at 100 TB the carry
+      // set is nearly the whole table (a surgical delete rewrites a handful
+      // of band files)
+      carry(spark, fs.listStatus(live).toSeq
+        .filter(st => st.isFile && !st.getPath.getName.startsWith("_") &&
+          !st.getPath.getName.startsWith(".") && !affectedNames(st.getPath.getName)), vd)
+      if (statsCols.nonEmpty) DataSkipping.writeStats(spark, vd.toString, statsCols)
     }
-    require(complete(fs, vd), s"stage $vd missing _SUCCESS after delete rewrite")
-    if (statsCols.nonEmpty) DataSkipping.writeStats(spark, vd.toString, statsCols)
-    // txn carry (same rule as write: a live version always has its map)
-    readTxnMap(fs, live).foreach { case (app, batch) =>
-      val out = fs.create(new Path(vd, TxnPrefix + app), true)
-      try out.write(batch.toString.getBytes(StandardCharsets.UTF_8)) finally out.close()
-    }
-    // stamped like every other commit path: without this, readAsOf for any
-    // instant after the delete would resolve to the PRE-delete snapshot and
-    // resurrect the compliance-deleted rows
-    stampCommitTs(fs, dir, next)
-    flipPointer(fs, dir, next)
-    spark.catalog.refreshByPath(vd.toString)
+    // published like every other commit: the txn map is carried, and the
+    // stamp keeps readAsOf for any instant after the delete from resolving
+    // to the PRE-delete snapshot and resurrecting the deleted rows
+    publish(spark, dir, next)
     (next, affected.length, total.toInt)
   }
 

@@ -75,4 +75,25 @@ class TypeWideningSpec extends AnyFunSuite {
     assert(!TW.isWidening(DecimalType(10, 2), DecimalType(10, 3)))
     assert(!TW.isWidening(StringType, LongType))
   }
+
+  test("a metadata-only commit killed before the flip: old manifest stays live, next commit sweeps it") {
+    val dir = TestSpark.tmpDir("tw5") + "/t"
+    TW.init(Seq((1, "a")).toDF("k", "v"), dir)
+    TW.widen(spark, dir, "k", LongType)
+    // crash instant: the widen's version is staged, sealed and stamped
+    // (_types, _prev, _SUCCESS, _commit_ts) but the pointer never flipped
+    // off version 1 — the JVM died inside publish, right before the flip
+    val out = fs(dir).create(new Path(dir, "_ptr"), true)
+    out.write("00000001".getBytes("UTF-8")); out.close()
+    assert(VersionedTable.currentVersion(spark, dir) === Some(1L))
+    assert(TW.read(spark, dir).schema("k").dataType === IntegerType,
+      "readers keep the pre-widen manifest")
+    // the next commit sweeps the dangling widen and lands in its slot,
+    // under the live (int) manifest
+    assert(TW.append(Seq((2, "b")).toDF("k", "v"), dir) === 2L)
+    assert(TW.typesOf(spark, dir, 2L) === Seq("k" -> IntegerType, "v" -> StringType))
+    assert(TW.epochSchema(spark, dir, 2L)("k").dataType === IntegerType)
+    assert(TW.read(spark, dir).orderBy("k").as[(Int, String)].collect()
+      === Array((1, "a"), (2, "b")))
+  }
 }

@@ -118,11 +118,32 @@ class VersionedTableSpec extends AnyFunSuite {
     VersionedTable.gc(spark, dir, keep = 1)
     assert(VersionedTable.lastBatchId(spark, dir, "app") === Some(1L))
     assert(VersionedTable.writeCommitted(Seq((9L, "dup")).toDF("k", "v"), dir, "app", 1L).isEmpty)
+    // an OPTIMIZE is a plain commit too: bin-packing a two-small-file
+    // version must carry the map, or batch 1 would be applied again
+    VersionedTable.write(spark.range(3, 5, 1, numPartitions = 2)
+      .selectExpr("id AS k", "'x' AS v"), dir)
+    val (packed, rewritten, _) = graft.ops.Layout.binPackVersioned(spark, dir, 1L << 20)
+    assert(rewritten === 2 && VersionedTable.currentVersion(spark, dir) === Some(packed))
+    assert(VersionedTable.lastBatchId(spark, dir, "app") === Some(1L))
+    assert(VersionedTable.writeCommitted(Seq((9L, "dup")).toDF("k", "v"), dir, "app", 1L).isEmpty)
     assert(VersionedTable.writeCommitted(Seq((4L, "c")).toDF("k", "v"), dir, "app", 2L)
-      === Some(4L))
+      === Some(packed + 1))
     // per-app isolation: another app's batch 0 is fresh
     assert(VersionedTable.writeCommitted(Seq((5L, "d")).toDF("k", "v"), dir, "other", 0L)
-      === Some(5L))
+      === Some(packed + 2))
+    // a dynamic partition overwrite on a partitioned table the app commits
+    // to (its batch 0 published with the txn, as writeCommitted does) keeps
+    // the app's record the same way
+    val pdir = TestSpark.tmpDir("vt7p") + "/t"
+    Seq((1L, "a", 0), (2L, "b", 1)).toDF("k", "v", "p")
+      .write.partitionBy("p").parquet(VersionedTable.stagedDir(pdir, 1L))
+    VersionedTable.publish(spark, pdir, 1L, Map("app" -> 0L))
+    val (pv, replaced, carried) = graft.ops.PartitionOverwrite.overwrite(
+      Seq((3L, "c", 1)).toDF("k", "v", "p"), pdir, "p")
+    assert(pv === 2L && replaced === Seq("p=1") && carried === 1)
+    assert(VersionedTable.lastBatchId(spark, pdir, "app") === Some(0L))
+    assert(VersionedTable.writeCommitted(
+      Seq((9L, "dup", 0)).toDF("k", "v", "p"), pdir, "app", 0L).isEmpty)
   }
 
   test("writeCommitted: crash after staging (txn written, pointer unflipped) re-applies ONCE") {
@@ -395,5 +416,31 @@ class VersionedTableSpec extends AnyFunSuite {
     val ts = (1L to 5L).map(v => VersionedTable.commitTimestamp(spark, dir, v).get)
     assert(ts === ts.sorted && ts.distinct.length === ts.length,
       s"stamps must strictly increase with version: $ts")
+  }
+
+  test("publish and Occ.finalizePending are the only flip/stamp sites; stageWith the only sweep") {
+    import scala.jdk.CollectionConverters._
+    import java.nio.file.{Files, Paths}
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"run from the repository root (cwd ${sys.props("user.dir")})")
+    val sources = {
+      val walk = Files.walk(root)
+      try walk.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
+      finally walk.close()
+    }
+    val Def = """.*\bdef\s+(\w+).*""".r
+    // (file, enclosing def) of every line matching `call` outside its own definition
+    def sitesOf(call: String): Seq[String] = sources.flatMap { p =>
+      var enclosing = ""
+      Files.readAllLines(p).asScala.toList.flatMap { line =>
+        line match { case Def(name) => enclosing = name; case _ => }
+        if (line.matches(s".*$call.*") && !line.matches(s".*\\bdef\\s+$call.*"))
+          Some(s"${p.getFileName}:$enclosing")
+        else None
+      }
+    }.distinct.sorted
+    assert(sitesOf("""flipPointer\(""") === Seq("Occ.scala:finalizePending", "VersionedTable.scala:publish"))
+    assert(sitesOf("""stampCommitTs\(""") === Seq("Occ.scala:finalizePending", "VersionedTable.scala:publish"))
+    assert(sitesOf("""listVersions\(fs, dir\)\.filter\(_ > """) === Seq("VersionedTable.scala:stageWith"))
   }
 }
