@@ -1,6 +1,8 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.apache.spark.sql.functions._
 
 /** Calendar-dimension derivation (SURVEY §2.3 D1-D10).
@@ -29,6 +31,16 @@ object DateDim {
     (dayofweek(d) - 1).as("day_of_week"),                 // D8 (Sunday=0)
     weekofyear(d).as("week_of_year"),                     // D9
     dayofweek(d).isin(1, 7).as("is_weekend"))             // D10
+
+  /** The DIM_DATE row of one `yyyy-MM-dd` date: [[columns]] over a one-row
+    * local relation, which the optimizer folds into a local result, so it
+    * is evaluated on the driver with no Spark job.
+    */
+  def localRow(spark: SparkSession, date: String): InternalRow =
+    spark.createDataFrame(java.util.List.of(Row(date)),
+        StructType(Seq(StructField("d", StringType))))
+      .select(columns(to_date(col("d"))): _*)
+      .queryExecution.executedPlan.executeCollect().head
 
   /** DIM_DATE rows for the distinct dates found in `df(dateCol)`.
     * The `distinct()` is the only shuffle; its input is projected to one

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Surrogate-key assignment (SURVEY §1.3 / §7.3 hard part 2).
   *
@@ -41,6 +42,15 @@ object SurrogateKeys {
     }
     spark.createDataFrame(rows, schema)
   }
+
+  /** [[assign]] for a delta of single-string natural keys already held on
+    * the driver: the same dense ids above `existingMax`, in the same order —
+    * Spark's binary UTF-8 string order, which differs from Java's UTF-16
+    * `String` order for characters above U+FFFF. No Spark job.
+    */
+  def assignLocal(keys: Iterable[UTF8String], existingMax: Long): Seq[(Long, UTF8String)] =
+    keys.toSeq.sortWith(_.binaryCompare(_) < 0).zipWithIndex
+      .map { case (k, i) => (existingMax + i + 1L, k) }
 
   /** Current max key of a dimension (0 for an empty one). */
   def maxKey(dim: DataFrame, keyCol: String): Long = {

@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.hadoop.fs.Path
 
@@ -29,12 +30,30 @@ object Upsert {
     * otherwise. Column set is taken from the target.
     */
   def merge(target: DataFrame, source: DataFrame, keys: Seq[String]): DataFrame =
-    survivors(target, source, keys)
+    target.join(source.select(keys.map(col): _*).distinct(), keys, "left_anti")
       .unionByName(source.select(target.columns.map(col).toIndexedSeq: _*))
 
-  /** The target rows an upsert keeps: those whose key the source lacks. */
-  def survivors(target: DataFrame, source: DataFrame, keys: Seq[String]): DataFrame =
-    target.join(source.select(keys.map(col): _*).distinct(), keys, "left_anti")
+  /** [[merge]]'s rows computed by ONE window over target ∪ source instead
+    * of an anti join: every source row, plus each target row whose key no
+    * source row shares (a NULL key matches nothing, as in the anti join).
+    * The kept target rows carry `true` in the added boolean column
+    * `fromTarget`, so a caller can observe the survivors on its write pass
+    * and drop the column. The plan has a single hash exchange on the keys,
+    * where the anti join plans a distinct, a join and their exchanges — on
+    * a small daily partition each of those is a Spark job of fixed cost.
+    * The target is shuffled too, so this suits a target of one partition's
+    * size (the pipeline's daily partition), not a TB-sized table.
+    */
+  def mergeMarked(target: DataFrame, source: DataFrame, keys: Seq[String],
+      fromTarget: String): DataFrame = {
+    val allTarget = "__all_target"
+    target.withColumn(fromTarget, lit(true))
+      .unionByName(source.select(target.columns.map(col).toIndexedSeq: _*)
+        .withColumn(fromTarget, lit(false)))
+      .withColumn(allTarget, min(col(fromTarget)).over(Window.partitionBy(keys.map(col): _*)))
+      .filter(!col(fromTarget) || col(allTarget) || keys.map(col(_).isNull).reduce(_ || _))
+      .drop(allTarget)
+  }
 
   /** Insert-only merge (WHEN NOT MATCHED THEN INSERT): append source rows whose
     * key is absent from the target (merge_dim_security.sql:5-14).

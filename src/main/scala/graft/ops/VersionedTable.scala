@@ -1,8 +1,11 @@
 package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.types.StructType
 import org.apache.hadoop.fs.{FileSystem, Path}
 import java.nio.charset.StandardCharsets
+import graft.source.{GraftMeta, GroupWrite}
 
 /** Versioned whole-table snapshots with an atomic pointer flip — the
   * durability pattern the reference gets for free from Snowflake's
@@ -26,8 +29,9 @@ import java.nio.charset.StandardCharsets
   * checks `_SUCCESS` and the successor, carries the txn map, stamps the
   * commit time and flips `_ptr`. Sidecar writers (Constraints, Protocol,
   * RowTracking, ColumnMapping, TypeWidening, PartitionEvolution, Clone)
-  * fill the staged dir with their own files — metadata-only commits plant
-  * `_SUCCESS` themselves — and publish the same way. A crash before the
+  * fill the staged dir with their own files — metadata-only commits, and
+  * [[writeRows]]' single driver-written file, plant `_SUCCESS` themselves —
+  * and publish the same way. A crash before the
   * flip leaves a dangling higher version that the next stage sweeps; a
   * crash during the flip is covered by the reader fallback (highest version
   * with `_SUCCESS`). Readers resolve the pointer and read ONE immutable dir
@@ -217,22 +221,53 @@ object VersionedTable {
     * referencing the old ones. Such tables need a one-time import:
     * `write(spark.read.parquet(dir_moved_aside), dir)`.
     */
-  def readOrEmpty(spark: SparkSession, dir: String,
-      schema: org.apache.spark.sql.types.StructType): DataFrame =
-    currentVersion(spark, dir) match {
-      case Some(v) => spark.read.schema(schema).parquet(verDir(dir, v).toString)
-      case None =>
-        val fs = fsOf(spark, dir)
-        val d = new Path(dir)
-        val bare = fs.exists(d) && fs.listStatus(d).exists(st =>
-          st.isFile && !st.getPath.getName.startsWith("_") &&
-            !st.getPath.getName.startsWith("."))
-        require(!bare, s"VersionedTable.readOrEmpty($dir): dir holds bare data " +
-          "files (pre-versioned layout?) — import them as version 1 instead of " +
-          "silently starting empty")
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+  def readOrEmpty(spark: SparkSession, dir: String, schema: StructType): DataFrame =
+    liveOrNone(spark, dir) match {
+      case Some(vd) => spark.read.schema(schema).parquet(vd.toString)
+      case None => spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
     }
+
+  /** The live version dir, or None for a table that does not exist yet —
+    * refusing a dir that holds bare (pre-versioned) data files, see
+    * [[readOrEmpty]].
+    */
+  private def liveOrNone(spark: SparkSession, dir: String): Option[Path] =
+    currentVersion(spark, dir).map(verDir(dir, _)).orElse {
+      require(GraftMeta.dataFiles(fsOf(spark, dir), new Path(dir)).isEmpty,
+        s"VersionedTable($dir): dir holds bare data files " +
+          "(pre-versioned layout?) — import them as version 1 instead of " +
+          "silently starting empty")
+      None
+    }
+
+  /** [[readOrEmpty]] decoded on the driver: the live snapshot's rows,
+    * resolved by name into `schema`, with no Spark job. For a snapshot
+    * small enough to be held on the driver (a dimension the pipeline
+    * broadcasts anyway); empty when the table does not exist yet.
+    */
+  def readRows(spark: SparkSession, dir: String, schema: StructType): Seq[InternalRow] =
+    liveOrNone(spark, dir).fold(Seq.empty[InternalRow]) { vd =>
+      GraftMeta.readRows(spark, GraftMeta.dataFiles(fsOf(spark, dir), vd).map(_.getPath), schema)
+    }
+
+  /** Commit `rows` as the next version, written on the driver as ONE
+    * parquet file through [[GroupWrite]]'s type mapping, then published
+    * like every commit ([[stageWith]] → [[publish]]). For a small
+    * single-writer snapshot whose full content is already on the driver:
+    * no Spark job, and the live version is one file however many commits
+    * came before. Returns the new version.
+    */
+  def writeRows(spark: SparkSession, dir: String, schema: StructType,
+      rows: Seq[InternalRow]): Long = {
+    val next = stageWith(spark, dir) { vd =>
+      GroupWrite.writeFile(spark.sparkContext.hadoopConfiguration,
+        new Path(vd, "part-00000.parquet"), schema, rows)
+      fsOf(spark, dir).create(new Path(vd, "_SUCCESS"), true).close()
+    }
+    publish(spark, dir, next)
+    next
+  }
 
   /** Write `df` as the next version and flip the pointer: [[stage]] then
     * [[publish]]. Returns the new version number. The input may lazily
@@ -398,9 +433,8 @@ object VersionedTable {
       // carry the untouched files in as raw byte copies: at 100 TB the carry
       // set is nearly the whole table (a surgical delete rewrites a handful
       // of band files)
-      carry(spark, fs.listStatus(live).toSeq
-        .filter(st => st.isFile && !st.getPath.getName.startsWith("_") &&
-          !st.getPath.getName.startsWith(".") && !affectedNames(st.getPath.getName)), vd)
+      carry(spark, GraftMeta.dataFiles(fs, live)
+        .filterNot(st => affectedNames(st.getPath.getName)), vd)
       if (statsCols.nonEmpty) DataSkipping.writeStats(spark, vd.toString, statsCols)
     }
     // published like every other commit: the txn map is carried, and the

@@ -2,8 +2,10 @@ package graft.pipeline
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
+import org.apache.spark.unsafe.types.UTF8String
 import graft.model.Schemas
 import graft.ops._
 import graft.source.{EodSource, GraftMeta}
@@ -21,18 +23,20 @@ final case class PipelineReport(
     factRows: Long,
     rowParity: Boolean)
 
-/** Row counts one partition upsert observed on its write pass: the
-  * partition before the merge (`target`), the rows of it the merge kept
-  * (`survivors`) and the rows written.
+/** What one partition upsert observed on its write pass: the partition's
+  * rows before the merge (`target`), the rows of it the merge kept
+  * (`survivors`), the rows written and, when asked for, the distinct values
+  * of one column over the written rows (`keySet`).
   */
-private final case class MergeCounts(target: Long, survivors: Long, written: Long)
+private final case class MergeCounts(target: Long, survivors: Long, written: Long,
+    keySet: Seq[String])
 
 /** The daily ELT lifecycle of the reference
   * (`polygon_modern_elt_v2`, dags/get_securities_data.py:71-233) as one Spark
   * driver program: bronze CSV → RAW (append, lineage) → CORE (dedup + MERGE)
-  * → DIM_SECURITY ∥ DIM_DATE (insert-only MERGEs, key-disjoint — planned as
-  * two independent writes exactly like the reference's parallel fan-out) →
-  * FACT (dims join + MERGE) → reconciliation metrics.
+  * → DIM_SECURITY ∥ DIM_DATE (insert-only MERGEs of a few rows a day,
+  * key-disjoint, computed on the driver) → FACT (dims join + MERGE) →
+  * reconciliation metrics.
   *
   * Storage layout: warehouse-rooted parquet, RAW/CORE/FACT hive-partitioned
   * by `trade_date` so the reference's ubiquitous date-equality predicate
@@ -43,7 +47,10 @@ private final case class MergeCounts(target: Long, survivors: Long, written: Lon
   * Every read names the date's partition dir, never a table root, so no
   * read lists the history. The reference's V4/V5 `COUNT(*)`s, which
   * Snowflake answers from micro-partition metadata, cost no Spark job here
-  * either: V4 rides the CORE write and V5 reads the committed footers.
+  * either: V4 rides the CORE write and V5 reads the committed footers. The
+  * dims cost none at all: the day's symbol set rides the CORE write too,
+  * both dims are read, extended and (only when a delta exists) committed on
+  * the driver, so a steady day is the RAW, CORE and FACT writes alone.
   */
 final class EodPipeline(warehouse: String, minTickers: Long = 100L) {
 
@@ -70,31 +77,36 @@ final class EodPipeline(warehouse: String, minTickers: Long = 100L) {
     spark.read.schema(schema).option("basePath", tablePath)
       .parquet(s"$tablePath/trade_date=$tradeDate")
 
-  /** Single-date partition upsert: read only the affected partition, merge,
-    * swap that partition's directory. The rest of the table is untouched
-    * (never read, never rewritten). The partition's rows, the rows of it the
-    * merge keeps and the rows written are observed on the write pass itself.
+  /** Single-date partition upsert: read only the affected partition, merge
+    * ([[Upsert.mergeMarked]]: one window, one exchange), swap that
+    * partition's directory. The rest of the table is untouched (never read,
+    * never rewritten). The partition's rows, the rows of it the merge keeps
+    * and the rows written — plus the written rows' distinct `keySetOf`
+    * values — are observed on the write pass itself.
     */
   private def upsertDatePartition(spark: SparkSession, tablePath: String,
-      tradeDate: String, source: DataFrame, keys: Seq[String]): MergeCounts = {
+      tradeDate: String, source: DataFrame, keys: Seq[String],
+      keySetOf: Option[String] = None): MergeCounts = {
     val partPath = s"$tablePath/trade_date=$tradeDate"
     val src = source.drop("trade_date")
     val p = new Path(partPath)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     Upsert.recoverSnapshot(fs, p) // heal a crash between a prior swap's renames
     val rows = count(lit(1)).as("rows")
-    val written = Observation()
-    val observed = if (fs.exists(p)) Some((Observation(), Observation())) else None
-    val merged = observed.fold(src) { case (target, kept) =>
-      Upsert.survivors(
-          spark.read.schema(src.schema).parquet(partPath).observe(target, rows), src, keys)
-        .observe(kept, rows)
-        .unionByName(src)
+    val fromTarget = "__from_target"
+    val target = if (fs.exists(p)) Some(Observation()) else None
+    val merged = target.fold(src.withColumn(fromTarget, lit(false))) { t =>
+      Upsert.mergeMarked(spark.read.schema(src.schema).parquet(partPath).observe(t, rows),
+        src, keys, fromTarget)
     }
-    Upsert.snapshotWrite(merged.observe(written, rows), partPath)
-    def n(o: Observation) = o.get("rows").asInstanceOf[Long]
-    val (target, kept) = observed.fold((0L, 0L)) { case (t, k) => (n(t), n(k)) }
-    MergeCounts(target, kept, n(written))
+    val written = Observation()
+    val keySetAgg = keySetOf.map(c => collect_set(col(c)).as("keys")).toSeq
+    Upsert.snapshotWrite(merged.observe(written, rows,
+      count_if(col(fromTarget)).as("survivors") +: keySetAgg: _*).drop(fromTarget), partPath)
+    val w = written.get
+    MergeCounts(target.fold(0L)(_.get("rows").asInstanceOf[Long]),
+      w("survivors").asInstanceOf[Long], w("rows").asInstanceOf[Long],
+      keySetOf.fold(Seq.empty[String])(_ => w("keys").asInstanceOf[scala.collection.Seq[String]].toSeq))
   }
 
   /** Rows committed in a partition dir, summed from its parquet footers:
@@ -102,10 +114,20 @@ final class EodPipeline(warehouse: String, minTickers: Long = 100L) {
     */
   private def committedRows(spark: SparkSession, partPath: String): Long = {
     val dir = new Path(partPath)
-    val parts = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .listStatus(dir).toSeq.map(_.getPath).filter(_.getName.startsWith("part-"))
-    GraftMeta.footerRows(spark, parts).sum
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    GraftMeta.footerRows(spark, GraftMeta.dataFiles(fs, dir).map(_.getPath)).sum
   }
+
+  /** Insert-only merge of a delta held on the driver: commit live ∪ delta
+    * as the dim's next version (one driver-written file), or nothing at all
+    * — no version, no gc — when the delta is empty.
+    */
+  private def appendDim(spark: SparkSession, dir: String, schema: StructType,
+      live: Seq[InternalRow], delta: Seq[InternalRow]): Unit =
+    if (delta.nonEmpty) {
+      VersionedTable.writeRows(spark, dir, schema, live ++ delta)
+      VersionedTable.gc(spark, dir)
+    }
 
   /** Stage 2-3 of the lifecycle: bronze CSV for one date → RAW append with
     * the V1 row-count gate evaluated by `observe` ON the write pass (one
@@ -130,11 +152,10 @@ final class EodPipeline(warehouse: String, minTickers: Long = 100L) {
         s"bronze $tradeDate: expected >= $minTickers rows, got $n")
     }
     fs.mkdirs(part)
-    fs.listStatus(stage).map(_.getPath).filter(_.getName.startsWith("part-"))
-      .foreach { f =>
-        if (!fs.rename(f, new Path(part, f.getName)))
-          throw new java.io.IOException(s"RAW publish failed: $f -> $part")
-      }
+    GraftMeta.dataFiles(fs, stage).map(_.getPath).foreach { f =>
+      if (!fs.rename(f, new Path(part, f.getName)))
+        throw new java.io.IOException(s"RAW publish failed: $f -> $part")
+    }
     fs.delete(stage, true)
     spark.catalog.refreshByPath(rawPath)
     n
@@ -223,9 +244,10 @@ final class EodPipeline(warehouse: String, minTickers: Long = 100L) {
     *
     * A day issues only its necessary writes. Every RAW/CORE/FACT read names
     * the date's partition dir, so no read lists the table's history. The V4
-    * forecast rides the single CORE write as observed counts, and the V5
-    * reconciliation sums the committed partitions' parquet footers — neither
-    * launches a Spark job of its own.
+    * forecast and the day's symbol set ride the single CORE write as
+    * observed aggregates, the dims are merged on the driver, and the V5
+    * reconciliation sums the committed partitions' parquet footers — none
+    * of them launches a Spark job of its own.
     */
   def runDate(spark: SparkSession, bronzeCsv: String, tradeDate: String): PipelineReport = {
     val rawRows = loadRaw(spark, bronzeCsv, tradeDate)
@@ -238,7 +260,8 @@ final class EodPipeline(warehouse: String, minTickers: Long = 100L) {
       Seq(col("_ingest_ts"), col("_src_file")))
     val coreBatch = Normalize.withLoadTs(deduped)
       .select(Schemas.core.fieldNames.map(col).toIndexedSeq: _*)
-    val merge = upsertDatePartition(spark, corePath, tradeDate, coreBatch, Seq("symbol"))
+    val merge = upsertDatePartition(spark, corePath, tradeDate, coreBatch, Seq("symbol"),
+      keySetOf = Some("symbol"))
     // V4 (premerge_metrics.sql) from the merge's own counts. Each CORE
     // partition holds unique `symbol` keys, so every existing row the merge
     // replaced is one matched key, and the batch's keys are the rows it
@@ -246,31 +269,32 @@ final class EodPipeline(warehouse: String, minTickers: Long = 100L) {
     val estUpdates = merge.target - merge.survivors
     val keyRows = merge.written - merge.survivors
 
-    // DIM_SECURITY ∥ DIM_DATE — key-disjoint insert-only merges. Dims are
-    // whole-table snapshots with a single writer, so they use the
-    // VersionedTable pointer flip: the merged frame lazily reads the live
-    // version dir, which is IMMUTABLE — the write lands in the next version
-    // and readers never see a missing or partial dim even if this run dies
-    // mid-write (the reference gets this from Snowflake's transactional
-    // MERGE, merge_dim_security.sql / merge_dim_date.sql).
-    val coreDay = readDay(spark, corePath, Schemas.core, tradeDate)
-    val dimSec0 = VersionedTable.readOrEmpty(spark, dimSecurityPath, Schemas.dimSecurity)
-    val newSyms = coreDay.select(col("symbol")).distinct()
-      .join(dimSec0, Seq("symbol"), "left_anti")
-    val dimSec = dimSec0.unionByName(
-      SurrogateKeys.assign(newSyms, "security_id",
-          SurrogateKeys.maxKey(dimSec0, "security_id"), Seq("symbol"))
-        .select(col("security_id"), col("symbol")))
-    VersionedTable.write(dimSec, dimSecurityPath)
-    VersionedTable.gc(spark, dimSecurityPath)
+    // DIM_SECURITY ∥ DIM_DATE — key-disjoint insert-only merges of a few
+    // rows a day (merge_dim_security.sql / merge_dim_date.sql), run on the
+    // driver with no Spark job. Both dims are already bounded by driver
+    // memory (FACT broadcasts DIM_SECURITY), so each is read whole through
+    // the row decoder. Membership is decided against the dim's own live
+    // version, never against what CORE held before, so a run that died
+    // between the CORE and dim commits converges on rerun. A non-empty
+    // delta commits the next VersionedTable version (one file, live ∪
+    // delta) through the pointer flip, so readers never see a missing or
+    // partial dim; an empty delta commits nothing.
+    val dimSec0 = VersionedTable.readRows(spark, dimSecurityPath, Schemas.dimSecurity)
+    val known = dimSec0.map(_.getUTF8String(1)).toSet
+    val newSecs = SurrogateKeys.assignLocal(
+      merge.keySet.map(UTF8String.fromString).filterNot(known),
+      dimSec0.map(_.getLong(0)).maxOption.getOrElse(0L))
+    appendDim(spark, dimSecurityPath, Schemas.dimSecurity, dimSec0,
+      newSecs.map { case (id, sym) => InternalRow(id, sym) })
 
-    val dimDate0 = VersionedTable.readOrEmpty(spark, dimDatePath, Schemas.dimDate)
-    val newDates = DateDim.fromDates(coreDay, col("trade_date"))
-      .join(dimDate0.select(col("date_sk")), Seq("date_sk"), "left_anti")
-    VersionedTable.write(dimDate0.unionByName(newDates), dimDatePath)
-    VersionedTable.gc(spark, dimDatePath)
+    val dimDate0 = VersionedTable.readRows(spark, dimDatePath, Schemas.dimDate)
+    val dateRow = DateDim.localRow(spark, tradeDate)
+    val newDate = merge.written > 0 && !dimDate0.exists(_.getInt(0) == dateRow.getInt(0))
+    appendDim(spark, dimDatePath, Schemas.dimDate, dimDate0,
+      if (newDate) Seq(dateRow) else Nil)
 
     // FACT: dims are broadcast-sized; join through surrogate keys.
+    val coreDay = readDay(spark, corePath, Schemas.core, tradeDate)
     val dimSecNow = VersionedTable.readOrEmpty(spark, dimSecurityPath, Schemas.dimSecurity)
     val factBatch = Normalize.withLoadTs(
       coreDay.join(broadcast(dimSecNow), Seq("symbol"))

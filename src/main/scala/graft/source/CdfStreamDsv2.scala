@@ -341,6 +341,47 @@ object GraftMeta {
     relax(schema).asInstanceOf[StructType]
   }
 
+  /** The data files of one FLAT table dir (a version dir, a partition dir,
+    * a stage dir), sorted by name: every child that is not `_`/`.`-prefixed
+    * — markers, checksums, sidecars and stage dirs are. The one rule for
+    * "which files are data". A data SUBDIRECTORY means a hive-partitioned
+    * layout, whose rows and partition columns a flat caller would silently
+    * drop, so it is refused loudly. A missing dir holds no files.
+    */
+  def dataFiles(fs: org.apache.hadoop.fs.FileSystem,
+      dir: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.FileStatus] =
+    if (!fs.exists(dir)) Seq.empty
+    else {
+      val data = fs.listStatus(dir).toSeq.filterNot { st =>
+        val n = st.getPath.getName
+        n.startsWith("_") || n.startsWith(".")
+      }
+      val nested = data.filter(_.isDirectory)
+      require(nested.isEmpty,
+        s"GraftMeta.dataFiles($dir): nested data subdirectories " +
+          s"(${nested.map(_.getPath.getName).take(3).mkString(", ")}) — " +
+          "a partitioned layout's rows and partition columns are not in the " +
+          "dir's own files; this listing is for flat dirs")
+      data.sortBy(_.getPath.getName)
+    }
+
+  /** Decode whole parquet files on the driver into rows of `schema`,
+    * resolved by column name through the connector's row decoder
+    * ([[InternalRowReadSupport]]): no Spark job, for tables small enough to
+    * be held on the driver.
+    */
+  def readRows(spark: org.apache.spark.sql.SparkSession,
+      files: Seq[org.apache.hadoop.fs.Path], schema: StructType): Seq[InternalRow] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    files.flatMap { f =>
+      val r = org.apache.parquet.hadoop.ParquetReader.builder(
+          new InternalRowReadSupport(schema, Map.empty, Map.empty, 0L, null, null), f)
+        .withConf(conf).build()
+      try Iterator.continually(r.read()).takeWhile(_ != null).toVector
+      finally r.close()
+    }
+  }
+
   /** Each file's row count from its parquet footer: O(files) metadata
     * reads, bounded-parallel, no Spark job and no data page opened.
     */
@@ -374,23 +415,10 @@ object GraftMeta {
     val file =
       if (fs.getFileStatus(p).isFile) p
       else {
-        val all = fs.listStatus(p).toSeq
-        // FLAT-LAYOUT INVARIANT (r18 advisory): every call site hands a
-        // single-schema flat version/data dir. A hive-partitioned layout
-        // (data subdirs) would silently lose its partition columns here —
-        // refuse loudly instead of returning a truncated schema.
-        val nested = all.filter(st => st.isDirectory &&
-          !st.getPath.getName.startsWith("_") &&
-          !st.getPath.getName.startsWith("."))
-        require(nested.isEmpty,
-          s"GraftMeta.footerSchema($path): nested data subdirectories " +
-            s"(${nested.map(_.getPath.getName).take(3).mkString(", ")}) — " +
-            "a partitioned layout's partition columns are not in any " +
-            "footer; this schema source is for flat single-schema dirs")
-        all.filter(st => st.isFile && !st.getPath.getName.startsWith("_") &&
-            !st.getPath.getName.startsWith("."))
-          .map(_.getPath).sortBy(_.getName).headOption.getOrElse(
-            sys.error(s"GraftMeta.footerSchema($path): no data files"))
+        // a hive-partitioned layout would silently lose its partition
+        // columns here; dataFiles refuses it loudly
+        dataFiles(fs, p).headOption.map(_.getPath).getOrElse(
+          sys.error(s"GraftMeta.footerSchema($path): no data files"))
       }
     val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(file, conf)
     val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)

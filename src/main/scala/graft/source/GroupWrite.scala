@@ -4,8 +4,10 @@ import java.util.UUID
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.parquet.example.data.Group
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
+import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.parquet.io.api.Binary
 import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, Types}
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
@@ -156,6 +158,100 @@ private[graft] object GroupWrite {
       }
     }
 
+  /** One row as a parquet `Group` of `schema`'s message type: the single
+    * row→Group mapping every Group writer shares. Columns start at `off`
+    * (row-level plans prepend an operation marker); a null value is simply
+    * absent (parquet optional).
+    */
+  def toGroup(factory: SimpleGroupFactory, schema: StructType,
+      row: InternalRow, off: Int): Group = {
+    val g = factory.newGroup()
+    schema.fields.zipWithIndex.foreach { case (f, fi) =>
+      val i = fi + off
+      if (!row.isNullAt(i)) f.dataType match {
+        case LongType => g.add(f.name, row.getLong(i))
+        case IntegerType => g.add(f.name, row.getInt(i))
+        case ShortType => g.add(f.name, row.getShort(i).toInt)
+        case ByteType => g.add(f.name, row.getByte(i).toInt)
+        case DoubleType => g.add(f.name, row.getDouble(i))
+        case FloatType => g.add(f.name, row.getFloat(i))
+        case BooleanType => g.add(f.name, row.getBoolean(i))
+        case StringType => g.add(f.name,
+          Binary.fromConstantByteArray(row.getUTF8String(i).getBytes))
+        case DateType => g.add(f.name, row.getInt(i))
+        case TimestampType | TimestampNTZType =>
+          g.add(f.name, row.getLong(i))
+        case d: DecimalType if d.precision <= 9 =>
+          g.add(f.name,
+            row.getDecimal(i, d.precision, d.scale).toUnscaledLong.toInt)
+        case d: DecimalType if d.precision <= 18 =>
+          g.add(f.name,
+            row.getDecimal(i, d.precision, d.scale).toUnscaledLong)
+        // STRUCT of scalars (round 17 #7): one child group, each
+        // non-null child added by name; a null child is simply
+        // absent (parquet optional)
+        case st: StructType =>
+          addStructFields(g.addGroup(f.name), st,
+            row.getStruct(i, st.size), f.name)
+        // ARRAY: one "list" group occurrence per element inside the
+        // LIST wrapper; a null element is an occurrence with no
+        // "element" value (the standard 3-level encoding). Elements
+        // span every supported scalar plus structs of scalars
+        // (round 18 #1/#4)
+        case ArrayType(et, _) =>
+          val arr = row.getArray(i)
+          val lg = g.addGroup(f.name)
+          var j = 0
+          while (j < arr.numElements()) {
+            val el = lg.addGroup("list")
+            if (!arr.isNullAt(j)) et match {
+              case LongType => el.add("element", arr.getLong(j))
+              case IntegerType => el.add("element", arr.getInt(j))
+              case ShortType => el.add("element", arr.getShort(j).toInt)
+              case ByteType => el.add("element", arr.getByte(j).toInt)
+              case DoubleType => el.add("element", arr.getDouble(j))
+              case FloatType => el.add("element", arr.getFloat(j))
+              case BooleanType => el.add("element", arr.getBoolean(j))
+              case StringType => el.add("element",
+                Binary.fromConstantByteArray(arr.getUTF8String(j).getBytes))
+              case DateType => el.add("element", arr.getInt(j))
+              case TimestampType | TimestampNTZType =>
+                el.add("element", arr.getLong(j))
+              case d: DecimalType if d.precision <= 9 =>
+                el.add("element",
+                  arr.getDecimal(j, d.precision, d.scale)
+                    .toUnscaledLong.toInt)
+              case d: DecimalType if d.precision <= 18 =>
+                el.add("element",
+                  arr.getDecimal(j, d.precision, d.scale).toUnscaledLong)
+              case st: StructType =>
+                addStructFields(el.addGroup("element"), st,
+                  arr.getStruct(j, st.size), s"${f.name}.element")
+              case other => sys.error(
+                s"GroupWrite: unsupported array element type $other (${f.name})")
+            }
+            j += 1
+          }
+        case other => sys.error(
+          s"GroupWrite: unsupported column type $other (${f.name})")
+      }
+    }
+    g
+  }
+
+  /** Write `rows` of `schema` as ONE snappy parquet file at `file`, on the
+    * calling thread — the driver-side twin of the task writer below, for a
+    * table small enough to be held on the driver.
+    */
+  def writeFile(conf: Configuration, file: Path, schema: StructType,
+      rows: Iterable[InternalRow]): Unit = {
+    val msgType = messageType(schema)
+    val factory = new SimpleGroupFactory(msgType)
+    val w = ExampleParquetWriter.builder(file).withConf(conf).withType(msgType)
+      .withCompressionCodec(CompressionCodecName.SNAPPY).build()
+    try rows.foreach(r => w.write(toGroup(factory, schema, r, 0))) finally w.close()
+  }
+
   /** StructType → parquet MessageType, mirroring exactly the leaf types
     * the Group READER supports — a type the write path accepts but the
     * read path cannot decode would be a trap.
@@ -254,78 +350,7 @@ private[source] class GroupDataWriterFactory(stageDir: String,
         if (writer == null)
           writer = ExampleParquetWriter.builder(new Path(s"$stageDir/$name"))
             .withConf(hadoopConf.value).withType(msgType).build()
-        val g = factory.newGroup()
-        schema.fields.zipWithIndex.foreach { case (f, fi) =>
-          val i = fi + off
-          if (!row.isNullAt(i)) f.dataType match {
-            case LongType => g.add(f.name, row.getLong(i))
-            case IntegerType => g.add(f.name, row.getInt(i))
-            case ShortType => g.add(f.name, row.getShort(i).toInt)
-            case ByteType => g.add(f.name, row.getByte(i).toInt)
-            case DoubleType => g.add(f.name, row.getDouble(i))
-            case FloatType => g.add(f.name, row.getFloat(i))
-            case BooleanType => g.add(f.name, row.getBoolean(i))
-            case StringType => g.add(f.name,
-              Binary.fromConstantByteArray(row.getUTF8String(i).getBytes))
-            case DateType => g.add(f.name, row.getInt(i))
-            case TimestampType | TimestampNTZType =>
-              g.add(f.name, row.getLong(i))
-            case d: DecimalType if d.precision <= 9 =>
-              g.add(f.name,
-                row.getDecimal(i, d.precision, d.scale).toUnscaledLong.toInt)
-            case d: DecimalType if d.precision <= 18 =>
-              g.add(f.name,
-                row.getDecimal(i, d.precision, d.scale).toUnscaledLong)
-            // STRUCT of scalars (round 17 #7): one child group, each
-            // non-null child added by name; a null child is simply
-            // absent (parquet optional)
-            case st: StructType =>
-              GroupWrite.addStructFields(g.addGroup(f.name), st,
-                row.getStruct(i, st.size), f.name)
-            // ARRAY: one "list" group occurrence per element inside the
-            // LIST wrapper; a null element is an occurrence with no
-            // "element" value (the standard 3-level encoding). Elements
-            // span every supported scalar plus structs of scalars
-            // (round 18 #1/#4)
-            case ArrayType(et, _) =>
-              val arr = row.getArray(i)
-              val lg = g.addGroup(f.name)
-              var j = 0
-              while (j < arr.numElements()) {
-                val el = lg.addGroup("list")
-                if (!arr.isNullAt(j)) et match {
-                  case LongType => el.add("element", arr.getLong(j))
-                  case IntegerType => el.add("element", arr.getInt(j))
-                  case ShortType => el.add("element", arr.getShort(j).toInt)
-                  case ByteType => el.add("element", arr.getByte(j).toInt)
-                  case DoubleType => el.add("element", arr.getDouble(j))
-                  case FloatType => el.add("element", arr.getFloat(j))
-                  case BooleanType => el.add("element", arr.getBoolean(j))
-                  case StringType => el.add("element",
-                    Binary.fromConstantByteArray(arr.getUTF8String(j).getBytes))
-                  case DateType => el.add("element", arr.getInt(j))
-                  case TimestampType | TimestampNTZType =>
-                    el.add("element", arr.getLong(j))
-                  case d: DecimalType if d.precision <= 9 =>
-                    el.add("element",
-                      arr.getDecimal(j, d.precision, d.scale)
-                        .toUnscaledLong.toInt)
-                  case d: DecimalType if d.precision <= 18 =>
-                    el.add("element",
-                      arr.getDecimal(j, d.precision, d.scale).toUnscaledLong)
-                  case st: StructType =>
-                    GroupWrite.addStructFields(el.addGroup("element"), st,
-                      arr.getStruct(j, st.size), s"${f.name}.element")
-                  case other => sys.error(
-                    s"GroupWrite: unsupported array element type $other (${f.name})")
-                }
-                j += 1
-              }
-            case other => sys.error(
-              s"GroupWrite: unsupported column type $other (${f.name})")
-          }
-        }
-        writer.write(g)
+        writer.write(GroupWrite.toGroup(factory, schema, row, off))
       }
       override def commit(): WriterCommitMessage = {
         if (writer != null) writer.close()

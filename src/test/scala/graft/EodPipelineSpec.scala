@@ -1,11 +1,15 @@
 package graft
 
+import java.nio.charset.StandardCharsets.UTF_8
+import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.hadoop.fs.Path
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
-import graft.ops.{Normalize, Quality}
+import graft.model.Schemas
+import graft.ops.{DateDim, Normalize, Quality, SurrogateKeys, VersionedTable}
 import graft.pipeline.EodPipeline
-import graft.source.EodSource
+import graft.source.{EodSource, GraftMeta}
 
 /** End-to-end daily lifecycle (SURVEY §3.1): two days + a FORCE-reload rerun
   * over reference-shaped bronze CSVs; star-schema invariants after each run.
@@ -16,11 +20,86 @@ class EodPipelineSpec extends AnyFunSuite {
 
   private def writeCsv(dir: String, date: String, rows: Seq[String]): String = {
     val f = new java.io.File(dir, s"eod_prices_$date.csv")
-    val w = new java.io.PrintWriter(f)
-    ("trade_date,symbol,open,high,low,close,volume" +: rows).foreach(w.println)
-    w.close()
+    java.nio.file.Files.write(f.toPath,
+      ("trade_date,symbol,open,high,low,close,volume" +: rows).asJava, UTF_8)
     f.toString
   }
+
+  /** One bronze day: a row per symbol, prices varied by `px`. */
+  private def day(bronze: String, date: String, symbols: Seq[String], px: Int = 1,
+      file: String = null): String =
+    writeCsv(bronze, Option(file).getOrElse(date),
+      symbols.map(sym => s"$date,$sym,$px,$px,$px,$px,${px * 100}"))
+
+  /** One job a bracketed run launched: its description and the `runDate`
+    * source line it was called from — through its SQL execution's call site
+    * when the job runs on a helper thread (AQE stages, broadcasts).
+    */
+  private final case class Job(description: String, runDateLine: Option[Int])
+
+  private val RunDateFrame =
+    """graft\.pipeline\.EodPipeline\.runDate\(EodPipeline\.scala:(\d+)\)""".r.unanchored
+
+  /** The jobs `body` launches. The listener bus is asynchronous and
+    * delivers in order, so a marker job on each side brackets exactly them.
+    */
+  private def jobsOf(body: => Unit): Seq[Job] = {
+    val sc = spark.sparkContext
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[Job]
+    val execLine = new java.util.concurrent.ConcurrentHashMap[Long, Int]
+    def line(details: String) = RunDateFrame.findFirstMatchIn(details).map(_.group(1).toInt)
+    val listener = new SparkListener {
+      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
+        case s: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
+          line(s.details).orElse(s.rootExecutionId.flatMap(r => Option(execLine.get(r))))
+            .foreach(execLine.put(s.executionId, _))
+        case _ =>
+      }
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        def prop(k: String) = Option(e.properties).flatMap(p => Option(p.getProperty(k)))
+        seen.add(Job(prop("spark.job.description").getOrElse(""),
+          e.stageInfos.headOption.flatMap(st => line(st.details)).orElse(
+            Seq("spark.sql.execution.root.id", "spark.sql.execution.id").flatMap(prop)
+              .flatMap(id => Option(execLine.get(id.toLong))).headOption)))
+      }
+    }
+    def marker(name: String): Unit = {
+      sc.setJobDescription(name)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+    }
+    sc.addSparkListener(listener)
+    try {
+      marker("guard-begin")
+      body
+      marker("guard-end")
+      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+      while (!seen.asScala.exists(_.description == "guard-end") && System.nanoTime() < deadline)
+        Thread.sleep(20)
+      assert(seen.asScala.exists(_.description == "guard-end"), "listener saw the closing marker")
+      seen.asScala.toSeq.dropWhile(_.description != "guard-begin").drop(1)
+        .takeWhile(_.description != "guard-end")
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** `runDate`'s dims block in EodPipeline.scala: the source lines from the
+    * `// DIM_SECURITY` marker up to the `// FACT` marker.
+    */
+  private lazy val dimsBlock: Range = {
+    val src = java.nio.file.Files.readAllLines(
+      java.nio.file.Paths.get("src/main/scala/graft/pipeline/EodPipeline.scala")).asScala.toIndexedSeq
+    val from = src.indexWhere(_.contains("def runDate("))
+    val dims = src.indexWhere(_.contains("// DIM_SECURITY"), from)
+    val fact = src.indexWhere(_.contains("// FACT"), dims)
+    assert(from >= 0 && dims > from && fact > dims, "runDate's stage markers are in order")
+    (dims + 1) until (fact + 1)
+  }
+
+  private def dimKeys(pipe: EodPipeline): Seq[(Long, String)] =
+    pipe.dimSecurity(spark).orderBy("security_id").as[(Long, String)].collect().toSeq
+
+  private def versions(pipe: EodPipeline) =
+    (VersionedTable.currentVersion(spark, pipe.dimSecurityPath),
+      VersionedTable.currentVersion(spark, pipe.dimDatePath))
 
   test("two-day run + rerun: upsert idempotence, surrogate stability, V5 parity") {
     val bronze = TestSpark.tmpDir("bronze")
@@ -212,43 +291,155 @@ class EodPipelineSpec extends AnyFunSuite {
     val bronze = TestSpark.tmpDir("bronze6")
     val pipe = new EodPipeline(TestSpark.tmpDir("wh6"), minTickers = 1)
     val days = (10 to 13).map(d => f"2026-08-$d%02d")
-    val sc = spark.sparkContext
-    val descriptions = new java.util.concurrent.ConcurrentLinkedQueue[String]
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        descriptions.add(Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse(""))
-    }
-    // the bus is asynchronous and delivers in order: a marker job on each
-    // side of the 4th day brackets exactly that day's jobs
-    def marker(name: String): Unit = {
-      sc.setJobDescription(name)
-      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
-    }
     spark.conf.set(threshold, "2")
-    sc.addSparkListener(listener)
     try {
       days.init.foreach(d => pipe.runDate(spark, writeCsv(bronze, d, Seq(
         s"$d,AAPL,1,1,1,1,1", s"$d,MSFT,2,2,2,2,2")), d))
       val last = writeCsv(bronze, days.last, Seq(
         s"${days.last},AAPL,1,1,1,1,1", s"${days.last},MSFT,2,2,2,2,2"))
-      marker("listing-guard-begin")
-      pipe.runDate(spark, last, days.last)
-      marker("listing-guard-end")
-      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
-      while (!descriptions.contains("listing-guard-end") && System.nanoTime() < deadline)
-        Thread.sleep(20)
-      import scala.jdk.CollectionConverters._
-      val day4 = descriptions.asScala.toSeq
-        .dropWhile(_ != "listing-guard-begin").drop(1).takeWhile(_ != "listing-guard-end")
-      assert(descriptions.contains("listing-guard-end"), "listener saw the closing marker")
+      val day4 = jobsOf(pipe.runDate(spark, last, days.last)).map(_.description)
       assert(day4.nonEmpty, "the day's own jobs were seen")
       assert(day4.filter(_.startsWith("Listing leaf files")).isEmpty,
         "the 4th day listed its table history")
       assert(new java.io.File(pipe.corePath).list().count(_.startsWith("trade_date=")) === 4)
-    } finally {
-      sc.removeSparkListener(listener)
-      before.fold(spark.conf.unset(threshold))(spark.conf.set(threshold, _))
+    } finally before.fold(spark.conf.unset(threshold))(spark.conf.set(threshold, _))
+  }
+
+  test("job-count guard: the dims launch no Spark job; a reload runs in 7 jobs, a new day in 5") {
+    val bronze = TestSpark.tmpDir("bronze7")
+    val pipe = new EodPipeline(TestSpark.tmpDir("wh7"), minTickers = 1)
+    pipe.runDate(spark, day(bronze, "2026-08-10", Seq("AAPL", "MSFT")), "2026-08-10")
+    pipe.runDate(spark, day(bronze, "2026-08-11", Seq("AAPL", "MSFT")), "2026-08-11")
+
+    // a FORCE reload of a known date with no new symbol: empty deltas, so
+    // neither dim commits a version
+    val dims0 = versions(pipe)
+    val reload = jobsOf(pipe.runDate(spark,
+      day(bronze, "2026-08-11", Seq("MSFT", "AAPL"), px = 2, file = "reload"), "2026-08-11"))
+    assert(versions(pipe) === dims0, "an empty delta commits nothing")
+    // a new day that adds one symbol: both dims commit one version
+    val added = jobsOf(pipe.runDate(spark,
+      day(bronze, "2026-08-12", Seq("AAPL", "GOOG", "MSFT")), "2026-08-12"))
+    assert(versions(pipe) === ((dims0._1.map(_ + 1), dims0._2.map(_ + 1))))
+    assert(dimKeys(pipe) === Seq((1L, "AAPL"), (2L, "MSFT"), (3L, "GOOG")))
+
+    for ((name, jobs, pinned) <- Seq(("reload", reload, ReloadJobs), ("new symbol", added, NewDayJobs))) {
+      assert(jobs.forall(_.runDateLine.isDefined), s"$name: every job names its runDate line")
+      assert(jobs.flatMap(_.runDateLine).filter(dimsBlock.contains) === Nil,
+        s"$name: the dims block launched Spark jobs")
+      assert(jobs.size === pinned, s"$name: ${jobs.mkString(", ")}")
     }
   }
+
+  test("history independence: day 40 launches the jobs and listings of day 5") {
+    val bronze = TestSpark.tmpDir("bronze8")
+    val pipe = new EodPipeline(TestSpark.tmpDir("wh8"), minTickers = 1)
+    val dates = (0 until 40).map(d => java.time.LocalDate.parse("2026-01-01").plusDays(d.toLong).toString)
+    // every day adds one symbol, so every day commits both dims
+    def run(i: Int): Unit = pipe.runDate(spark,
+      day(bronze, dates(i), Seq("AAPL", f"S$i%02d"), px = i + 1), dates(i))
+    val perDay = dates.indices.map { i =>
+      if (i == 4 || i == 39) Some(jobsOf(run(i))) else { run(i); None }
+    }
+    val (day5, day40) = (perDay(4).get, perDay(39).get)
+    def listings(js: Seq[Job]) = js.count(_.description.startsWith("Listing leaf files"))
+    assert(day40.size === day5.size, s"day 5: $day5\nday 40: $day40")
+    assert(listings(day40) === listings(day5))
+    assert(day40.size === NewDayJobs)
+    val fs = new Path(pipe.dimSecurityPath).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    for (dir <- Seq(pipe.dimSecurityPath, pipe.dimDatePath))
+      assert(GraftMeta.dataFiles(fs, new Path(VersionedTable.liveDir(spark, dir))).size === 1,
+        s"$dir: the live version is one data file")
+    assert(pipe.dimSecurity(spark).count() === 41 && pipe.dimDate(spark).count() === 40)
+  }
+
+  test("crash between the CORE and dim commits: a rerun without the new symbol converges") {
+    val (d1, d2) = ("2026-08-10", "2026-08-11")
+    val bronze = TestSpark.tmpDir("bronze9")
+    val clean = new EodPipeline(TestSpark.tmpDir("wh9a"), minTickers = 1)
+    clean.runDate(spark, day(bronze, d1, Seq("AAPL", "MSFT")), d1)
+    clean.runDate(spark, day(bronze, d2, Seq("AAPL", "NVDA", "MSFT")), d2)
+
+    val pipe = new EodPipeline(TestSpark.tmpDir("wh9b"), minTickers = 1)
+    pipe.runDate(spark, day(bronze, d1, Seq("AAPL", "MSFT")), d1)
+    val (sec1, date1) = versions(pipe)
+    pipe.runDate(spark, day(bronze, d2, Seq("AAPL", "NVDA", "MSFT")), d2)
+    // the crash instant: CORE holds day 2 (NVDA included), neither dim
+    // version of day 2 was published and FACT was never written
+    val fs = new Path(pipe.factPath).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    for ((dir, v) <- Seq(pipe.dimSecurityPath -> sec1.get, pipe.dimDatePath -> date1.get)) {
+      val out = fs.create(new Path(dir, "_ptr"), true)
+      try out.write(f"$v%08d".getBytes(UTF_8)) finally out.close()
+    }
+    fs.delete(new Path(s"${pipe.factPath}/trade_date=$d2"), true)
+    assert(!dimKeys(pipe).exists(_._2 == "NVDA"))
+
+    val r = pipe.runDate(spark,
+      day(bronze, d2, Seq("AAPL", "MSFT"), px = 2, file = "rerun"), d2)
+    assert(r.rowParity && r.coreRows === 3 && r.factRows === 3, r.toString)
+    assert(dimKeys(pipe) === dimKeys(clean))
+    assert(dimKeys(pipe).contains((3L, "NVDA")))
+    val nvda = spark.read.parquet(pipe.factPath)
+      .filter($"trade_date" === d2 && $"security_id" === 3L).count()
+    assert(nvda === 1L, "NVDA's FACT row joins through its key")
+    assert(pipe.dimDate(spark).select("date_sk").as[Int].collect().sorted === Array(20260810, 20260811))
+  }
+
+  test("surrogate keys follow Spark's binary UTF-8 order, as SurrogateKeys.assign does") {
+    // UTF-16 orders U+D83D (the high surrogate of U+1F600/U+1F601) below
+    // U+FF21 and U+FFFD; UTF-8 orders both above them
+    val (fullA, grin, beam, repl) = ("\uFF21", "\uD83D\uDE00", "\uD83D\uDE01", "\uFFFD")
+    val bronze = TestSpark.tmpDir("bronze10")
+    val pipe = new EodPipeline(TestSpark.tmpDir("wh10"), minTickers = 1)
+    def assigned(delta: Seq[String], max: Long) =
+      SurrogateKeys.assign(delta.toDF("symbol"), "security_id", max, Seq("symbol"))
+        .as[(String, Long)].collect().map(_.swap).sortBy(_._1).toSeq
+    pipe.runDate(spark, day(bronze, "2026-08-10", Seq(grin, "ZZZ", fullA)), "2026-08-10")
+    val first = assigned(Seq(grin, "ZZZ", fullA), 0L)
+    assert(first.map(_._2) === Seq("ZZZ", fullA, grin), "the reference order is UTF-8's")
+    assert(dimKeys(pipe) === first)
+    pipe.runDate(spark, day(bronze, "2026-08-11", Seq(beam, "ZZZ", repl)), "2026-08-11")
+    assert(dimKeys(pipe) === first ++ assigned(Seq(beam, repl), 3L))
+  }
+
+  test("upgrade: dims written by the Spark path continue on the driver path") {
+    val bronze = TestSpark.tmpDir("bronze11")
+    val pipe = new EodPipeline(TestSpark.tmpDir("wh11"), minTickers = 1)
+    VersionedTable.write(spark.createDataFrame(
+      java.util.List.of(org.apache.spark.sql.Row(1L, "AAPL"), org.apache.spark.sql.Row(2L, "MSFT")),
+      Schemas.dimSecurity).repartition(2), pipe.dimSecurityPath)
+    VersionedTable.write(DateDim.fromDates(Seq("2026-08-10").toDF("d"), $"d"), pipe.dimDatePath)
+    val seeded = versions(pipe)
+
+    pipe.runDate(spark, day(bronze, "2026-08-10", Seq("MSFT", "AAPL")), "2026-08-10")
+    assert(versions(pipe) === seeded, "known symbols on a known date commit nothing")
+    val r = pipe.runDate(spark, day(bronze, "2026-08-11", Seq("AAPL", "GOOG")), "2026-08-11")
+    assert(r.rowParity && r.factRows === 2)
+    assert(dimKeys(pipe) === Seq((1L, "AAPL"), (2L, "MSFT"), (3L, "GOOG")))
+    assert(pipe.dimDate(spark).groupBy("date_sk").count().as[(Int, Long)].collect().sorted
+      === Array((20260810, 1L), (20260811, 1L)))
+  }
+
+  test("DIM_DATE rows equal DateDim.fromDates across leap day and ISO week 53") {
+    val dates = Seq("2020-12-31", "2021-01-01", "2021-01-03", "2021-01-04",
+      "2024-02-28", "2024-02-29", "2024-03-01")
+    val bronze = TestSpark.tmpDir("bronze12")
+    val pipe = new EodPipeline(TestSpark.tmpDir("wh12"), minTickers = 1)
+    dates.reverse.foreach(d => pipe.runDate(spark, day(bronze, d, Seq("AAPL")), d))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select(Schemas.dimDate.fieldNames.map(col).toIndexedSeq: _*).orderBy("date_sk").collect().toSeq
+    val expected = rows(DateDim.fromDates(dates.toDF("d"), $"d"))
+    assert(rows(pipe.dimDate(spark)) === expected)
+    assert(pipe.dimDate(spark).schema === Schemas.dimDate)
+    assert(expected.map(r => (r.getAs[Int]("date_sk"), r.getAs[Int]("week_of_year"))).take(4) ===
+      Seq((20201231, 53), (20210101, 53), (20210103, 53), (20210104, 1)))
+  }
+
+  /** The Spark jobs of one day's run, pinned exactly so that a stage which
+    * starts launching jobs again fails here. A new day: the RAW write, the
+    * CORE dedup exchange and write, and the FACT broadcast of DIM_SECURITY
+    * and write. A reload adds the merge exchange of CORE and of FACT.
+    */
+  private val NewDayJobs = 5
+  private val ReloadJobs = 7
 }

@@ -146,6 +146,57 @@ class VersionedTableSpec extends AnyFunSuite {
       Seq((9L, "dup", 0)).toDF("k", "v", "p"), pdir, "app", 0L).isEmpty)
   }
 
+  test("readRows/writeRows: driver rows by name, one published file every reader sees") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.types._
+    import org.apache.spark.unsafe.types.UTF8String
+    val dir = TestSpark.tmpDir("vt9") + "/t"
+    val schema = StructType(Seq(StructField("k", LongType), StructField("v", StringType),
+      StructField("d", DateType), StructField("b", BooleanType)))
+    assert(VersionedTable.readRows(spark, dir, schema).isEmpty, "no table yet: no rows")
+    // a Spark-written version: two files, columns in another order
+    VersionedTable.writeCommitted(Seq(("a", 1L, true, 19000), ("b", 2L, false, 19001)).toDF("v", "k", "b", "n")
+      .selectExpr("v", "k", "b", "date_from_unix_date(n) AS d").repartition(2), dir, "app", 0L)
+    val live = VersionedTable.readRows(spark, dir, schema)
+      .map(r => (r.getLong(0), r.getUTF8String(1).toString, r.getInt(2), r.getBoolean(3))).sortBy(_._1)
+    assert(live === Seq((1L, "a", 19000, true), (2L, "b", 19001, false)))
+    val rows = VersionedTable.readRows(spark, dir, schema) :+
+      InternalRow(3L, UTF8String.fromString("c\uD83D\uDE00"), 19002, null)
+    assert(VersionedTable.writeRows(spark, dir, schema, rows) === 2L)
+    val fs0 = fs(dir)
+    assert(graft.source.GraftMeta.dataFiles(fs0, new Path(VersionedTable.liveDir(spark, dir)))
+      .map(_.getPath.getName) === Seq("part-00000.parquet"))
+    assert(VersionedTable.lastBatchId(spark, dir, "app") === Some(0L), "the txn map is carried")
+    assert(VersionedTable.commitTimestamp(spark, dir, 2L).isDefined, "the version is stamped")
+    val read = VersionedTable.read(spark, dir)
+    assert(read.schema.map(f => f.name -> f.dataType) === schema.map(f => f.name -> f.dataType))
+    assert(read.orderBy("k").as[(Long, String, java.sql.Date, Option[Boolean])].collect().toSeq ===
+      Seq((1L, "a", java.sql.Date.valueOf("2022-01-08"), Some(true)),
+        (2L, "b", java.sql.Date.valueOf("2022-01-09"), Some(false)),
+        (3L, "c\uD83D\uDE00", java.sql.Date.valueOf("2022-01-10"), None)))
+  }
+
+  test("GraftMeta.dataFiles: hidden names are not data, a data subdir is refused") {
+    import graft.source.GraftMeta
+    val dir = new Path(TestSpark.tmpDir("vt10"), "t")
+    val fs0 = fs(dir.toString)
+    assert(GraftMeta.dataFiles(fs0, dir).isEmpty, "a missing dir holds no files")
+    Seq((1L, "a")).toDF("k", "v").coalesce(1).write.parquet(dir.toString) // part + _SUCCESS + .crc
+    fs0.mkdirs(new Path(dir, "_sidecar"))
+    fs0.mkdirs(new Path(dir, ".stage"))
+    val names = GraftMeta.dataFiles(fs0, dir).map(_.getPath.getName)
+    assert(names.size === 1 && names.head.startsWith("part-"), names)
+    fs0.mkdirs(new Path(dir, "p=1"))
+    val e = intercept[IllegalArgumentException](GraftMeta.dataFiles(fs0, dir))
+    assert(e.getMessage.contains("nested data subdirectories"))
+    // a versioned root that holds bare data files is refused, not read empty
+    val bare = TestSpark.tmpDir("vt10b") + "/t"
+    Seq((1L, "a")).toDF("k", "v").write.parquet(bare)
+    assert(intercept[IllegalArgumentException](
+      VersionedTable.readRows(spark, bare, new org.apache.spark.sql.types.StructType()))
+      .getMessage.contains("bare data files"))
+  }
+
   test("writeCommitted: crash after staging (txn written, pointer unflipped) re-applies ONCE") {
     val dir = TestSpark.tmpDir("vt8") + "/t"
     VersionedTable.writeCommitted(Seq((1L, "a")).toDF("k", "v"), dir, "app", 0L)
