@@ -5,6 +5,7 @@ import java.nio.charset.StandardCharsets
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.parquet.schema.LogicalTypeAnnotation
+import graft.source.GraftMeta
 
 /** LOG-STRUCTURED TABLE — the Delta-log design proper, complementing
   * [[VersionedTable]]'s snapshot-per-version layout: data files are
@@ -84,12 +85,10 @@ object ActionLog {
     */
   private def readCkptParquetDf(spark: SparkSession, fs: FileSystem,
       p: Path): DataFrame =
-    if (!p.getName.startsWith("_") && !p.getName.startsWith("."))
+    if (!GraftMeta.hidden(p.getName))
       spark.read.parquet(p.toString)
     else {
-      val parts = fs.listStatus(p).toSeq
-        .filter(st => st.isFile && st.getPath.getName.startsWith("part-"))
-        .map(_.getPath.toString).sorted
+      val parts = GraftMeta.dataFiles(fs, p).map(_.getPath.toString)
       require(parts.nonEmpty,
         s"ActionLog: legacy parquet checkpoint $p has no part files")
       spark.read.parquet(parts: _*)
@@ -384,9 +383,7 @@ object ActionLog {
     val tmp = new Path(s"$dir/.stage-$v")
     df.write.mode("overwrite").parquet(tmp.toString)
     fs.mkdirs(new Path(s"$dir/$DataDir"))
-    val moved = fs.listStatus(tmp).toSeq
-      .filter(st => st.isFile && st.getPath.getName.startsWith("part-"))
-      .sortBy(_.getPath.getName)
+    val moved = GraftMeta.dataFiles(fs, tmp)
       .zipWithIndex.map { case (st, i) =>
         val name = s"v$v-$i.parquet"
         require(fs.rename(st.getPath, new Path(s"$dir/$DataDir/$name")),
@@ -639,9 +636,7 @@ object ActionLog {
     val tmp = new Path(s"$dir/.stage-$tag")
     df.write.mode("overwrite").parquet(tmp.toString)
     fs.mkdirs(new Path(s"$dir/$DataDir"))
-    val moved = fs.listStatus(tmp).toSeq
-      .filter(st => st.isFile && st.getPath.getName.startsWith("part-"))
-      .sortBy(_.getPath.getName)
+    val moved = GraftMeta.dataFiles(fs, tmp)
       .zipWithIndex.map { case (st, i) =>
         val name = s"$tag-$i.parquet"
         require(fs.rename(st.getPath, new Path(s"$dir/$DataDir/$name")),
@@ -1405,9 +1400,7 @@ object ActionLog {
     }
     val tag = "c" + java.util.UUID.randomUUID().toString.replace("-", "").take(10)
     fs.mkdirs(new Path(s"$dir/$DataDir"))
-    val moved = fs.listStatus(new Path(stageDir)).toSeq
-      .filter(st => st.isFile && st.getPath.getName.startsWith("part-"))
-      .sortBy(_.getPath.getName)
+    val moved = GraftMeta.dataFiles(fs, new Path(stageDir))
       .zipWithIndex.map { case (st, i) =>
         val name = s"$tag-$i.parquet"
         require(fs.rename(st.getPath, new Path(s"$dir/$DataDir/$name")),

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.hadoop.fs.Path
 import graft.functions.{Bloom, BloomBuild}
+import graft.source.GraftMeta
 
 /** Per-file Bloom-filter index — Delta's public bloom-filter-index design
   * next to the min/max skipping sidecar ([[DataSkipping]]): a point lookup
@@ -42,27 +43,7 @@ object BloomIndex {
     // independent metadata round-trips — bounded-parallel so sizing a
     // many-file build doesn't serialize one footer open per file (r18
     // verdict #4, same discipline as ActionLog.addLines)
-    graft.source.GraftMeta.footerRows(spark, paths).foldLeft(0L)(math.max)
-
-  private def visibleFiles(spark: SparkSession, dir: Path): Seq[Path] = {
-    val all = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .listStatus(dir).toSeq
-    // the listing is intentionally FLAT (every writer here emits a flat
-    // data dir); a nested/partitioned layout would make this return an
-    // empty set while the build pass still reads the nested files —
-    // sizeBits would floor and every probe would admit every file, a
-    // silent selectivity cliff. Refuse loudly instead (r18 advisory).
-    val nested = all.filter(st => st.isDirectory &&
-      !st.getPath.getName.startsWith("_") &&
-      !st.getPath.getName.startsWith("."))
-    require(nested.isEmpty,
-      s"BloomIndex($dir): nested data subdirectories are not supported — " +
-        s"the flat-listing index would silently saturate: " +
-        nested.map(_.getPath.getName).take(3).mkString(", "))
-    all.filter(st => st.isFile && !st.getPath.getName.startsWith("_") &&
-        !st.getPath.getName.startsWith("."))
-      .map(_.getPath)
-  }
+    GraftMeta.footerRows(spark, paths).foldLeft(0L)(math.max)
 
   /** Evaluate `xxhash64(value)` for literal probe values DRIVER-SIDE —
     * the same engine hash expression, constant-folded locally instead of
@@ -84,7 +65,13 @@ object BloomIndex {
       bitsPerKey: Int = 10): Unit = {
     val data = spark.read.parquet(dataDir)
       .select(input_file_name().as("file"), xxhash64(col(column)).as("h"))
-    val maxRows = footerMaxRows(spark, visibleFiles(spark, new Path(dataDir)))
+    // sized from the flat listing, which refuses a nested (partitioned)
+    // layout: the build pass would still read the nested files while the
+    // filter sized from none, so every probe would admit every file — a
+    // silent selectivity cliff (r18 advisory)
+    val dd = new Path(dataDir)
+    val maxRows = footerMaxRows(spark, GraftMeta.dataFiles(
+      dd.getFileSystem(spark.sparkContext.hadoopConfiguration), dd).map(_.getPath))
     val numBits = Bloom.sizeBits(maxRows, bitsPerKey)
     val build = udaf(new BloomBuild(numBits, Probes),
       org.apache.spark.sql.Encoders.scalaLong)
@@ -251,9 +238,7 @@ object BloomIndex {
       if (!fs.exists(oldSide)) Map.empty
       else spark.read.parquet(oldSide.toString).collect()
         .map(r => new Path(r.getString(0)).getName -> r).toMap
-    val dataFiles = fs.listStatus(new Path(toDir)).toSeq
-      .filter(st => st.isFile && !st.getPath.getName.startsWith("_") &&
-        !st.getPath.getName.startsWith("."))
+    val dataFiles = GraftMeta.dataFiles(fs, new Path(toDir))
     val (carry, rebuild) = dataFiles.partition { st =>
       oldEntries.contains(st.getPath.getName) && {
         val from = new Path(fromDir, st.getPath.getName)
@@ -301,9 +286,7 @@ object BloomIndex {
     // sidecar size ≈ data-file count — one driver metadata listing
     val dd = new Path(dataDir)
     val fs = dd.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val nData = fs.listStatus(dd).count(st => st.isFile &&
-      !st.getPath.getName.startsWith("_") &&
-      !st.getPath.getName.startsWith("."))
+    val nData = GraftMeta.dataFiles(fs, dd).size
     if (nData <= driverProbeMaxFiles(spark)) {
       // small index: bounded collect, no extra aggregation stage
       val side = spark.read

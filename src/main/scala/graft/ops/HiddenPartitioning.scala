@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.source.GraftMeta
 
 /** HIDDEN PARTITIONING — Iceberg's published design: the table is laid out
   * by a TRANSFORM of a data column (`day(ts)`), the user only ever filters
@@ -30,13 +31,11 @@ object HiddenPartitioning {
     df.withColumn(PartCol, date_format(col(tsCol), "yyyy-MM-dd"))
       .write.partitionBy(PartCol).mode("overwrite").parquet(dir)
 
-  private def listDays(spark: SparkSession, dir: String): Seq[(String, String)] = {
+  private def partitions(spark: SparkSession, dir: String,
+      partCol: String): Seq[(String, org.apache.hadoop.fs.Path)] = {
     val root = new org.apache.hadoop.fs.Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.listStatus(root).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith(s"$PartCol="))
-      .map(st => st.getPath.getName.stripPrefix(s"$PartCol=") -> st.getPath.toString)
-      .sortBy(_._1)
+    GraftMeta.partitionDirs(
+      root.getFileSystem(spark.sparkContext.hadoopConfiguration), root, partCol)
   }
 
   /** Inclusive-projection range read: `[fromTs, toTs]` (ISO-8601 local
@@ -48,9 +47,9 @@ object HiddenPartitioning {
     */
   def readDailyRange(spark: SparkSession, dir: String, tsCol: String,
       fromTs: String, toTs: String): (DataFrame, Int, Int) = {
-    val days = listDays(spark, dir)
+    val days = partitions(spark, dir, PartCol)
     val (lo, hi) = (fromTs.take(10), toTs.take(10))
-    val keep = days.collect { case (d, p) if d >= lo && d <= hi => p }
+    val keep = days.collect { case (d, p) if d >= lo && d <= hi => p.toString }
     require(keep.nonEmpty,
       s"readDailyRange($dir): no partitions in [$lo, $hi] — nothing to read")
     val df = spark.read.option("basePath", dir).parquet(keep: _*)
@@ -68,10 +67,7 @@ object HiddenPartitioning {
     */
   def bucketRangeDirs(spark: SparkSession, dir: String,
       partPrefix: String): (Int, Int) = {
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val n = fs.listStatus(root).count(st =>
-      st.isDirectory && st.getPath.getName.startsWith(s"$partPrefix="))
+    val n = partitions(spark, dir, partPrefix).size
     (n, n)
   }
 }

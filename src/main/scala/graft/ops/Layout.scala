@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.hadoop.fs.Path
+import graft.source.GraftMeta
 
 /** Physical-layout helpers: bucketing for co-located joins.
   *
@@ -118,7 +119,7 @@ object Layout {
   def compact(spark: SparkSession, path: String, targetBytes: Long): (Int, Int) = {
     val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val entries = fs.listStatus(new Path(path))
-      .filter(st => !st.getPath.getName.startsWith("_") && !st.getPath.getName.startsWith("."))
+      .filterNot(st => GraftMeta.hidden(st.getPath.getName))
     val subDirs = entries.filter(_.isDirectory)
     val dataFiles = entries.filter(_.isFile)
     // A Hive-partitioned directory (the layout streaming sinks produce) has
@@ -142,9 +143,7 @@ object Layout {
         // delete it; coalesce (not repartition) keeps the rewrite shuffle-free
         val df = spark.read.parquet(path).localCheckpoint().coalesce(want)
         Upsert.snapshotWrite(df, path)
-        val after = fs.listStatus(new Path(path))
-          .count(st => st.isFile && !st.getPath.getName.startsWith("_"))
-        (before, after)
+        (before, GraftMeta.dataFiles(fs, new Path(path)).size)
       }
     }
   }
@@ -169,8 +168,7 @@ object Layout {
     val cur = VersionedTable.currentVersion(spark, dir).getOrElse(
       sys.error(s"binPackVersioned($dir): no complete snapshot"))
     val live = VersionedTable.verDir(dir, cur)
-    val files = fs.listStatus(live).toSeq.filter(st => st.isFile &&
-      !st.getPath.getName.startsWith("_") && !st.getPath.getName.startsWith("."))
+    val files = GraftMeta.dataFiles(fs, live)
     val (small, big) = files.partition(_.getLen < smallBytes)
     if (small.size < 2) return (cur, 0, files.size)
     val want = math.max(1,
@@ -178,7 +176,7 @@ object Layout {
     val next = VersionedTable.stageWith(spark, dir) { vd =>
       spark.read.parquet(small.map(_.getPath.toString): _*).coalesce(want)
         .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(vd.toString)
-      VersionedTable.carry(spark, big, vd)
+      VersionedTable.carry(spark, big.map(_.getPath), vd)
     }
     VersionedTable.publish(spark, dir, next)
     (next, small.size, big.size)

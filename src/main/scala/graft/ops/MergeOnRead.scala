@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.hadoop.fs.Path
+import graft.source.GraftMeta
 
 /** Merge-on-read deletes — the other half of the delete design space.
   * q182's [[VersionedTable.deleteRange]] is copy-on-write: the delete pays
@@ -74,12 +75,7 @@ object MergeOnRead {
     val p = new Path(s"$dir/$TombstoneDir")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) return 0
-    // same visibility filter as dataFiles(): both `_`- and `.`-prefixed names
-    // are bookkeeping (SUCCESS markers, CRC sidecars, staging temp files),
-    // not tombstone files — counting them would inflate the fold count on
-    // filesystems that surface hidden files in listStatus
-    val n = fs.listStatus(p).count(st => st.isFile &&
-      !st.getPath.getName.startsWith("_") && !st.getPath.getName.startsWith("."))
+    val n = GraftMeta.dataFiles(fs, p).size
     val folded = read(spark, dir, keyCol).localCheckpoint() // cut lineage off the old files
     Upsert.snapshotWrite(folded, s"$dir/$DataDir")
     fs.delete(p, true)
@@ -162,8 +158,7 @@ object MergeOnRead {
     val p = new Path(s"$dir/$PosDeleteDir")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) return 0
-    val n = fs.listStatus(p).count(st => st.isFile &&
-      !st.getPath.getName.startsWith("_") && !st.getPath.getName.startsWith("."))
+    val n = GraftMeta.dataFiles(fs, p).size
     val folded = readPos(spark, dir).localCheckpoint() // cut lineage off the old files
     Upsert.snapshotWrite(folded, s"$dir/$DataDir")
     fs.delete(p, true)
@@ -176,9 +171,7 @@ object MergeOnRead {
   def dataFiles(spark: SparkSession, dir: String): Map[String, (Long, Long)] = {
     val p = new Path(s"$dir/$DataDir")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.listStatus(p)
-      .filter(st => st.isFile && !st.getPath.getName.startsWith("_") &&
-        !st.getPath.getName.startsWith("."))
+    GraftMeta.dataFiles(fs, p)
       .map(st => st.getPath.getName -> (st.getLen, st.getModificationTime)).toMap
   }
 }

@@ -17,13 +17,11 @@ object MetadataTables {
   private def fsOf(spark: SparkSession, dir: String) =
     new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
+  // a version dir's flat data files; a hive-partitioned version (a
+  // PartitionOverwrite/PartitionEvolution table) is refused, not counted empty
   private def dataFiles(fs: org.apache.hadoop.fs.FileSystem,
       vd: Path): Seq[(String, Long)] =
-    if (!fs.exists(vd)) Seq.empty
-    else fs.listStatus(vd).toSeq
-      .filter(st => st.isFile && !st.getPath.getName.startsWith("_") &&
-        !st.getPath.getName.startsWith("."))
-      .map(st => st.getPath.getName -> st.getLen)
+    graft.source.GraftMeta.dataFiles(fs, vd).map(st => st.getPath.getName -> st.getLen)
 
   /** One row per retained complete version at or below the live pointer:
     * (version, commit_ts, n_files, bytes, has_capture, metadata_only).

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.hadoop.fs.Path
+import graft.source.GraftMeta
 import java.nio.charset.StandardCharsets
 
 /** Partition-spec evolution — Iceberg's public design on the `_v-N` layout:
@@ -173,10 +174,8 @@ object PartitionEvolution {
       version: Long): Seq[(Long, Spec, Path)] = {
     val fs = fsOf(spark, dir)
     chain(spark, dir, version).flatMap { case (v, spec) =>
-      val dd = new Path(VersionedTable.verDir(dir, v), DataName)
-      fs.listStatus(dd).toSeq
-        .filter(st => st.isDirectory && st.getPath.getName.startsWith("p="))
-        .map(st => (v, spec, st.getPath))
+      GraftMeta.partitionDirs(fs, new Path(VersionedTable.verDir(dir, v), DataName), "p")
+        .map { case (_, p) => (v, spec, p) }
     }
   }
 

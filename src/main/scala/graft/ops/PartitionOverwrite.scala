@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.hadoop.fs.Path
+import graft.source.GraftMeta
 
 /** Dynamic partition overwrite — Spark's `partitionOverwriteMode=dynamic`
   * and Delta's `replaceWhere`, on the `_v-N` layout: a batch replaces ONLY
@@ -62,19 +63,16 @@ object PartitionOverwrite {
     val next = VersionedTable.stageWith(spark, dir)(vd =>
       df.write.mode(SaveMode.Overwrite).partitionBy(partCol).parquet(vd.toString))
     val vd = VersionedTable.verDir(dir, next)
-    val replaced = fs.listStatus(vd).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith(s"$partCol="))
-      .map(_.getPath.getName)
-    require(replaced.map(_.stripPrefix(s"$partCol=")).toSet == incoming,
+    val replaced = GraftMeta.partitionDirs(fs, vd, partCol).map(_._1)
+    require(replaced.toSet == incoming,
       s"PartitionOverwrite: written dirs $replaced != incoming $incoming")
     // carry untouched partition dirs as raw copies (metadata adds in a
     // log-based format; dir-level copies on plain directories)
-    val carried = fs.listStatus(live).toSeq.filter(st => st.isDirectory &&
-      st.getPath.getName.startsWith(s"$partCol=") &&
-      !replaced.contains(st.getPath.getName))
+    val carried = GraftMeta.partitionDirs(fs, live, partCol)
+      .collect { case (v, p) if !replaced.contains(v) => p }
     VersionedTable.carry(spark, carried, vd)
     VersionedTable.publish(spark, dir, next)
-    (next, replaced.sorted, carried.size)
+    (next, replaced.map(v => s"$partCol=$v"), carried.size)
   }
 
   /** Read the live snapshot (partition column rediscovered from dirs). */

@@ -389,12 +389,11 @@ object VersionedTable {
     * delete and partition overwrite share. The copies are independent, so
     * they run bounded-parallel, flat in the file count.
     */
-  private[ops] def carry(spark: SparkSession, files: Seq[org.apache.hadoop.fs.FileStatus],
-      vd: Path): Unit = {
+  private[ops] def carry(spark: SparkSession, files: Seq[Path], vd: Path): Unit = {
     val fs = fsOf(spark, vd.toString)
-    graft.ParallelActions.mapOrdered(files) { st =>
-      org.apache.hadoop.fs.FileUtil.copy(fs, st.getPath, fs,
-        new Path(vd, st.getPath.getName), false, spark.sparkContext.hadoopConfiguration)
+    graft.ParallelActions.mapOrdered(files) { f =>
+      org.apache.hadoop.fs.FileUtil.copy(fs, f, fs,
+        new Path(vd, f.getName), false, spark.sparkContext.hadoopConfiguration)
     }
   }
 
@@ -433,8 +432,8 @@ object VersionedTable {
       // carry the untouched files in as raw byte copies: at 100 TB the carry
       // set is nearly the whole table (a surgical delete rewrites a handful
       // of band files)
-      carry(spark, GraftMeta.dataFiles(fs, live)
-        .filterNot(st => affectedNames(st.getPath.getName)), vd)
+      carry(spark, GraftMeta.dataFiles(fs, live).map(_.getPath)
+        .filterNot(f => affectedNames(f.getName)), vd)
       if (statsCols.nonEmpty) DataSkipping.writeStats(spark, vd.toString, statsCols)
     }
     // published like every other commit: the txn map is carried, and the

@@ -3,6 +3,8 @@ package graft.pipeline
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.unsafe.types.UTF8String
@@ -284,8 +286,8 @@ final class EodPipeline(warehouse: String, minTickers: Long = 100L) {
     val newSecs = SurrogateKeys.assignLocal(
       merge.keySet.map(UTF8String.fromString).filterNot(known),
       dimSec0.map(_.getLong(0)).maxOption.getOrElse(0L))
-    appendDim(spark, dimSecurityPath, Schemas.dimSecurity, dimSec0,
-      newSecs.map { case (id, sym) => InternalRow(id, sym) })
+    val secDelta = newSecs.map { case (id, sym) => InternalRow(id, sym) }
+    appendDim(spark, dimSecurityPath, Schemas.dimSecurity, dimSec0, secDelta)
 
     val dimDate0 = VersionedTable.readRows(spark, dimDatePath, Schemas.dimDate)
     val dateRow = DateDim.localRow(spark, tradeDate)
@@ -293,11 +295,14 @@ final class EodPipeline(warehouse: String, minTickers: Long = 100L) {
     appendDim(spark, dimDatePath, Schemas.dimDate, dimDate0,
       if (newDate) Seq(dateRow) else Nil)
 
-    // FACT: dims are broadcast-sized; join through surrogate keys.
+    // FACT: dims are broadcast-sized; join through surrogate keys. The
+    // broadcast side is the DIM_SECURITY snapshot just committed, as the
+    // rows the driver already holds: a local relation, never a re-read.
     val coreDay = readDay(spark, corePath, Schemas.core, tradeDate)
-    val dimSecNow = VersionedTable.readOrEmpty(spark, dimSecurityPath, Schemas.dimSecurity)
+    val dimSecDf = org.apache.spark.sql.graftcol.toDataFrame(spark, LocalRelation(
+      DataTypeUtils.toAttributes(Schemas.dimSecurity), dimSec0 ++ secDelta))
     val factBatch = Normalize.withLoadTs(
-      coreDay.join(broadcast(dimSecNow), Seq("symbol"))
+      coreDay.join(broadcast(dimSecDf), Seq("symbol"))
         .withColumn("date_sk", date_format(col("trade_date"), "yyyyMMdd").cast("int")))
       .select(Schemas.factDailyPrice.fieldNames.map(col).toIndexedSeq: _*)
     upsertDatePartition(spark, factPath, tradeDate, factBatch, Seq("security_id", "date_sk"))

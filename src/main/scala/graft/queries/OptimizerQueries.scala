@@ -3295,10 +3295,9 @@ object OptimizerQueries {
       s.sql(s"ALTER TABLE $cat.m RENAME COLUMN nk TO region_key") // v2
       val fsys = new org.apache.hadoop.fs.Path(root)
         .getFileSystem(s.sparkContext.hadoopConfiguration)
-      val v2Names = fsys.listStatus(VT.verDir(s"$root/m", 2L))
-        .map(_.getPath.getName).toSet
-      require(!v2Names.exists(_.startsWith("part-")),
-        s"q315: the RENAME must be metadata-only, found $v2Names")
+      val v2Data = graft.source.GraftMeta.dataFiles(fsys, VT.verDir(s"$root/m", 2L))
+      require(v2Data.isEmpty,
+        s"q315: the RENAME must be metadata-only, found ${v2Data.map(_.getPath.getName)}")
       require(s.sql(s"SELECT region_key FROM $cat.m").count() == cust.count(),
         "q315: the renamed column must read through plain SQL")
       // ADD COLUMN ... DEFAULT: metadata-only; the typed read renders the

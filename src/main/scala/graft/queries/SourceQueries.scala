@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.ops.{Dedup, Diagnostics, Normalize, Quality}
-import graft.source.EodSource
+import graft.source.{EodSource, GraftMeta}
 
 /** Typed-contract row for the events table (SURVEY §2.8 V6): required keys /
   * types are enforced by the Encoder at compile+analysis time — the Spark
@@ -470,8 +470,7 @@ object SourceQueries {
         .write.mode("overwrite").parquet(path)
       val fs = new org.apache.hadoop.fs.Path(path)
         .getFileSystem(s.sparkContext.hadoopConfiguration)
-      val bytes = fs.listStatus(new org.apache.hadoop.fs.Path(path))
-        .filter(st => st.isFile && !st.getPath.getName.startsWith("_"))
+      val bytes = GraftMeta.dataFiles(fs, new org.apache.hadoop.fs.Path(path))
         .map(_.getLen).sum
       val (before, after) = graft.ops.Layout.compact(s, path, targetBytes = bytes / 4 + 1)
       require(before == 40 && after <= 4,
@@ -678,8 +677,7 @@ object SourceQueries {
       def dataFiles(p: String): Int = {
         val hp = new org.apache.hadoop.fs.Path(p)
         val fs = hp.getFileSystem(s.sparkContext.hadoopConfiguration)
-        fs.listStatus(hp).count(st => st.isFile &&
-          !st.getPath.getName.startsWith("_") && !st.getPath.getName.startsWith("."))
+        GraftMeta.dataFiles(fs, hp).size
       }
       val v1Files = dataFiles(VersionedTable.liveDir(s, path))
       // OPTIMIZE: Z-order on (custkey, totalprice), 8 target files, stats on
@@ -984,9 +982,7 @@ object SourceQueries {
       def files(p: String) = {
         val fs = new org.apache.hadoop.fs.Path(p)
           .getFileSystem(s.sparkContext.hadoopConfiguration)
-        fs.listStatus(new org.apache.hadoop.fs.Path(p))
-          .filter(st => st.isFile && !st.getPath.getName.startsWith("_") &&
-            !st.getPath.getName.startsWith("."))
+        GraftMeta.dataFiles(fs, new org.apache.hadoop.fs.Path(p))
           .map(st => st.getPath.getName -> st.getLen).toMap
       }
       val v1Files = files(VersionedTable.liveDir(s, path))
@@ -2870,9 +2866,7 @@ object SourceQueries {
       val fsys = new org.apache.hadoop.fs.Path(root)
         .getFileSystem(s.sparkContext.hadoopConfiguration)
       def dataFiles(v: Long) =
-        fsys.listStatus(VersionedTable.verDir(root, v))
-          .filter(st => st.isFile && !st.getPath.getName.startsWith("_") &&
-            !st.getPath.getName.startsWith("."))
+        GraftMeta.dataFiles(fsys, VersionedTable.verDir(root, v))
           .map(st => st.getPath.getName -> st.getLen).toMap
       val base = Tables.load(s, dir, "orders")
         .select(col("o_orderkey").cast("long").as("okey"),
@@ -3555,9 +3549,8 @@ object SourceQueries {
       val (cbDirs, totalDirs) = PE.selectDirsEq(s, root, "cb", 3L)
       val cbE1 = cbDirs.count(_.contains("_v-00000001"))
       val cbE2 = cbDirs.count(_.contains("_v-00000003"))
-      val e2Total = fsys.listStatus(new org.apache.hadoop.fs.Path(
-        VersionedTable.verDir(root, 3L), "data"))
-        .count(st => st.isDirectory && st.getPath.getName.startsWith("p="))
+      val e2Total = GraftMeta.partitionDirs(fsys, new org.apache.hadoop.fs.Path(
+        VersionedTable.verDir(root, 3L), "data"), "p").size
       require(cbE1 == 1, s"q232: cb=3 must prune epoch 1 to one dir, got $cbE1")
       require(cbE2 == e2Total,
         s"q232: the bucketed epoch cannot prune a cb probe ($cbE2/$e2Total)")
@@ -3578,9 +3571,8 @@ object SourceQueries {
       val (okDirs, _) = PE.selectDirsEq(s, root, "okey", someKey)
       val okE1 = okDirs.count(_.contains("_v-00000001"))
       val okE2 = okDirs.count(_.contains("_v-00000003"))
-      val e1Total = fsys.listStatus(new org.apache.hadoop.fs.Path(
-        VersionedTable.verDir(root, 1L), "data"))
-        .count(st => st.isDirectory && st.getPath.getName.startsWith("p="))
+      val e1Total = GraftMeta.partitionDirs(fsys, new org.apache.hadoop.fs.Path(
+        VersionedTable.verDir(root, 1L), "data"), "p").size
       require(okE2 == 1, s"q232: an okey probe must prune epoch 2 to one bucket, got $okE2")
       require(okE1 == e1Total,
         s"q232: the identity epoch cannot prune an okey probe ($okE1/$e1Total)")
@@ -4067,8 +4059,7 @@ object SourceQueries {
       val mixed = o.filter(col("okey") % 20 =!= 0).coalesce(1)
         .unionByName(o.filter(col("okey") % 20 === 0).repartition(8))
       VersionedTable.write(mixed, root) // v1
-      val before = fsys.listStatus(VersionedTable.verDir(root, 1L))
-        .filter(st => st.isFile && !st.getPath.getName.startsWith("_"))
+      val before = GraftMeta.dataFiles(fsys, VersionedTable.verDir(root, 1L))
         .map(st => st.getPath.getName -> st.getLen).toMap
       require(before.size == 9, s"q244: expected 9 files, got ${before.size}")
       val bigName = before.maxBy(_._2)._1
@@ -4077,8 +4068,7 @@ object SourceQueries {
         Layout.binPackVersioned(s, root, threshold)
       require(v2 == 2L && rewritten == 8 && carried == 1,
         s"q244: expected 8 rewritten + 1 carried, got ($rewritten, $carried)")
-      val after = fsys.listStatus(VersionedTable.verDir(root, 2L))
-        .filter(st => st.isFile && !st.getPath.getName.startsWith("_"))
+      val after = GraftMeta.dataFiles(fsys, VersionedTable.verDir(root, 2L))
         .map(st => st.getPath.getName -> st.getLen).toMap
       require(after.contains(bigName) && after(bigName) == before(bigName),
         "q244: the big file must carry byte-identically")

@@ -120,16 +120,7 @@ private[source] class AggPushScan(path: String, base: StructType,
   override def description(): String =
     s"AggPushScan [$path] pushed=${pushed.isDefined}"
 
-  private lazy val parts: Array[InputPartition] = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(new org.apache.hadoop.conf.Configuration())
-    fs.listStatus(root).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("k="))
-      .map(st => st.getPath.getName.stripPrefix("k=").toInt -> st.getPath.toString)
-      .sortBy(_._1)
-      .map { case (k, dir) => KeyBucketPartition(k, dir): InputPartition }
-      .toArray
-  }
+  private lazy val parts: Array[InputPartition] = KeyBucketPartition.all(path)
 
   override def planInputPartitions(): Array[InputPartition] = parts
 
@@ -155,10 +146,7 @@ private[source] class AggPushReaderFactory(specs: Seq[AggSpec], grouped: Boolean
       private def compute(): InternalRow = {
         val dir = new org.apache.hadoop.fs.Path(p.dir)
         val fs = dir.getFileSystem(new org.apache.hadoop.conf.Configuration())
-        val files = fs.listStatus(dir).toSeq
-          .filter(st => st.isFile && !st.getPath.getName.startsWith("_") &&
-            !st.getPath.getName.startsWith("."))
-          .map(_.getPath).sortBy(_.getName)
+        val files = GraftMeta.dataFiles(fs, dir).map(_.getPath)
         var n = 0L
         val mins = Array.fill(specs.length)(Long.MaxValue)
         val maxs = Array.fill(specs.length)(Long.MinValue)

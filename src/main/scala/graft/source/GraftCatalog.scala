@@ -181,10 +181,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
           spark2.sparkContext.hadoopConfiguration)
         (StructType(Seq(StructField("file", StringType, nullable = false),
           StructField("bytes", LongType, nullable = false))),
-          fs.listStatus(new Path(live)).toSeq
-            .filter(st => st.isFile && !st.getPath.getName.startsWith("_") &&
-              !st.getPath.getName.startsWith("."))
-            .sortBy(_.getPath.getName)
+          GraftMeta.dataFiles(fs, new Path(live))
             .map(st => InternalRow(
               UTF8String.fromString(st.getPath.getName), st.getLen)))
       case other => sys.error(
@@ -808,10 +805,7 @@ private[source] class GraftDvSqlScan(versionDir: String,
         }
       }
     }
-    fs.listStatus(p).toSeq
-      .filter(st => st.isFile && !st.getPath.getName.startsWith("_") &&
-        !st.getPath.getName.startsWith("."))
-      .sortBy(_.getPath.getName)
+    GraftMeta.dataFiles(fs, p)
       .map { st =>
         val n = st.getPath.getName
         DvFilePartition(st.getPath.toString,
@@ -897,11 +891,7 @@ private[source] class GraftMappedSqlScan(dataDir: String, schema: StructType,
     s"GraftMappedSqlScan [$dataDir] ReadSchema: ${schema.catalogString}"
   private lazy val dataFiles: Seq[org.apache.hadoop.fs.FileStatus] = {
     val p = new Path(dataDir)
-    val fs = p.getFileSystem(SharedHadoopConf.get)
-    fs.listStatus(p).toSeq
-      .filter(st => st.isFile && !st.getPath.getName.startsWith("_") &&
-        !st.getPath.getName.startsWith("."))
-      .sortBy(_.getPath.getName)
+    GraftMeta.dataFiles(p.getFileSystem(SharedHadoopConf.get), p)
   }
   override def planInputPartitions(): Array[InputPartition] =
     dataFiles.map(st =>
@@ -1234,10 +1224,7 @@ private[source] class GraftSqlScan(versionDir: String, schema: StructType,
   override def estimateStatistics(): Statistics = {
     val p = new Path(versionDir)
     val fs = p.getFileSystem(SharedHadoopConf.get)
-    val bytes = fs.listStatus(p).toSeq
-      .filter(st => st.isFile && !st.getPath.getName.startsWith("_") &&
-        !st.getPath.getName.startsWith("."))
-      .map(_.getLen).sum
+    val bytes = GraftMeta.dataFiles(fs, p).map(_.getLen).sum
     new Statistics {
       override def sizeInBytes(): java.util.OptionalLong =
         java.util.OptionalLong.of(bytes)
@@ -1247,11 +1234,7 @@ private[source] class GraftSqlScan(versionDir: String, schema: StructType,
   }
   override def planInputPartitions(): Array[InputPartition] = {
     val p = new Path(versionDir)
-    val fs = p.getFileSystem(SharedHadoopConf.get)
-    fs.listStatus(p).toSeq
-      .filter(st => st.isFile && !st.getPath.getName.startsWith("_") &&
-        !st.getPath.getName.startsWith("."))
-      .sortBy(_.getPath.getName)
+    GraftMeta.dataFiles(p.getFileSystem(SharedHadoopConf.get), p)
       .map(st => CdfFilePartition(0L, st.getPath.toString): InputPartition)
       .toArray
   }

@@ -53,17 +53,7 @@ private[source] class KeyBucketScan(path: String, schema: StructType)
   override def toBatch: Batch = this
   override def description(): String = s"KeyBucketScan [$path]"
 
-  // one input partition per k=NN directory, sorted by key for determinism
-  private lazy val parts: Array[InputPartition] = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(new org.apache.hadoop.conf.Configuration())
-    fs.listStatus(root).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("k="))
-      .map(st => st.getPath.getName.stripPrefix("k=").toInt -> st.getPath.toString)
-      .sortBy(_._1)
-      .map { case (k, dir) => KeyBucketPartition(k, dir): InputPartition }
-      .toArray
-  }
+  private lazy val parts: Array[InputPartition] = KeyBucketPartition.all(path)
 
   override def planInputPartitions(): Array[InputPartition] = parts
 
@@ -80,16 +70,26 @@ private[source] case class KeyBucketPartition(k: Int, dir: String)
   override def partitionKey(): InternalRow = InternalRow(k)
 }
 
+private[source] object KeyBucketPartition {
+  /** One input partition per `k=NN` dir of `path`, sorted by key for
+    * determinism.
+    */
+  def all(path: String): Array[InputPartition] = {
+    val root = new org.apache.hadoop.fs.Path(path)
+    GraftMeta.partitionDirs(
+        root.getFileSystem(new org.apache.hadoop.conf.Configuration()), root, "k")
+      .map { case (k, dir) => KeyBucketPartition(k.toInt, dir.toString) }
+      .sortBy(_.k).toArray[InputPartition]
+  }
+}
+
 private[source] class KeyBucketReaderFactory extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[KeyBucketPartition]
     new PartitionReader[InternalRow] {
       private val dir = new org.apache.hadoop.fs.Path(p.dir)
       private val fs = dir.getFileSystem(new org.apache.hadoop.conf.Configuration())
-      private val files = fs.listStatus(dir).toSeq
-        .filter(st => st.isFile && !st.getPath.getName.startsWith("_") &&
-          !st.getPath.getName.startsWith("."))
-        .map(_.getPath).sortBy(_.getName).iterator
+      private val files = GraftMeta.dataFiles(fs, dir).map(_.getPath).iterator
       private var lines: Iterator[String] = Iterator.empty
       private var reader: java.io.BufferedReader = _
       private var row: InternalRow = _

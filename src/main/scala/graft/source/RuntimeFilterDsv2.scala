@@ -59,16 +59,7 @@ private[source] class RuntimeFilterScan(path: String, schema: StructType)
       case EqualTo("k", v) => Set(v.asInstanceOf[Number].intValue)
     }
 
-  private lazy val allParts: Array[InputPartition] = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(new org.apache.hadoop.conf.Configuration())
-    fs.listStatus(root).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("k="))
-      .map(st => st.getPath.getName.stripPrefix("k=").toInt -> st.getPath.toString)
-      .sortBy(_._1)
-      .map { case (k, dir) => KeyBucketPartition(k, dir): InputPartition }
-      .toArray
-  }
+  private lazy val allParts: Array[InputPartition] = KeyBucketPartition.all(path)
 
   override def planInputPartitions(): Array[InputPartition] = keep match {
     case None => allParts

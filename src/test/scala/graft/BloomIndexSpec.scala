@@ -44,6 +44,17 @@ class BloomIndexSpec extends AnyFunSuite {
     assert(admitted <= 16, s"absent keys admitted $admitted/160 files")
   }
 
+  test("a hive-partitioned data dir is refused loudly, not indexed as empty") {
+    // a flat sizing listing would see no files while the build pass reads
+    // the nested ones: every probe would then admit every file
+    val dir = TestSpark.tmpDir("bi") + "/d"
+    spark.range(0, 100).select(col("id").as("k"), (col("id") % 2).as("g"))
+      .write.partitionBy("g").parquet(dir)
+    val e = intercept[IllegalArgumentException](BloomIndex.writeIndex(spark, dir, "k"))
+    assert(e.getMessage.contains("nested data subdirectories"), e.getMessage)
+    assert(!new java.io.File(dir, "_bloom").exists(), "no sidecar was written")
+  }
+
   test("the sidecar is invisible to a plain read of the data dir") {
     val dir = layout(500, 4)
     assert(spark.read.parquet(dir).count() === 500L)

@@ -331,6 +331,35 @@ class EodPipelineSpec extends AnyFunSuite {
     }
   }
 
+  test("no day reads a hidden dim dir: Spark logs no 'All paths were ignored' warning") {
+    spark.sparkContext // the session's start installs Spark's log4j profile
+    val logger = org.apache.logging.log4j.LogManager.getLogger(
+      "org.apache.spark.sql.execution.datasources.DataSource")
+      .asInstanceOf[org.apache.logging.log4j.core.Logger]
+    assert(logger.isWarnEnabled, "the DataSource logger emits warnings")
+    val warned = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val appender = new org.apache.logging.log4j.core.appender.AbstractAppender("ignored-paths",
+        null, null, true, org.apache.logging.log4j.core.config.Property.EMPTY_ARRAY) {
+      override def append(e: org.apache.logging.log4j.core.LogEvent): Unit =
+        warned.add(e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    logger.addAppender(appender)
+    try {
+      val bronze = TestSpark.tmpDir("bronze13")
+      val pipe = new EodPipeline(TestSpark.tmpDir("wh13"), minTickers = 1)
+      pipe.runDate(spark, day(bronze, "2026-08-10", Seq("AAPL", "MSFT")), "2026-08-10")
+      pipe.runDate(spark, day(bronze, "2026-08-11", Seq("AAPL", "GOOG")), "2026-08-11")
+      val reload = pipe.runDate(spark,
+        day(bronze, "2026-08-11", Seq("GOOG", "AAPL"), px = 2, file = "reload"), "2026-08-11")
+      assert(reload.rowParity && reload.factRows === 2, reload.toString)
+    } finally {
+      logger.removeAppender(appender)
+      appender.stop()
+    }
+    assert(!warned.asScala.exists(_.contains("All paths were ignored")), warned.asScala.mkString("\n"))
+  }
+
   test("history independence: day 40 launches the jobs and listings of day 5") {
     val bronze = TestSpark.tmpDir("bronze8")
     val pipe = new EodPipeline(TestSpark.tmpDir("wh8"), minTickers = 1)

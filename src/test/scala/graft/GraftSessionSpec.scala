@@ -48,15 +48,7 @@ class GraftSessionSpec extends AnyFunSuite {
   }
 
   test("GraftSession.scala is the only SparkSession builder in the sources") {
-    import scala.jdk.CollectionConverters._
-    val roots = Seq("src/main/scala", "src/test/scala").map(java.nio.file.Paths.get(_))
-    assert(roots.forall(java.nio.file.Files.isDirectory(_)),
-      s"run from the repository root (cwd ${sys.props("user.dir")})")
-    val builders = roots.flatMap { root =>
-      val walk = java.nio.file.Files.walk(root)
-      try walk.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
-      finally walk.close()
-    }.filter { p =>
+    val builders = TestSpark.sourceFiles(Seq("src/main/scala", "src/test/scala")).filter { p =>
       java.nio.file.Files.readString(p).contains("SparkSession" + ".builder")
     }.map(_.getFileName.toString)
     assert(builders === Seq("GraftSession.scala"))

@@ -16,4 +16,21 @@ object TestSpark {
 
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
+
+  /** The source files under `roots` (relative to the repository root) whose
+    * names end in one of `exts` — the input of the specs that scan the
+    * sources for a pattern.
+    */
+  def sourceFiles(roots: Seq[String], exts: Seq[String] = Seq(".scala"))
+      : List[java.nio.file.Path] = {
+    import scala.jdk.CollectionConverters._
+    val dirs = roots.map(java.nio.file.Paths.get(_))
+    org.scalatest.Assertions.assert(dirs.forall(java.nio.file.Files.isDirectory(_)),
+      s"run from the repository root (cwd ${sys.props("user.dir")})")
+    dirs.toList.flatMap { root =>
+      val walk = java.nio.file.Files.walk(root)
+      try walk.iterator.asScala.filter(p => exts.exists(p.toString.endsWith)).toList
+      finally walk.close()
+    }
+  }
 }

@@ -181,12 +181,19 @@ class VersionedTableSpec extends AnyFunSuite {
     val dir = new Path(TestSpark.tmpDir("vt10"), "t")
     val fs0 = fs(dir.toString)
     assert(GraftMeta.dataFiles(fs0, dir).isEmpty, "a missing dir holds no files")
+    assert(GraftMeta.partitionDirs(fs0, dir, "p").isEmpty, "a missing dir has no partitions")
     Seq((1L, "a")).toDF("k", "v").coalesce(1).write.parquet(dir.toString) // part + _SUCCESS + .crc
     fs0.mkdirs(new Path(dir, "_sidecar"))
     fs0.mkdirs(new Path(dir, ".stage"))
     val names = GraftMeta.dataFiles(fs0, dir).map(_.getPath.getName)
     assert(names.size === 1 && names.head.startsWith("part-"), names)
-    fs0.mkdirs(new Path(dir, "p=1"))
+    assert(GraftMeta.partitionDirs(fs0, dir, "p").isEmpty, "files are not partitions")
+    Seq("p=1", "p=0", "_p=2", ".p=3", "q=4", "_day=2024-01-02").foreach(d => fs0.mkdirs(new Path(dir, d)))
+    fs0.create(new Path(dir, "p=5"), true).close()
+    assert(GraftMeta.partitionDirs(fs0, dir, "p").map { case (v, d) => v -> d.getName } ===
+      Seq("0" -> "p=0", "1" -> "p=1"))
+    // a `_`-named column's partitions are Spark's too: `=` keeps them visible
+    assert(GraftMeta.partitionDirs(fs0, dir, "_day").map(_._1) === Seq("2024-01-02"))
     val e = intercept[IllegalArgumentException](GraftMeta.dataFiles(fs0, dir))
     assert(e.getMessage.contains("nested data subdirectories"))
     // a versioned root that holds bare data files is refused, not read empty
@@ -471,14 +478,8 @@ class VersionedTableSpec extends AnyFunSuite {
 
   test("publish and Occ.finalizePending are the only flip/stamp sites; stageWith the only sweep") {
     import scala.jdk.CollectionConverters._
-    import java.nio.file.{Files, Paths}
-    val root = Paths.get("src/main/scala")
-    assert(Files.isDirectory(root), s"run from the repository root (cwd ${sys.props("user.dir")})")
-    val sources = {
-      val walk = Files.walk(root)
-      try walk.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
-      finally walk.close()
-    }
+    import java.nio.file.Files
+    val sources = TestSpark.sourceFiles(Seq("src/main/scala"))
     val Def = """.*\bdef\s+(\w+).*""".r
     // (file, enclosing def) of every line matching `call` outside its own definition
     def sitesOf(call: String): Seq[String] = sources.flatMap { p =>
@@ -493,5 +494,28 @@ class VersionedTableSpec extends AnyFunSuite {
     assert(sitesOf("""flipPointer\(""") === Seq("Occ.scala:finalizePending", "VersionedTable.scala:publish"))
     assert(sitesOf("""stampCommitTs\(""") === Seq("Occ.scala:finalizePending", "VersionedTable.scala:publish"))
     assert(sitesOf("""listVersions\(fs, dir\)\.filter\(_ > """) === Seq("VersionedTable.scala:stageWith"))
+  }
+
+  test("GraftMeta is the only listing rule for data files and partition dirs") {
+    import java.nio.file.Files
+    // a hidden-name test, a `part-` name test, or a `col=` dir match
+    val Filter = ("""startsWith\("[_.]"\)|startsWith\("part-"\)|""" +
+      """isDirectory\s*&&\s*[\w.]*startsWith\(s?"[^"]*="\)""").r
+    val Def = """\bdef\s+(\w+)""".r
+    // (file, enclosing def) of every match
+    val sites = TestSpark.sourceFiles(Seq("src/main/scala", "src/main/java"), Seq(".scala", ".java"))
+      .flatMap { p =>
+        val text = Files.readString(p)
+        Filter.findAllMatchIn(text).map { m =>
+          val enclosing = Def.findAllMatchIn(text.substring(0, m.start)).map(_.group(1)).toSeq.lastOption
+          s"${p.getFileName}:${enclosing.getOrElse("")}"
+        }
+      }.distinct.sorted
+    assert(sites.contains("GraftMeta.scala:hidden"), sites)
+    // The catalog lists namespaces and tables, not data: a `.`-named dir is a
+    // namespace there. Sweeps that must see every file and the version, txn,
+    // log and branch listings select by their own prefixes and match nothing.
+    assert(sites.filterNot(_.startsWith("GraftMeta.scala:")) ===
+      Seq("GraftCatalog.scala:listNamespaces", "GraftCatalog.scala:listTables"))
   }
 }
