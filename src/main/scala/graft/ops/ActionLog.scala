@@ -24,11 +24,14 @@ import graft.source.GraftMeta
   * write-amplification disaster — the action log is the only design that
   * appends a terabyte to a petabyte table by writing a terabyte.
   *
-  * Commit atomicity: the log record is staged and renamed into its slot
-  * (create-fails-if-present), so version N exists iff its action file
-  * does — a crash mid-data-write leaves orphan part files the next
-  * commit ignores (they are unreferenced by any action). Single-writer;
-  * multi-writer claims compose with [[Occ]]'s protocol unchanged.
+  * Commit atomicity: the log record is CLAIMED into its slot
+  * ([[MetaFile.claim]]: put-if-absent with the record's content visible in
+  * the same step), so version N exists iff its whole action file does — a
+  * crash mid-data-write leaves orphan part files the next commit ignores
+  * (they are unreferenced by any action). Checkpoints and compacted
+  * fragments are claimed the same way; `_last_checkpoint` is a hint moved
+  * with [[MetaFile.replace]]. The single-writer paths fail loudly on an
+  * occupied slot; the optimistic paths retry at the next one.
   *
   * Time travel: `read(dir, asOf = v)` replays only actions ≤ v, so
   * compaction (remove+add in one commit) never breaks older versions —
@@ -151,23 +154,17 @@ object ActionLog {
   private def onParquetPlane(fs: FileSystem, dir: String): Boolean =
     completeParquetCheckpoints(fs, dir, Long.MaxValue).nonEmpty
 
-  /** The `_last_checkpoint` hint, tolerant of a torn/empty pointer file:
-    * `fs.create(overwrite = true)` is not atomic, so a crashed writer can
-    * leave zero bytes — an unreadable hint is treated as ABSENT (the next
-    * checkpoint overwrites it), never an exception that wedges the plane.
+  /** The `_last_checkpoint` hint. Absent (the instant inside its
+    * [[MetaFile.replace]]) or unreadable (a zero-byte file an older
+    * in-place writer could leave) is treated as NO hint — replay finds the
+    * checkpoints itself, and the next checkpoint rewrites the hint — never
+    * an exception that wedges the plane.
     */
-  private def lastCkptHint(fs: FileSystem, dir: String): Option[Long] = {
-    val lc = new Path(s"$dir/$LogDir/$LastCkpt")
-    if (!fs.exists(lc)) None
-    else scala.util.Try(readLines(fs, lc)).toOption
-      .flatMap(_.headOption).flatMap(_.trim.toLongOption)
-  }
+  private def lastCkptHint(fs: FileSystem, dir: String): Option[Long] =
+    MetaFile.read(fs, new Path(s"$dir/$LogDir/$LastCkpt")).flatMap(_.trim.toLongOption)
 
-  private def writeCkptHint(fs: FileSystem, dir: String, v: Long): Unit = {
-    val out = fs.create(new Path(s"$dir/$LogDir/$LastCkpt"), true)
-    try out.write(v.toString.getBytes(StandardCharsets.UTF_8))
-    finally out.close()
-  }
+  private def writeCkptHint(fs: FileSystem, dir: String, v: Long): Unit =
+    MetaFile.replace(fs, new Path(s"$dir/$LogDir/$LastCkpt"), v.toString)
 
   // every action line the log writes fits this one struct; from_json
   // null-pads absent fields, so add/remove/txn parse with a single schema
@@ -202,7 +199,7 @@ object ActionLog {
       paths: Seq[Path], ver: Long): DataFrame = {
     import org.apache.spark.sql.functions.lit
     import spark.implicits._
-    spark.createDataset(paths.flatMap(readLines(fs, _))).toDF("value")
+    spark.createDataset(paths.flatMap(actionLines(fs, _))).toDF("value")
       .withColumn("ver", lit(ver))
   }
 
@@ -363,16 +360,15 @@ object ActionLog {
       .map(_.stripSuffix(".json").toLong).sorted
   }
 
-  private def writeText(fs: FileSystem, p: Path, text: String): Unit = {
-    val out = fs.create(p, false) // create-fails-if-present = the commit claim
-    try out.write(text.getBytes(StandardCharsets.UTF_8)) finally out.close()
-  }
+  /** Claim `p` for a single-writer commit, loud when the slot is taken. */
+  private def claimOrFail(fs: FileSystem, p: Path, text: String): Unit =
+    require(MetaFile.claim(fs, p, text.getBytes(StandardCharsets.UTF_8)),
+      s"ActionLog: $p is already claimed — a concurrent writer holds the slot")
 
-  private def readLines(fs: FileSystem, p: Path): Seq[String] = {
-    val in = fs.open(p)
-    try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
-    finally in.close()
-  }
+  /** The lines of a log record, checkpoint or fragment; loud when absent. */
+  private def actionLines(fs: FileSystem, p: Path): Seq[String] =
+    MetaFile.read(fs, p).getOrElse(throw new java.io.FileNotFoundException(p.toString))
+      .linesIterator.toList
 
   /** Stage `df`'s rows as immutable part files under `data/`, named by the
     * version that adds them. Returns the new file names.
@@ -407,7 +403,7 @@ object ActionLog {
     val fs = fsOf(spark, dir)
     val v = versions(spark, dir).lastOption.getOrElse(0L) + 1L
     val files = stageData(df, dir, v)
-    writeText(fs, logPath(dir, v),
+    claimOrFail(fs, logPath(dir, v),
       addLines(spark, dir, files, statsCol).mkString("\n"))
     v
   }
@@ -532,7 +528,7 @@ object ActionLog {
     val v = versions(spark, dir).lastOption.getOrElse(0L) + 1L
     val (live, _, _) = resolve(spark, dir, v - 1)
     val files = stageData(df.repartition(numFiles), dir, v)
-    writeText(fs, logPath(dir, v),
+    claimOrFail(fs, logPath(dir, v),
       (live.map(f => s"""{"a":"remove","p":"$f"}""") ++
         addLines(spark, dir, files, statsCol)).mkString("\n"))
     v
@@ -567,7 +563,7 @@ object ActionLog {
       s"""{"a":"txn","app":"$a","batch":$b}"""
     }
     if (parts == 1)
-      writeText(fs, ckptPath(dir, v),
+      claimOrFail(fs, ckptPath(dir, v),
         (state.toSeq.map((addLine _).tupled) ++ txnLines).mkString("\n"))
     else {
       val byPart = state.toSeq.groupBy { case (f, _) =>
@@ -576,7 +572,7 @@ object ActionLog {
       (0 until parts).foreach { i =>
         val lines = byPart.getOrElse(i, Seq.empty).map((addLine _).tupled) ++
           (if (i == 0) txnLines else Seq.empty)
-        writeText(fs, ckptPartPath(dir, v, i, parts), lines.mkString("\n"))
+        claimOrFail(fs, ckptPartPath(dir, v, i, parts), lines.mkString("\n"))
       }
     }
     if (lastCkptHint(fs, dir).forall(_ < v)) writeCkptHint(fs, dir, v)
@@ -603,7 +599,7 @@ object ActionLog {
     val outerRemoves = scala.collection.mutable.ArrayBuffer.empty[String]
     val txns = scala.collection.mutable.Map.empty[String, Long]
     have.foreach { v =>
-      readLines(fs, logPath(dir, v)).foreach {
+      actionLines(fs, logPath(dir, v)).foreach {
         case AddStats(p, lo, hi, n) =>
           adds.put(p, Some((lo.toLong, hi.toLong, n.toLong))); ()
         case Add(p) => adds.put(p, None); ()
@@ -614,7 +610,7 @@ object ActionLog {
         case l => sys.error(s"ActionLog.compactLog: bad line at v$v: $l")
       }
     }
-    writeText(fs, compactPath(dir, from, to),
+    claimOrFail(fs, compactPath(dir, from, to),
       (outerRemoves.toSeq.map(f => s"""{"a":"remove","p":"$f"}""") ++
         adds.toSeq.map {
           case (f, Some((lo, hi, n))) =>
@@ -647,14 +643,14 @@ object ActionLog {
     moved
   }
 
-  /** Claim slot `v` atomically WITH its action lines ([[AtomicPut]]): a
+  /** Claim slot `v` WITH its action lines ([[MetaFile.claim]]): a
     * concurrent reader either sees the whole record or no record — never
     * a claimed-but-empty version, which would be a torn commit to any
     * replay racing the claim. False = lost the race.
     */
   private def tryClaim(fs: FileSystem, dir: String, v: Long,
       text: String): Boolean =
-    AtomicPut(fs, logPath(dir, v), text.getBytes(StandardCharsets.UTF_8))
+    MetaFile.claim(fs, logPath(dir, v), text.getBytes(StandardCharsets.UTF_8))
 
   /** OPTIMISTICALLY CONCURRENT APPEND — Delta's commit loop: stage once
     * (writer-unique file names make staging commutative), then claim the
@@ -1047,7 +1043,7 @@ object ActionLog {
         } finally { ckptDf.unpersist(); () }
       } else {
         ckpts(cv).foreach(p =>
-          readLines(fs, p).foreach(applyLine(_, s"ckpt-$cv")))
+          actionLines(fs, p).foreach(applyLine(_, s"ckpt-$cv")))
         handoff(base.size.toLong, s"json checkpoint $cv")
       }
     }
@@ -1070,14 +1066,14 @@ object ActionLog {
       val v = tail(idx)
       compacts.get(v) match {
         case Some(to) =>
-          readLines(fs, compactPath(dir, v, to)).foreach { line =>
+          actionLines(fs, compactPath(dir, v, to)).foreach { line =>
             replayed += 1
             applyLine(line, s"compact-$v-$to")
           }
           idx = tail.indexWhere(_ > to, idx)
           if (idx < 0) idx = tail.size
         case None =>
-          readLines(fs, logPath(dir, v)).foreach { line =>
+          actionLines(fs, logPath(dir, v)).foreach { line =>
             replayed += 1
             applyLine(line, s"v$v")
           }
@@ -1194,7 +1190,7 @@ object ActionLog {
       val refs = scala.collection.mutable.Set.empty[String]
       refs ++= replayState(spark, dir, horizon)._1.keys
       vs.filter(_ > horizon).foreach { v =>
-        readLines(fs, logPath(dir, v)).foreach {
+        actionLines(fs, logPath(dir, v)).foreach {
           case AddStats(p, _, _, _) => refs += p; ()
           case Add(p) => refs += p; ()
           case _ => ()
@@ -1216,7 +1212,7 @@ object ActionLog {
       !completeParquetCheckpoints(fs, dir, horizon).contains(horizon) &&
       !completeCheckpoints(fs, dir, horizon).contains(horizon)) {
       val (state, _, _, txns) = replayState(spark, dir, horizon)
-      writeText(fs, ckptPath(dir, horizon),
+      claimOrFail(fs, ckptPath(dir, horizon),
         (state.toSeq.map {
           case (f, Some((lo, hi, n))) =>
             s"""{"a":"add","p":"$f","lo":$lo,"hi":$hi,"n":$n}"""
@@ -1458,7 +1454,7 @@ object ActionLog {
       val fs = fsOf(spark, dir)
       val v = versions(spark, dir).lastOption.getOrElse(0L) + 1L
       val files = stageData(df, dir, v)
-      writeText(fs, logPath(dir, v),
+      claimOrFail(fs, logPath(dir, v),
         (addLines(spark, dir, files, statsCol) :+
           s"""{"a":"txn","app":"$appId","batch":$batchId}""").mkString("\n"))
       maybeAutoCheckpoint(spark, dir, v)
@@ -1469,23 +1465,24 @@ object ActionLog {
     * stats-carrying append (`_log/_statscol`); later stats appends must
     * agree — mixed-column stats would make every pruning decision wrong.
     */
-  def statsColumn(spark: SparkSession, dir: String): Option[String] = {
-    val fs = fsOf(spark, dir)
-    val p = new Path(s"$dir/$LogDir/_statscol")
-    if (!fs.exists(p)) None else Some(readLines(fs, p).head.trim)
-  }
+  def statsColumn(spark: SparkSession, dir: String): Option[String] =
+    MetaFile.read(fsOf(spark, dir), statsColPath(dir)).map(_.trim)
 
+  private def statsColPath(dir: String): Path = new Path(s"$dir/$LogDir/_statscol")
+
+  /** Put-if-absent, not check-then-create: two concurrent FIRST stats
+    * appends naming different columns must not silently overwrite each
+    * other — the loser re-reads the winner's column and the one-column
+    * require fires exactly as it does for later appends.
+    */
   private def recordStatsColumn(spark: SparkSession, dir: String,
-      c: String): Unit = {
-    val fs = fsOf(spark, dir)
-    statsColumn(spark, dir) match {
-      case Some(existing) => require(existing == c,
-        s"ActionLog($dir): stats column is '$existing', cannot switch to '$c'")
-      case None =>
-        val out = fs.create(new Path(s"$dir/$LogDir/_statscol"), true)
-        try out.write(c.getBytes(StandardCharsets.UTF_8)) finally out.close()
-    }
-  }
+      c: String): Unit =
+    statsColumn(spark, dir).orElse {
+      val claimed = MetaFile.claim(fsOf(spark, dir), statsColPath(dir),
+        c.getBytes(StandardCharsets.UTF_8))
+      if (claimed) None else statsColumn(spark, dir)
+    }.foreach(existing => require(existing == c,
+      s"ActionLog($dir): stats column is '$existing', cannot switch to '$c'"))
 
   /** One version's actions, parsed: (added files, removed files) — the
     * streaming source's planning surface.
@@ -1497,7 +1494,7 @@ object ActionLog {
     require(fs.exists(p), s"ActionLog.actionsOf($dir): version $v is missing")
     val adds = scala.collection.mutable.ArrayBuffer.empty[String]
     val removes = scala.collection.mutable.ArrayBuffer.empty[String]
-    readLines(fs, p).foreach {
+    actionLines(fs, p).foreach {
       case AddStats(f, _, _, _) => adds += f
       case Add(f) => adds += f
       case Remove(f) => removes += f
@@ -1528,7 +1525,7 @@ object ActionLog {
       if (state.isEmpty || statless > 0) None else Some(knownRows)
     vs.zipWithIndex.map { case (v, i) =>
       var (adds, removes, txn) = (0, 0, false)
-      readLines(fs, logPath(dir, v)).foreach { line =>
+      actionLines(fs, logPath(dir, v)).foreach { line =>
         line match {
           case AddStats(p, lo, hi, n) =>
             adds += 1

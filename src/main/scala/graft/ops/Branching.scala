@@ -32,6 +32,12 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   *   dir/_c-00000007/        # immutable parquet snapshot (+ _SUCCESS)
   *   dir/_c-00000007/_parents  # parent ids, one per line (2 for merges)
   * }}}
+  *
+  * A new branch's head is CLAIMED ([[MetaFile.claim]]); moving a head is a
+  * [[MetaFile.replace]]. A crash in the middle of a move can leave the head
+  * file deleted with its complete replacement beside it: the branch then
+  * resolves to that replacement — the new commit — so a head is the old or
+  * the new commit, never an empty or unreadable one.
   */
 object Branching {
 
@@ -45,21 +51,27 @@ object Branching {
   private def cDir(dir: String, id: Long): Path =
     new Path(s"$dir/_c-${"%08d".format(id)}")
 
+  private val BranchName = "[A-Za-z0-9_-]+"
+
   private def headPath(dir: String, branch: String): Path = {
-    require(branch.matches("[A-Za-z0-9_-]+"), s"bad branch name: $branch")
+    require(branch.matches(BranchName), s"bad branch name: $branch")
     new Path(s"$dir/_heads/$branch")
   }
 
-  private def writeText(fs: FileSystem, p: Path, text: String): Unit = {
-    val out = fs.create(p, true)
-    try out.write(text.getBytes(StandardCharsets.UTF_8)) finally out.close()
-  }
-
-  private def readText(fs: FileSystem, p: Path): String = {
-    val in = fs.open(p)
-    try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-    finally in.close()
-  }
+  /** The branch's head commit, None for no branch. With the head file
+    * absent, a complete replacement of it is the head (the crash state of
+    * an interrupted move); of several, the highest complete commit, since a
+    * head only ever moves to a newer commit.
+    */
+  private def headOf(fs: FileSystem, dir: String, branch: String): Option[Long] =
+    MetaFile.read(fs, headPath(dir, branch)).map(_.trim.toLong).orElse {
+      val hp = new Path(s"$dir/_heads")
+      if (!fs.exists(hp)) None
+      else fs.listStatus(hp).toSeq
+        .filter(st => MetaFile.replacing(st.getPath.getName).contains(branch))
+        .flatMap(st => MetaFile.read(fs, st.getPath)).flatMap(_.trim.toLongOption)
+        .filter(id => VersionedTable.complete(fs, cDir(dir, id))).maxOption
+    }
 
   private def nextId(fs: FileSystem, dir: String): Long = {
     val root = new Path(dir)
@@ -69,19 +81,13 @@ object Branching {
       .map(_.stripPrefix("_c-").toLong).sorted.lastOption.getOrElse(0L) + 1L
   }
 
-  def head(spark: SparkSession, dir: String, branch: String): Long = {
-    val fs = fsOf(spark, dir)
-    val p = headPath(dir, branch)
-    require(fs.exists(p), s"Branching: no branch '$branch' in $dir")
-    readText(fs, p).toLong
-  }
+  def head(spark: SparkSession, dir: String, branch: String): Long =
+    headOf(fsOf(spark, dir), dir, branch).getOrElse(
+      throw new IllegalArgumentException(s"Branching: no branch '$branch' in $dir"))
 
-  def parents(spark: SparkSession, dir: String, id: Long): Seq[Long] = {
-    val fs = fsOf(spark, dir)
-    val p = new Path(cDir(dir, id), "_parents")
-    if (!fs.exists(p)) Seq.empty
-    else readText(fs, p).split("\n").toSeq.map(_.trim).filter(_.nonEmpty).map(_.toLong)
-  }
+  def parents(spark: SparkSession, dir: String, id: Long): Seq[Long] =
+    MetaFile.read(fsOf(spark, dir), new Path(cDir(dir, id), "_parents")).toSeq
+      .flatMap(_.split("\n")).map(_.trim).filter(_.nonEmpty).map(_.toLong)
 
   /** Stage an immutable commit: parquet first (committer plants _SUCCESS),
     * then capture and parents, then the head flip — a crash leaves a
@@ -102,9 +108,8 @@ object Branching {
         .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
         .parquet(new Path(cDir(dir, id), "_cdf").toString)
     }
-    writeText(fs, new Path(cDir(dir, id), "_parents"),
-      parentIds.mkString("\n"))
-    writeText(fs, headPath(dir, branch), id.toString)
+    MetaFile.write(fs, new Path(cDir(dir, id), "_parents"), parentIds.mkString("\n"))
+    MetaFile.replace(fs, headPath(dir, branch), id.toString)
     id
   }
 
@@ -249,32 +254,37 @@ object Branching {
   def branch(spark: SparkSession, dir: String, from: String, name: String): Long = {
     val fs = fsOf(spark, dir)
     val h = head(spark, dir, from)
-    require(!fs.exists(headPath(dir, name)),
+    require(headOf(fs, dir, name).isEmpty &&
+      MetaFile.claim(fs, headPath(dir, name), h.toString.getBytes(StandardCharsets.UTF_8)),
       s"Branching: branch '$name' already exists")
-    writeText(fs, headPath(dir, name), h.toString)
     h
   }
 
-  /** Discard a branch: remove its head pointer — the commits it alone
-    * referenced become unreachable garbage for a future retention sweep
-    * (never deleted inline: another ref may still reach them). `main` is
-    * not droppable.
+  /** Discard a branch: remove its head pointer and any replacement of it
+    * an interrupted move left, so the name cannot resolve again — the
+    * commits it alone referenced become unreachable garbage for a future
+    * retention sweep (never deleted inline: another ref may still reach
+    * them). `main` is not droppable.
     */
   def drop(spark: SparkSession, dir: String, name: String): Unit = {
     require(name != "main", "Branching.drop: main is not droppable")
     val fs = fsOf(spark, dir)
-    val p = headPath(dir, name)
-    require(fs.exists(p), s"Branching.drop: no branch '$name'")
-    fs.delete(p, false)
-    ()
+    require(headOf(fs, dir, name).nonEmpty, s"Branching.drop: no branch '$name'")
+    fs.listStatus(new Path(s"$dir/_heads")).map(_.getPath)
+      .filter(p => p.getName == name || MetaFile.replacing(p.getName).contains(name))
+      .foreach(fs.delete(_, false))
   }
 
-  /** All branch names (the `_heads` listing). */
+  /** All branch names: the `_heads` listing, a branch caught mid-move
+    * included.
+    */
   def branches(spark: SparkSession, dir: String): Seq[String] = {
     val fs = fsOf(spark, dir)
     val hp = new Path(s"$dir/_heads")
     if (!fs.exists(hp)) Seq.empty
-    else fs.listStatus(hp).toSeq.map(_.getPath.getName).sorted
+    else fs.listStatus(hp).toSeq.map(_.getPath.getName)
+      .map(n => MetaFile.replacing(n).getOrElse(n)).filter(_.matches(BranchName))
+      .distinct.filter(headOf(fs, dir, _).nonEmpty).sorted
   }
 
   /** UNREACHABLE-COMMIT GC — the retention sweep [[drop]] defers to:
@@ -413,7 +423,7 @@ object Branching {
     if (hFrom == hInto) return FastForward(hInto)
     if (isAncestor(spark, dir, hInto, hFrom)) {
       // into never moved since the fork — pointer flip, zero data written
-      writeText(fsOf(spark, dir), headPath(dir, into), hFrom.toString)
+      MetaFile.replace(fsOf(spark, dir), headPath(dir, into), hFrom.toString)
       return FastForward(hFrom)
     }
     val baseId = lca(spark, dir, hFrom, hInto)

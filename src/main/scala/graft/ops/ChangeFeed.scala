@@ -92,7 +92,7 @@ object ChangeFeed {
     */
   def recordedKeys(spark: SparkSession, dir: String): Option[Seq[String]] = {
     val fs = VersionedTable.fsOf(spark, dir)
-    VersionedTable.readText(fs, new Path(dir, KeysFile))
+    MetaFile.read(fs, new Path(dir, KeysFile))
       .map(_.split("\n").map(_.trim).filter(_.nonEmpty).toSeq)
   }
 
@@ -109,7 +109,7 @@ object ChangeFeed {
       val fs = VersionedTable.fsOf(spark, dir)
       val bytes = keys.mkString("\n")
         .getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      if (!AtomicPut(fs, new Path(dir, KeysFile), bytes)) {
+      if (!MetaFile.claim(fs, new Path(dir, KeysFile), bytes)) {
         val winner = recordedKeys(spark, dir).getOrElse(
           sys.error(s"ChangeFeed($dir): lost the $KeysFile race but no keys readable"))
         require(winner == keys,

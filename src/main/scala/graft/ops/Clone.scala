@@ -2,7 +2,6 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.hadoop.fs.Path
-import java.nio.charset.StandardCharsets
 
 /** SHALLOW CLONE — Delta's public zero-copy clone design on the `_v-N`
   * layout: the clone's first version is METADATA ONLY, a `_clone_src`
@@ -36,10 +35,8 @@ object Clone {
     require(VersionedTable.currentVersion(spark, dstDir).isEmpty,
       s"Clone.shallow: destination $dstDir already exists")
     val next = VersionedTable.stageWith(spark, dstDir) { vd =>
-      val out = fs.create(new Path(vd, CloneSrcName), true)
-      try out.write(srcVd.toString.getBytes(StandardCharsets.UTF_8))
-      finally out.close()
-      fs.create(new Path(vd, "_SUCCESS"), true).close()
+      MetaFile.write(fs, new Path(vd, CloneSrcName), srcVd.toString)
+      MetaFile.write(fs, new Path(vd, "_SUCCESS"), "")
     }
     VersionedTable.publish(spark, dstDir, next)
   }
@@ -49,7 +46,7 @@ object Clone {
     */
   def sourceOf(spark: SparkSession, dir: String, version: Long): Option[String] = {
     val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    VersionedTable.readText(fs,
+    MetaFile.read(fs,
       new Path(VersionedTable.verDir(dir, version), CloneSrcName)).map(_.trim)
   }
 

@@ -3,7 +3,6 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.hadoop.fs.Path
-import java.nio.charset.StandardCharsets
 
 /** Column mapping — Delta's public rename/drop schema-evolution design on
   * the `_v-N` layout: every logical column owns a STABLE integer id; data
@@ -59,9 +58,8 @@ object ColumnMapping {
       s"column mapping: field id beyond the high-water mark $maxId: $fields")
     fields.foreach(f => require(!f.name.contains("=") && !f.name.contains("\n"),
       s"column mapping: illegal character in name '${f.name}'"))
-    val out = fs.create(new Path(vd, SchemaName), true)
-    try out.write((s"#max=$maxId" +: fields.map(f => s"${f.id}=${f.name}"))
-      .mkString("\n").getBytes(StandardCharsets.UTF_8)) finally out.close()
+    MetaFile.write(fs, new Path(vd, SchemaName),
+      (s"#max=$maxId" +: fields.map(f => s"${f.id}=${f.name}")).mkString("\n"))
   }
 
   /** The version's manifest, in column order. Fails loudly on a version
@@ -78,7 +76,7 @@ object ColumnMapping {
   private def readManifest(spark: SparkSession, dir: String,
       version: Long): (Seq[Field], Int) = {
     val fs = fsOf(spark, dir)
-    val lines = VersionedTable.readText(fs,
+    val lines = MetaFile.read(fs,
       new Path(VersionedTable.verDir(dir, version), SchemaName))
       .getOrElse(sys.error(s"ColumnMapping($dir): version $version has no " +
         "_schema manifest — not a column-mapped table?"))
@@ -98,7 +96,7 @@ object ColumnMapping {
     */
   def dataVersion(spark: SparkSession, dir: String, version: Long): Long = {
     val fs = fsOf(spark, dir)
-    VersionedTable.readText(fs,
+    MetaFile.read(fs,
       new Path(VersionedTable.verDir(dir, version), DataFromName))
       .map(_.trim.toLong).getOrElse(version)
   }
@@ -159,7 +157,7 @@ object ColumnMapping {
     */
   def defaults(spark: SparkSession, dir: String, version: Long): Map[Int, String] = {
     val fs = fsOf(spark, dir)
-    VersionedTable.readText(fs,
+    MetaFile.read(fs,
       new Path(VersionedTable.verDir(dir, version), DefaultsName))
       .map(_.split("\n").filter(_.nonEmpty).toSeq.map { line =>
         val Array(id, d) = line.split("=", 2)
@@ -199,16 +197,11 @@ object ColumnMapping {
       // still in the manifest
       val carried = (defaults(spark, dir, cur) ++ extraDefaults)
         .filter { case (id, _) => fields.exists(_.id == id) }
-      if (carried.nonEmpty) {
-        val out = fs.create(new Path(vd, DefaultsName), true)
-        try out.write(carried.toSeq.sortBy(_._1)
-          .map { case (id, d) => s"$id=$d" }.mkString("\n")
-          .getBytes(StandardCharsets.UTF_8)) finally out.close()
-      }
-      val out = fs.create(new Path(vd, DataFromName), true)
-      try out.write(dataVersion(spark, dir, cur).toString
-        .getBytes(StandardCharsets.UTF_8)) finally out.close()
-      fs.create(new Path(vd, "_SUCCESS"), true).close()
+      if (carried.nonEmpty)
+        MetaFile.write(fs, new Path(vd, DefaultsName), carried.toSeq.sortBy(_._1)
+          .map { case (id, d) => s"$id=$d" }.mkString("\n"))
+      MetaFile.write(fs, new Path(vd, DataFromName), dataVersion(spark, dir, cur).toString)
+      MetaFile.write(fs, new Path(vd, "_SUCCESS"), "")
     }
     VersionedTable.publish(spark, dir, next)
     next

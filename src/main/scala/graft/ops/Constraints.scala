@@ -3,7 +3,6 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.hadoop.fs.Path
-import java.nio.charset.StandardCharsets
 
 /** Table-level CHECK constraints — Delta's public constraints design on
   * the `_v-N` layout: the constraint registry lives as a `_checks` file
@@ -33,7 +32,7 @@ object Constraints {
   def checksOf(spark: SparkSession, dir: String): Seq[(String, String)] =
     VersionedTable.currentVersion(spark, dir).toSeq.flatMap { v =>
       val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-      VersionedTable.readText(fs,
+      MetaFile.read(fs,
         new Path(VersionedTable.verDir(dir, v), ChecksName)).toSeq
         .flatMap(_.split("\n").filter(_.nonEmpty).toSeq.map { line =>
           val Array(n, e) = line.split("=", 2)
@@ -92,9 +91,7 @@ object Constraints {
         s"write to $dir rejected: " +
           bad.map { case (n, c) => s"$n ($c rows)" }.mkString(", "))
     }
-    val out = fs.create(new Path(vd, ChecksName), true)
-    try out.write(all.map { case (n, e) => s"$n=$e" }.mkString("\n")
-      .getBytes(StandardCharsets.UTF_8)) finally out.close()
+    MetaFile.write(fs, new Path(vd, ChecksName), all.map { case (n, e) => s"$n=$e" }.mkString("\n"))
     VersionedTable.publish(spark, dir, next)
     next
   }

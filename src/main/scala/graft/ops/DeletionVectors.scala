@@ -64,26 +64,13 @@ object DeletionVectors {
         if (it.hasNext) {
           val d = new Path(target)
           val efs = d.getFileSystem(conf.value)
-          it.foreach { case (f, b) =>
-            // WRITE-TEMP-THEN-RENAME: a speculative or retried duplicate
-            // task writing `<file>.bm` directly via create(overwrite)
-            // could interleave bytes with its twin, leaving a corrupt
-            // bitmap. Each attempt writes its own uniquely-named temp and
-            // renames into place; when the rename loses (the twin already
-            // landed) the temp is dropped — both attempts carry identical
-            // bytes (the bitmap is a deterministic function of the merge),
-            // so either winner is correct.
-            val tmp = new Path(d,
-              s".${f}.bm.${java.util.UUID.randomUUID().toString.take(8)}.tmp")
-            val out = efs.create(tmp, true)
-            try out.write(b) finally out.close()
-            val dest = new Path(d, f + ".bm")
-            if (!efs.rename(tmp, dest)) {
-              efs.delete(tmp, false)
-              require(efs.exists(dest),
-                s"DeletionVectors: blob rename failed and $dest is absent")
-            }
-          }
+          // CLAIMED, not written: a speculative or retried duplicate task
+          // writing `<file>.bm` through create(overwrite) could interleave
+          // bytes with its twin, leaving a corrupt bitmap. Both attempts
+          // carry identical bytes (the bitmap is a deterministic function
+          // of the merge), so whichever claim lands first is correct and
+          // the loser has nothing to do.
+          it.foreach { case (f, b) => MetaFile.claim(efs, new Path(d, f + ".bm"), b) }
         }
       }
   }
@@ -235,7 +222,7 @@ object DeletionVectors {
         .withColumn(ChangeFeed.ChangeType, lit("delete"))
         .write.mode(SaveMode.Overwrite)
         .parquet(new Path(vd, "_cdf").toString)
-    fs.create(new Path(vd, "_SUCCESS"), true).close()
+    MetaFile.write(fs, new Path(vd, "_SUCCESS"), "")
     val committed = graft.ops.Occ.commitStagedDir(spark, dir, stageName,
       cur, Set("*"))
     (committed.version, nDeleted)

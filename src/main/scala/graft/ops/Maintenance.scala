@@ -1,6 +1,5 @@
 package graft.ops
 
-import java.nio.charset.StandardCharsets
 
 import org.apache.spark.sql.SparkSession
 import org.apache.hadoop.fs.{FileSystem, Path}
@@ -42,33 +41,35 @@ object Maintenance {
     compactOver.foreach(n => require(n >= 1, "compactOver must be >= 1"))
     vacuumGraceMs.foreach(g => require(g >= 0, "grace must be >= 0"))
     val fs = fsOf(spark, tableDir)
-    val out = fs.create(new Path(tableDir, PolicyName), true)
-    try out.write((Seq(s"keep=$keep") ++
+    MetaFile.replace(fs, new Path(tableDir, PolicyName), (Seq(s"keep=$keep") ++
       compactOver.toSeq.map(n => s"compact=$n") ++
-      vacuumGraceMs.toSeq.map(g => s"grace=$g"))
-      .mkString("\n").getBytes(StandardCharsets.UTF_8))
-    finally out.close()
+      vacuumGraceMs.toSeq.map(g => s"grace=$g")).mkString("\n"))
   }
 
   /** (keep, compactOver, vacuumGraceMs). An absent `grace=` means the
     * vacuum default — a sweep runs CONCURRENTLY with writers, so the safe
     * window is the default, not zero; `grace=0` is an explicit per-table
-    * opt-out for provably single-writer tables.
+    * opt-out for provably single-writer tables. An absent `_policy` is the
+    * default policy, unless a [[setPolicy]] crashed between deleting it
+    * and renaming its replacement in: then the declared policy is unknown,
+    * and defaulting could sweep versions it keeps, so this fails loudly.
     */
   def policyOf(spark: SparkSession,
       tableDir: String): (Int, Option[Int], Long) = {
     val fs = fsOf(spark, tableDir)
-    val p = new Path(tableDir, PolicyName)
-    if (!fs.exists(p)) (2, None, ActionLog.DefaultVacuumGraceMs)
-    else {
-      val in = fs.open(p)
-      val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-        finally in.close()
-      val kv = text.split("\n").map(_.split("=", 2))
-        .map(a => a(0) -> a(1)).toMap
-      (kv("keep").toInt, kv.get("compact").map(_.toInt),
-        kv.get("grace").map(_.toLong)
-          .getOrElse(ActionLog.DefaultVacuumGraceMs))
+    MetaFile.read(fs, new Path(tableDir, PolicyName)) match {
+      case None =>
+        require(!fs.listStatus(new Path(tableDir))
+            .exists(st => MetaFile.replacing(st.getPath.getName).contains(PolicyName)),
+          s"Maintenance.policyOf($tableDir): $PolicyName is mid-replace " +
+            "(a setPolicy crashed before its rename) — re-run setPolicy")
+        (2, None, ActionLog.DefaultVacuumGraceMs)
+      case Some(text) =>
+        val kv = text.trim.split("\n").map(_.split("=", 2))
+          .map(a => a(0) -> a(1)).toMap
+        (kv("keep").toInt, kv.get("compact").map(_.toInt),
+          kv.get("grace").map(_.toLong)
+            .getOrElse(ActionLog.DefaultVacuumGraceMs))
     }
   }
 

@@ -15,14 +15,12 @@ import java.nio.charset.StandardCharsets
   * mutual-exclusion contract and Iceberg's CAS-on-pointer, folded onto the
   * `_v-NNNNNNNN` + `_ptr` layout.
   *
-  * Commit point: `_commit-NNNNNNNN` marker, created with
-  * `FileSystem.create(overwrite = false)` — atomic create-if-absent on HDFS;
-  * object stores supply it via conditional put (If-None-Match), exactly the
-  * LogStore contract Delta documents; on the local test filesystem it is an
-  * exists-check + O_EXCL create. The marker's CONTENT is the whole commit:
-  * the staged dir's name plus the declared write set. Everything after the
-  * marker (rename staged -> `_v-N`, pointer flip) is idempotent
-  * FINALIZATION that any later writer or reader rolls forward
+  * Commit point: `_commit-NNNNNNNN` marker, claimed with
+  * [[MetaFile.claim]] — put-if-absent with its content visible in the same
+  * step (the LogStore contract Delta documents). The marker's CONTENT is
+  * the whole commit: the staged dir's name plus the declared write set.
+  * Everything after the marker (rename staged -> `_v-N`, pointer flip) is
+  * idempotent FINALIZATION that any later writer or reader rolls forward
   * ([[finalizePending]]) — so a writer crashing at any instant after its
   * marker lands loses no commit, and one crashing before it leaves only a
   * uniquely-named staged dir for [[sweepStages]].
@@ -59,7 +57,7 @@ object Occ {
 
   private def readMarker(fs: org.apache.hadoop.fs.FileSystem, dir: String,
       v: Long): Option[(String, Set[String])] =
-    VersionedTable.readText(fs, commitPath(dir, v)).map(parseMarker)
+    MetaFile.read(fs, commitPath(dir, v)).map(parseMarker)
 
   private def listCommits(fs: org.apache.hadoop.fs.FileSystem, dir: String): Seq[Long] = {
     val d = new Path(dir)
@@ -71,7 +69,7 @@ object Occ {
   }
 
   /** Atomic claim of version `v`: put-if-absent of the commit marker WITH
-    * its body ([[AtomicPut]]) — the claim and the marker content are one
+    * its body ([[MetaFile.claim]]) — the claim and the marker content are one
     * atomic step, so no concurrent finalizer or conflict-checker can ever
     * observe a claimed-but-empty marker. Returns false when someone else
     * holds it.
@@ -79,7 +77,7 @@ object Occ {
   private def claim(fs: org.apache.hadoop.fs.FileSystem, dir: String, v: Long,
       stageName: String, writeSet: Set[String]): Boolean = {
     val body = (stageName +: writeSet.toSeq.sorted).mkString("\n")
-    AtomicPut(fs, commitPath(dir, v), body.getBytes(StandardCharsets.UTF_8))
+    MetaFile.claim(fs, commitPath(dir, v), body.getBytes(StandardCharsets.UTF_8))
   }
 
   /** Roll a claimed-but-unfinalized commit forward: rename its staged dir to
@@ -103,10 +101,13 @@ object Occ {
       }
       // stamp-if-absent is part of the idempotent roll-forward: a version
       // must never go live unstamped or readAsOf refuses the whole history.
-      // Concurrent finalizers may both stamp; the clamp keeps either outcome
-      // monotonic, and version order = claim order so stamps stay ordered.
+      // The version dir is already visible, so the stamp is CLAIMED:
+      // concurrent finalizers race for one slot and the first stamp stands
+      // whole (the clamp keeps either winner monotonic, and version order =
+      // claim order so stamps stay ordered).
       if (!VersionedTable.hasCommitTs(fs, dir, v))
-        VersionedTable.stampCommitTs(fs, dir, v)
+        MetaFile.claim(fs, VersionedTable.commitTsPath(dir, v),
+          VersionedTable.commitTs(fs, dir, v).getBytes(StandardCharsets.UTF_8))
       if (!VersionedTable.readPtr(fs, dir).exists(_ >= v))
         VersionedTable.flipPointer(fs, dir, v)
     }
@@ -297,8 +298,7 @@ object Occ {
         val dvBase = snapshot.isDefined && fs.exists(
           new Path(VersionedTable.verDir(dir, base), "_dv"))
         if (snapshot.isDefined && !dvBase)
-          fs.create(new Path(stage, ChangeFeed.OverwriteMarkerName), true)
-            .close()
+          MetaFile.write(fs, new Path(stage, ChangeFeed.OverwriteMarkerName), "")
         else
           ChangeFeed.diff(snapshot, spark.read.parquet(stage.toString), keys)
             .write.mode(SaveMode.Overwrite)

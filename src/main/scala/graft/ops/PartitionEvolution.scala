@@ -4,7 +4,6 @@ import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.hadoop.fs.Path
 import graft.source.GraftMeta
-import java.nio.charset.StandardCharsets
 
 /** Partition-spec evolution — Iceberg's public design on the `_v-N` layout:
   * the partition layout is VERSIONED METADATA, not a property of the data.
@@ -64,15 +63,14 @@ object PartitionEvolution {
 
   private def writeSpecs(fs: org.apache.hadoop.fs.FileSystem, vd: Path,
       specs: Seq[Spec], active: Int): Unit = {
-    val out = fs.create(new Path(vd, SpecName), true)
-    try out.write((s"#active=$active" +: specs.map(fmt))
-      .mkString("\n").getBytes(StandardCharsets.UTF_8)) finally out.close()
+    MetaFile.write(fs, new Path(vd, SpecName),
+      (s"#active=$active" +: specs.map(fmt)).mkString("\n"))
   }
 
   /** (all specs ever, active spec id) as of `version`. */
   def specsOf(spark: SparkSession, dir: String, version: Long): (Seq[Spec], Int) = {
     val fs = fsOf(spark, dir)
-    val lines = VersionedTable.readText(fs,
+    val lines = MetaFile.read(fs,
         new Path(VersionedTable.verDir(dir, version), SpecName))
       .getOrElse(sys.error(s"PartitionEvolution($dir): version $version has " +
         s"no $SpecName — not a spec-evolved table?"))
@@ -86,7 +84,7 @@ object PartitionEvolution {
 
   private def prevOf(fs: org.apache.hadoop.fs.FileSystem, dir: String,
       version: Long): Option[Long] =
-    VersionedTable.readText(fs,
+    MetaFile.read(fs,
       new Path(VersionedTable.verDir(dir, version), PrevName))
       .map(_.trim.toLong)
 
@@ -110,12 +108,8 @@ object PartitionEvolution {
         .write.mode(SaveMode.Overwrite).partitionBy("p")
         .parquet(new Path(vd, DataName).toString))
       writeSpecs(fs, vd, specs, active)
-      prev.foreach { v =>
-        val out = fs.create(new Path(vd, PrevName), true)
-        try out.write(v.toString.getBytes(StandardCharsets.UTF_8))
-        finally out.close()
-      }
-      fs.create(new Path(vd, "_SUCCESS"), true).close()
+      prev.foreach(v => MetaFile.write(fs, new Path(vd, PrevName), v.toString))
+      MetaFile.write(fs, new Path(vd, "_SUCCESS"), "")
     }
     VersionedTable.publish(spark, dir, next)
     next

@@ -1,6 +1,5 @@
 package graft.ops
 
-import java.nio.charset.StandardCharsets
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.hadoop.fs.Path
@@ -42,7 +41,7 @@ object Protocol {
     */
   def of(spark: SparkSession, dir: String, version: Long): Proto = {
     val fs = fsOf(spark, dir)
-    VersionedTable.readText(fs,
+    MetaFile.read(fs,
       new Path(VersionedTable.verDir(dir, version), FileName))
       .map { text =>
         val lines = text.split("\n").filter(_.nonEmpty).toSeq
@@ -68,10 +67,8 @@ object Protocol {
     }
     val next = VersionedTable.stage(df, dir)
     val vd = VersionedTable.verDir(dir, next)
-    val out = fs.create(new Path(vd, FileName), true)
-    try out.write((proto.readerFeatures.toSeq.sorted.map("rf=" + _) ++
-      proto.writerFeatures.toSeq.sorted.map("wf=" + _))
-      .mkString("\n").getBytes(StandardCharsets.UTF_8)) finally out.close()
+    MetaFile.write(fs, new Path(vd, FileName), (proto.readerFeatures.toSeq.sorted.map("rf=" + _) ++
+      proto.writerFeatures.toSeq.sorted.map("wf=" + _)).mkString("\n"))
     VersionedTable.publish(spark, dir, next)
     next
   }

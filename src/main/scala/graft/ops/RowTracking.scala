@@ -3,7 +3,6 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.hadoop.fs.Path
-import java.nio.charset.StandardCharsets
 
 /** Row tracking — Delta's public row-ID design re-expressed on the `_v-N`
   * snapshot layout: every row owns a STABLE long `_row_id`, minted once from
@@ -52,7 +51,7 @@ object RowTracking {
     */
   def highWaterMark(spark: SparkSession, dir: String, version: Long): Long = {
     val fs = fsOf(spark, dir)
-    VersionedTable.readText(fs,
+    MetaFile.read(fs,
         new Path(VersionedTable.verDir(dir, version), HwmName))
       .map(_.trim.toLong)
       .getOrElse(sys.error(s"RowTracking($dir): version $version has no " +
@@ -68,10 +67,7 @@ object RowTracking {
     require(df.columns.contains(RowId), s"commitTracked: frame lacks $RowId")
     val next = VersionedTable.stage(df, dir)
     val fs = fsOf(spark, dir)
-    val out = fs.create(
-      new Path(VersionedTable.verDir(dir, next), HwmName), true)
-    try out.write(hwm.toString.getBytes(StandardCharsets.UTF_8))
-    finally out.close()
+    MetaFile.write(fs, new Path(VersionedTable.verDir(dir, next), HwmName), hwm.toString)
     VersionedTable.publish(spark, dir, next)
     next
   }

@@ -23,11 +23,12 @@ import java.nio.charset.StandardCharsets
   *   catDir/_m-00000002    # manifest: "table=version" lines
   * }}}
   *
-  * Write protocol mirrors [[VersionedTable]]: stage the full manifest file,
-  * then tmp+rename the pointer. A crash between the two leaves a dangling
-  * manifest that the next commit sweeps; readers fall back to the highest
-  * parseable manifest at or below the pointer. Single-writer, like the
-  * table layer.
+  * Write protocol mirrors [[VersionedTable]]: claim the full manifest
+  * ([[MetaFile.claim]] — a manifest is visible to the reader fallback the
+  * instant it exists, so it lands whole), then replace the pointer
+  * ([[MetaFile.replace]]). A crash between the two leaves a dangling
+  * manifest that the next commit sweeps; with no pointer file, readers fall
+  * back to the highest manifest. Single-writer, like the table layer.
   */
 object SnapshotCatalog {
 
@@ -39,23 +40,6 @@ object SnapshotCatalog {
 
   private def manifestPath(catDir: String, n: Long): Path =
     new Path(catDir, f"$ManifestPrefix$n%08d")
-
-  /** Read-to-EOF loop (the VersionedTable.readText rule): object-store
-    * filesystems may legally return short reads, and a truncated manifest
-    * must not half-parse.
-    */
-  private def readText(fs: FileSystem, p: Path): Option[String] =
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try {
-        val buf = new java.io.ByteArrayOutputStream(256)
-        val chunk = new Array[Byte](256)
-        var n = in.read(chunk)
-        while (n > 0) { buf.write(chunk, 0, n); n = in.read(chunk) }
-        Some(new String(buf.toByteArray, StandardCharsets.UTF_8).trim)
-      } finally in.close()
-    }
 
   private def listManifests(fs: FileSystem, catDir: String): Seq[Long] =
     if (!fs.exists(new Path(catDir))) Nil
@@ -81,11 +65,11 @@ object SnapshotCatalog {
   /** The live catalog state: (manifest number, table -> pinned version). */
   def current(spark: SparkSession, catDir: String): Option[(Long, Map[String, Long])] = {
     val fs = fsOf(spark, catDir)
-    val ptr = readText(fs, new Path(catDir, PtrName)).flatMap(_.toLongOption)
+    val ptr = MetaFile.read(fs, new Path(catDir, PtrName)).flatMap(_.trim.toLongOption)
     val candidate = ptr.filter(n => fs.exists(manifestPath(catDir, n)))
       .orElse(listManifests(fs, catDir).lastOption)
     candidate.flatMap(n =>
-      readText(fs, manifestPath(catDir, n)).map(t => n -> parse(t)))
+      MetaFile.read(fs, manifestPath(catDir, n)).map(t => n -> parse(t)))
   }
 
   /** Atomically commit a new table->version mapping. The pins should name
@@ -104,15 +88,10 @@ object SnapshotCatalog {
       .foreach(n => fs.delete(manifestPath(catDir, n), false))
     val next = cur.getOrElse(0L) + 1L
     val body = pins.toSeq.sortBy(_._1).map { case (t, v) => s"$t=$v" }.mkString("\n")
-    val out = fs.create(manifestPath(catDir, next), true)
-    try out.write(body.getBytes(StandardCharsets.UTF_8)) finally out.close()
-    val ptr = new Path(catDir, PtrName)
-    val tmp = new Path(catDir, s".$PtrName.tmp-${java.util.UUID.randomUUID()}")
-    val o2 = fs.create(tmp, true)
-    try o2.write(next.toString.getBytes(StandardCharsets.UTF_8)) finally o2.close()
-    if (fs.exists(ptr)) fs.delete(ptr, false)
-    if (!fs.rename(tmp, ptr))
-      throw new java.io.IOException(s"catalog pointer flip failed: $tmp -> $ptr")
+    require(MetaFile.claim(fs, manifestPath(catDir, next), body.getBytes(StandardCharsets.UTF_8)),
+      s"SnapshotCatalog.commit($catDir): manifest $next was claimed concurrently " +
+        "— the catalog is single-writer; use commitOcc")
+    MetaFile.replace(fs, new Path(catDir, PtrName), next.toString)
     next
   }
 
@@ -130,19 +109,9 @@ object SnapshotCatalog {
   def finalizePending(spark: SparkSession, catDir: String): Unit = {
     val fs = fsOf(spark, catDir)
     listManifests(fs, catDir).lastOption.foreach { top =>
-      val cur = readText(fs, new Path(catDir, PtrName)).flatMap(_.toLongOption)
-      if (!cur.exists(_ >= top)) flipPtr(fs, catDir, top)
+      val cur = MetaFile.read(fs, new Path(catDir, PtrName)).flatMap(_.trim.toLongOption)
+      if (!cur.exists(_ >= top)) MetaFile.replace(fs, new Path(catDir, PtrName), top.toString)
     }
-  }
-
-  private def flipPtr(fs: FileSystem, catDir: String, n: Long): Unit = {
-    val ptr = new Path(catDir, PtrName)
-    val tmp = new Path(catDir, s".$PtrName.tmp-${java.util.UUID.randomUUID()}")
-    val o = fs.create(tmp, true)
-    try o.write(n.toString.getBytes(StandardCharsets.UTF_8)) finally o.close()
-    if (fs.exists(ptr)) fs.delete(ptr, false)
-    if (!fs.rename(tmp, ptr))
-      throw new java.io.IOException(s"catalog pointer flip failed: $tmp -> $ptr")
   }
 
   /** Catalog-level optimistic concurrency — [[Occ]]'s claim/rebase protocol
@@ -183,7 +152,7 @@ object SnapshotCatalog {
       hook()
       // write sets committed since our read: disjoint -> rebase, else fail
       val winners = listManifests(fs, catDir).filter(_ > base)
-        .flatMap(n => readText(fs, manifestPath(catDir, n)).map(n -> writesOf(_)))
+        .flatMap(n => MetaFile.read(fs, manifestPath(catDir, n)).map(n -> writesOf(_)))
       winners.find(_._2.intersect(tableSet).nonEmpty) match {
         case Some((n, ws)) =>
           throw new CatalogConflictException(
@@ -195,11 +164,7 @@ object SnapshotCatalog {
             val body = (s"#writes=${tableSet.toSeq.sorted.mkString(",")}" +:
               newPins.toSeq.sortBy(_._1).map { case (t, v) => s"$t=$v" })
               .mkString("\n")
-            try {
-              val out = fs.create(manifestPath(catDir, target), false) // the CAS
-              try out.write(body.getBytes(StandardCharsets.UTF_8)) finally out.close()
-              true
-            } catch { case _: java.io.IOException => false }
+            MetaFile.claim(fs, manifestPath(catDir, target), body.getBytes(StandardCharsets.UTF_8))
           }
           if (claimed) {
             finalizePending(spark, catDir)

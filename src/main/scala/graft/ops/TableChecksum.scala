@@ -1,6 +1,5 @@
 package graft.ops
 
-import java.nio.charset.StandardCharsets
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -58,14 +57,16 @@ object TableChecksum {
     (r.getLong(0), r.getLong(1))
   }
 
-  /** Stamp `version` with its content checksum. */
+  /** Stamp `version` with its content checksum. The version may already be
+    * live (the scrub enrolls live versions) and may carry a legacy stamp to
+    * overwrite, so the stamp is a [[MetaFile.replace]]: a reader never sees
+    * a partial `_crc`, and the instant without one reads as unstamped.
+    */
   def stamp(spark: SparkSession, dir: String, version: Long): (Long, Long) = {
     val fs = fsOf(spark, dir)
     val (n, x) = digest(VersionedTable.readVersion(spark, dir, version))
-    val out = fs.create(
-      new Path(VersionedTable.verDir(dir, version), FileName), true)
-    try out.write(s"rows=$n\nsum=$x".getBytes(StandardCharsets.UTF_8))
-    finally out.close()
+    MetaFile.replace(fs, new Path(VersionedTable.verDir(dir, version), FileName),
+      s"rows=$n\nsum=$x")
     (n, x)
   }
 
@@ -75,7 +76,7 @@ object TableChecksum {
     */
   def verify(spark: SparkSession, dir: String, version: Long): (Long, Long) = {
     val fs = fsOf(spark, dir)
-    val text = VersionedTable.readText(fs,
+    val text = MetaFile.read(fs,
       new Path(VersionedTable.verDir(dir, version), FileName))
       .getOrElse(sys.error(
         s"TableChecksum.verify($dir, $version): no _crc stamp"))

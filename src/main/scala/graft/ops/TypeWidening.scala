@@ -4,7 +4,6 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.hadoop.fs.Path
-import java.nio.charset.StandardCharsets
 
 /** Type widening — Delta's public type-widening design on the `_v-N`
   * layout: a column's LOGICAL type lives in a per-version `_types` manifest;
@@ -73,7 +72,7 @@ object TypeWidening {
   def typesOf(spark: SparkSession, dir: String,
       version: Long): Seq[(String, DataType)] = {
     val fs = fsOf(spark, dir)
-    VersionedTable.readText(fs,
+    MetaFile.read(fs,
         new Path(VersionedTable.verDir(dir, version), TypesName))
       .getOrElse(sys.error(s"TypeWidening($dir): version $version has no " +
         s"$TypesName — not a type-manifested table?"))
@@ -90,16 +89,8 @@ object TypeWidening {
 
   private def writeTypes(fs: org.apache.hadoop.fs.FileSystem, vd: Path,
       types: Seq[(String, DataType)]): Unit = {
-    val out = fs.create(new Path(vd, TypesName), true)
-    try out.write(types.map { case (n, t) => s"$n=${t.catalogString}" }
-      .mkString("\n").getBytes(StandardCharsets.UTF_8)) finally out.close()
-  }
-
-  private def writePrev(fs: org.apache.hadoop.fs.FileSystem, vd: Path,
-      prev: Long): Unit = {
-    val out = fs.create(new Path(vd, PrevName), true)
-    try out.write(prev.toString.getBytes(StandardCharsets.UTF_8))
-    finally out.close()
+    MetaFile.write(fs, new Path(vd, TypesName),
+      types.map { case (n, t) => s"$n=${t.catalogString}" }.mkString("\n"))
   }
 
   /** Stage the next version with `data` (if any) stored under `data/`,
@@ -112,8 +103,8 @@ object TypeWidening {
     val next = VersionedTable.stageWith(spark, dir) { vd =>
       data.foreach(_.write.mode(SaveMode.Overwrite).parquet(new Path(vd, DataName).toString))
       writeTypes(fs, vd, types)
-      prev.foreach(writePrev(fs, vd, _))
-      fs.create(new Path(vd, "_SUCCESS"), true).close()
+      prev.foreach(v => MetaFile.write(fs, new Path(vd, PrevName), v.toString))
+      MetaFile.write(fs, new Path(vd, "_SUCCESS"), "")
     }
     VersionedTable.publish(spark, dir, next)
     next
@@ -223,7 +214,7 @@ object TypeWidening {
         s"TypeWidening($dir): chained version $cv is expired or torn — " +
           "refusing to fabricate a partial snapshot")
       if (fs.exists(new Path(VersionedTable.verDir(dir, cv), DataName))) out += cv
-      v = VersionedTable.readText(fs,
+      v = MetaFile.read(fs,
         new Path(VersionedTable.verDir(dir, cv), PrevName)).map(_.trim.toLong)
     }
     out.result().reverse

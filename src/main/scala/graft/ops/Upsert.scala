@@ -10,9 +10,10 @@ import org.apache.hadoop.fs.Path
   * The reference upserts with Snowflake `MERGE` (merge_core.sql:5-33,
   * merge_facts_daily.sql:5-38: matched → UPDATE all non-key cols, not matched →
   * INSERT) and insert-only `MERGE` for dimensions (merge_dim_security.sql,
-  * merge_dim_date.sql). Plain Parquet has no row-level update, so the physical
-  * plan is the same one Delta's MERGE compiles to: anti-join the target against
-  * the source keys, union the refreshed source, swap the snapshot.
+  * merge_dim_date.sql; here `EodPipeline.appendDim`). Plain Parquet has no
+  * row-level update, so the physical plan is the same one Delta's MERGE
+  * compiles to: anti-join the target against the source keys, union the
+  * refreshed source, swap the snapshot.
   *
   * Scale notes:
   *  - The anti join shuffles both sides on the merge keys unless the source is
@@ -55,14 +56,6 @@ object Upsert {
       .drop(allTarget)
   }
 
-  /** Insert-only merge (WHEN NOT MATCHED THEN INSERT): append source rows whose
-    * key is absent from the target (merge_dim_security.sql:5-14).
-    */
-  def insertMissing(target: DataFrame, source: DataFrame, keys: Seq[String]): DataFrame = {
-    val fresh = source.join(target.select(keys.map(col): _*).distinct(), keys, "left_anti")
-    target.unionByName(fresh.select(target.columns.map(col).toIndexedSeq: _*))
-  }
-
   /** Apply a CDC changefeed — ops I(nsert)/U(pdate)/D(elete), each change
     * stamped with a monotone per-key sequence — to a target snapshot: the
     * full MERGE shape (Debezium feed → Delta `MERGE WHEN MATCHED [AND
@@ -88,17 +81,18 @@ object Upsert {
     * reading, so materialize to a staging dir, then swap directories. Callers
     * pass the *merged* frame (which still reads the old snapshot lazily).
     *
-    * The staging dir is a DOT-PREFIXED sibling (`.<name>.tmp-<uuid>`): when
+    * The staging dir is a DOT-PREFIXED sibling with one fixed name per target
+    * (`.<name>.stage`, the rule `EodPipeline.loadRaw` stages by): when
     * `path` is a hive partition dir (e.g. `table/trade_date=d`), a crash
     * between write and rename must not leave a sibling the table's FileIndex
     * would try to parse as a partition — dot/underscore prefixes are invisible
-    * to partition discovery. Stale staging dirs from prior crashes are swept
-    * before writing.
+    * to partition discovery. A prior crash's stage is swept by one delete of
+    * that name, so a write never lists the table root.
     *
     * Crash safety — the swap is TWO renames, never a delete of live data
     * before its replacement is in place:
     *   1. `path` → `.path.old`   (live snapshot retired, still complete)
-    *   2. `.tmp-uuid` → `path`   (new snapshot goes live)
+    *   2. `.path.stage` → `path` (new snapshot goes live)
     * A crash at ANY point leaves at least one complete snapshot on disk: a
     * crash between the renames leaves both `.old` and the staged dir, and the
     * next call (or [[recoverSnapshot]]) restores `.old` to `path` before
@@ -115,13 +109,9 @@ object Upsert {
     val spark = df.sparkSession
     val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val dst = new Path(path)
-    val parent = dst.getParent
-    val stagePrefix = s".${dst.getName}.tmp-"
+    val tmp = new Path(dst.getParent, s".${dst.getName}.stage")
     recoverSnapshot(fs, dst) // a prior crash between the two renames
-    if (fs.exists(parent)) fs.listStatus(parent).foreach { st =>
-      if (st.getPath.getName.startsWith(stagePrefix)) fs.delete(st.getPath, true)
-    }
-    val tmp = new Path(parent, stagePrefix + java.util.UUID.randomUUID().toString)
+    fs.delete(tmp, true) // a prior crash between write and go-live
     df.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
     val retired = retiredPath(dst)
     if (fs.exists(retired)) fs.delete(retired, true)

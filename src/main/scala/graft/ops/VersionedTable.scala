@@ -4,7 +4,6 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types.StructType
 import org.apache.hadoop.fs.{FileSystem, Path}
-import java.nio.charset.StandardCharsets
 import graft.source.{GraftMeta, GroupWrite}
 
 /** Versioned whole-table snapshots with an atomic pointer flip — the
@@ -56,10 +55,10 @@ object VersionedTable {
 
   private val CommitTsName = "_commit_ts"
 
-  /** Stamp the commit wall-clock into the version dir — written BEFORE the
-    * pointer flip (same atomicity contract as the txn markers), so a live
-    * version always carries its timestamp and [[readAsOf]] never sees a
-    * half-stamped history.
+  /** The commit wall-clock stamp for `version` — written into the version
+    * dir BEFORE the pointer flip (same atomicity contract as the txn
+    * markers), so a live version always carries its timestamp and
+    * [[readAsOf]] never sees a half-stamped history.
     *
     * Clamped to `max(predecessor's stamp + 1, now)` — Delta's
     * in-commit-timestamp monotonicity rule. Without the clamp a clock step
@@ -67,27 +66,24 @@ object VersionedTable {
     * highest-version-with-ts<=t rule could pick a later version while
     * skipping an earlier one whose stamp is larger.
     */
-  private[ops] def stampCommitTs(fs: FileSystem, dir: String, version: Long): Unit = {
-    val vd = verDir(dir, version)
+  private[ops] def commitTs(fs: FileSystem, dir: String, version: Long): String = {
     val prev = listVersions(fs, dir).filter(_ < version).lastOption
-      .flatMap(v => readText(fs, new Path(verDir(dir, v), CommitTsName)))
+      .flatMap(v => MetaFile.read(fs, commitTsPath(dir, v)))
       .flatMap(_.trim.toLongOption)
-    val ts = math.max(prev.map(_ + 1L).getOrElse(Long.MinValue), System.currentTimeMillis)
-    val out = fs.create(new Path(vd, CommitTsName), true)
-    try out.write(ts.toString.getBytes(StandardCharsets.UTF_8)) finally out.close()
+    math.max(prev.map(_ + 1L).getOrElse(Long.MinValue), System.currentTimeMillis).toString
   }
+
+  private[ops] def commitTsPath(dir: String, version: Long): Path =
+    new Path(verDir(dir, version), CommitTsName)
 
   /** The version's commit timestamp (ms). Absent on versions written
     * before timestamping existed.
     */
-  def commitTimestamp(spark: SparkSession, dir: String, version: Long): Option[Long] = {
-    val fs = fsOf(spark, dir)
-    readText(fs, new Path(verDir(dir, version), CommitTsName))
-      .flatMap(_.trim.toLongOption)
-  }
+  def commitTimestamp(spark: SparkSession, dir: String, version: Long): Option[Long] =
+    MetaFile.read(fsOf(spark, dir), commitTsPath(dir, version)).flatMap(_.trim.toLongOption)
 
   private[ops] def hasCommitTs(fs: FileSystem, dir: String, version: Long): Boolean =
-    fs.exists(new Path(verDir(dir, version), CommitTsName))
+    fs.exists(commitTsPath(dir, version))
 
   /** Time travel AS OF a wall-clock instant (Delta's `timestampAsOf`
     * semantics): the LATEST complete version whose commit timestamp is
@@ -131,25 +127,8 @@ object VersionedTable {
       .sorted
   }
 
-  /** Read a small text file to EOF: a single read() may legally return a
-    * SHORT read on object-store filesystems, and a truncated "00" would
-    * misparse as version 0 and silently divert readers to the fallback path.
-    */
-  private[ops] def readText(fs: FileSystem, p: Path): Option[String] =
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try {
-        val buf = new java.io.ByteArrayOutputStream(64)
-        val chunk = new Array[Byte](64)
-        var n = in.read(chunk)
-        while (n > 0) { buf.write(chunk, 0, n); n = in.read(chunk) }
-        Some(new String(buf.toByteArray, StandardCharsets.UTF_8))
-      } finally in.close()
-    }
-
   private[graft] def readPtr(fs: FileSystem, dir: String): Option[Long] =
-    readText(fs, new Path(dir, PtrName)).flatMap(_.trim.toLongOption)
+    MetaFile.read(fs, new Path(dir, PtrName)).flatMap(_.trim.toLongOption)
 
   /** The streaming-transaction markers a version carries: appId → highest
     * applied batchId (Delta's `txn` action re-expressed as tiny
@@ -163,7 +142,7 @@ object VersionedTable {
       .filter(st => st.isFile && st.getPath.getName.startsWith(TxnPrefix))
       .flatMap { st =>
         val app = st.getPath.getName.stripPrefix(TxnPrefix)
-        readText(fs, st.getPath).flatMap(_.trim.toLongOption).map(app -> _)
+        MetaFile.read(fs, st.getPath).flatMap(_.trim.toLongOption).map(app -> _)
       }.toMap
 
   private[graft] def complete(fs: FileSystem, vd: Path): Boolean =
@@ -263,7 +242,7 @@ object VersionedTable {
     val next = stageWith(spark, dir) { vd =>
       GroupWrite.writeFile(spark.sparkContext.hadoopConfiguration,
         new Path(vd, "part-00000.parquet"), schema, rows)
-      fsOf(spark, dir).create(new Path(vd, "_SUCCESS"), true).close()
+      MetaFile.write(fsOf(spark, dir), new Path(vd, "_SUCCESS"), "")
     }
     publish(spark, dir, next)
     next
@@ -287,20 +266,12 @@ object VersionedTable {
     next
   }
 
-  /** Pointer flip: stage + delete + rename (rename-over-existing is not
-    * portable across Hadoop filesystems). The instant with no pointer file
+  /** Pointer flip ([[MetaFile.replace]]). The instant with no pointer file
     * is covered by the reader fallback to the highest complete version —
     * which IS `next` at that point.
     */
-  private[ops] def flipPointer(fs: FileSystem, dir: String, next: Long): Unit = {
-    val ptr = new Path(dir, PtrName)
-    val ptrTmp = new Path(dir, s".$PtrName.tmp-${java.util.UUID.randomUUID()}")
-    val out = fs.create(ptrTmp, true)
-    try out.write(f"$next%08d".getBytes(StandardCharsets.UTF_8)) finally out.close()
-    if (fs.exists(ptr)) fs.delete(ptr, false)
-    if (!fs.rename(ptrTmp, ptr))
-      throw new java.io.IOException(s"pointer flip failed: $ptrTmp -> $ptr")
-  }
+  private[ops] def flipPointer(fs: FileSystem, dir: String, next: Long): Unit =
+    MetaFile.replace(fs, new Path(dir, PtrName), f"$next%08d")
 
   /** Write-audit-publish, stage half: write the next version's FULL
     * snapshot but do NOT flip the pointer. Readers keep serving the live
@@ -367,10 +338,9 @@ object VersionedTable {
       s"publish: staged $version is not the successor of live $cur")
     (cur.map(v => readTxnMap(fs, verDir(dir, v))).getOrElse(Map.empty) ++ txn)
       .foreach { case (app, batch) =>
-        val out = fs.create(new Path(vd, TxnPrefix + app), true)
-        try out.write(batch.toString.getBytes(StandardCharsets.UTF_8)) finally out.close()
+        MetaFile.write(fs, new Path(vd, TxnPrefix + app), batch.toString)
       }
-    stampCommitTs(fs, dir, version)
+    MetaFile.write(fs, commitTsPath(dir, version), commitTs(fs, dir, version))
     flipPointer(fs, dir, version)
     spark.catalog.refreshByPath(vd.toString)
   }

@@ -199,20 +199,19 @@ private[source] class CdfMicroBatchStream(path: String, schema: StructType,
   override def latestOffset(): Offset =
     sys.error("cdf stream: latestOffset(start, limit) is the admission-control path")
 
-  // change-set bytes of one version — O(files) metadata, cached (the
-  // capture is immutable once its version is complete)
+  // change-set bytes of one version — its data files' bytes, O(files)
+  // metadata, cached (the capture is immutable once its version is complete)
   private val cdfBytesCache = scala.collection.mutable.HashMap.empty[Long, Long]
-  private def dataBytes(f: org.apache.hadoop.fs.FileSystem, v: Long): Long =
-    GraftMeta.dataFiles(f, VersionedTable.verDir(path, v)).map(_.getLen).sum
+  private def dataBytes(f: org.apache.hadoop.fs.FileSystem, dir: Path): Long =
+    GraftMeta.dataFiles(f, dir).map(_.getLen).sum
   private def cdfBytes(v: Long): Long = cdfBytesCache.getOrElseUpdate(v, {
     val f = fs
     val vd = VersionedTable.verDir(path, v)
     val cdf = new Path(vd, "_cdf")
-    if (f.exists(cdf))
-      f.listStatus(cdf).toSeq.filter(_.isFile).map(_.getLen).sum
+    if (f.exists(cdf)) dataBytes(f, cdf)
     else if (f.exists(new Path(vd, graft.ops.ChangeFeed.OverwriteMarkerName)))
       // marker expansion streams v-1's rows as deletes + v's as inserts
-      dataBytes(f, v - 1L) + dataBytes(f, v)
+      dataBytes(f, VersionedTable.verDir(path, v - 1L)) + dataBytes(f, vd)
     else 0L
   })
 

@@ -432,11 +432,8 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
 
   private def readDdl(spark: SparkSession, dir: String): (String, StructType) = {
     val p = new Path(dir, DdlName)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(p), s"GraftCatalog: missing $DdlName under $dir")
-    val in = fs.open(p)
-    val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
+    val text = graft.ops.MetaFile.read(p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
+      .getOrElse(throw new IllegalArgumentException(s"GraftCatalog: missing $DdlName under $dir"))
     val parts = text.split("\n", 2)
     (parts(0).stripPrefix("layout="),
       org.apache.spark.sql.types.DataType.fromJson(parts(1))
@@ -467,13 +464,13 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
       s"GraftCatalog: unknown layout '$layout' (versioned | log)")
     fs.mkdirs(p)
     // the _ddl put-if-absent IS the commit point of CREATE TABLE
-    // ([[graft.ops.AtomicPut]] — local create(overwrite=false) is
+    // ([[graft.ops.MetaFile.claim]] — local create(overwrite=false) is
     // check-then-create, NOT a CAS): two concurrent creates both pass the
     // exists check above, exactly one wins the slot, and the loser reads
     // as "already exists", never a raw IO error. A bare dir (a crash
     // between mkdirs and this put) holds neither _ddl nor versions and is
     // re-creatable — the exists check above already admits it.
-    if (!graft.ops.AtomicPut(fs, new Path(dir, DdlName),
+    if (!graft.ops.MetaFile.claim(fs, new Path(dir, DdlName),
       s"layout=$layout\n${schema.json}"
         .getBytes(java.nio.charset.StandardCharsets.UTF_8)))
       throw new org.apache.spark.sql.catalyst.analysis

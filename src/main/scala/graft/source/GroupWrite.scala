@@ -455,7 +455,7 @@ private[source] class GroupBatchWrite(target: DmlTarget, baseVersion: Long,
         .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
         .parquet(s"$stageDir/_cdf")
     }
-    fs.create(new Path(stageDir, "_SUCCESS"), true).close()
+    graft.ops.MetaFile.write(fs, new Path(stageDir, "_SUCCESS"), "")
     if (target.layout == "log")
       // group-granular COW: when the runtime group filter narrowed the
       // operation, remove ONLY the affected groups' files — untouched

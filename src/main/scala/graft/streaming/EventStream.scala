@@ -77,7 +77,7 @@ object EventStream {
     * keeps every key forever — unbounded state on an unbounded stream; the
     * watermark variant is the only form that survives at corpus scale, and
     * re-deliveries beyond the lateness bound are the table-side MERGE's job
-    * ([[upsertSink]]), not the state store's.
+    * ([[committedUpsertSink]]), not the state store's.
     */
   def dedupWithinWatermark(events: DataFrame, keys: Seq[String],
       tsCol: String = "ts", delay: String = "1 hour"): DataFrame =
@@ -112,37 +112,16 @@ object EventStream {
     l.join(r, keyCond && range, joinType).select(col("l.*"), col(s"r.$rightTs"))
   }
 
-  /** Idempotent keyed upsert sink: every micro-batch is deduped to one row
-    * per key and MERGEd into the parquet snapshot — re-delivery of a batch
-    * converges to the same table (exactly-once effect on top of at-least-once
-    * delivery, the reference's FORCE=TRUE + W1 + keyed-MERGE combination).
-    */
-  def upsertSink(events: DataFrame, targetPath: String, checkpoint: String,
-      keys: Seq[String], orderCol: String): StreamingQuery =
-    events.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val spark = batch.sparkSession
-        val deduped = Dedup.latestBy(batch, keys.map(col), Seq(col(orderCol)))
-        val p = new org.apache.hadoop.fs.Path(targetPath)
-        val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val merged =
-          if (fs.exists(p))
-            Upsert.merge(spark.read.schema(batch.schema).parquet(targetPath), deduped, keys)
-          else deduped
-        Upsert.snapshotWrite(merged, targetPath)
-      }
-      .start()
-
-  /** EXACTLY-ONCE keyed upsert sink: like [[upsertSink]], but the merge
-    * writes through [[VersionedTable.writeCommitted]] with the micro-batch
-    * id as the transaction (Delta's `txn` pattern). [[upsertSink]] is
-    * idempotent at the DATA level (re-delivered rows collapse in the keyed
-    * merge); this sink is idempotent at the COMMIT level too — a micro-batch
-    * re-delivered after a crash, or an entire stream replayed against a lost
-    * checkpoint, produces no new table version, so the version history holds
-    * each batch at most once (q133 + StreamingSpec prove both).
+  /** EXACTLY-ONCE keyed upsert sink: every micro-batch is deduped to one
+    * row per key and MERGEd into the table through
+    * [[VersionedTable.writeCommitted]] with the micro-batch id as the
+    * transaction (Delta's `txn` pattern). Re-delivered rows collapse in the
+    * keyed merge (the reference's FORCE=TRUE + W1 + keyed-MERGE
+    * combination), and the sink is idempotent at the COMMIT level too — a
+    * micro-batch re-delivered after a crash, or an entire stream replayed
+    * against a lost checkpoint, produces no new table version, so the
+    * version history holds each batch at most once (q133 + StreamingSpec
+    * prove both).
     */
   def committedUpsertSink(events: DataFrame, tableDir: String, checkpoint: String,
       keys: Seq[String], orderCol: String, appId: String): StreamingQuery =

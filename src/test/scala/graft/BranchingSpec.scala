@@ -81,4 +81,30 @@ class BranchingSpec extends AnyFunSuite {
     val again = Branching.merge(spark, dir, "main", "dev", Seq("k"))
     assert(again.isInstanceOf[Branching.FastForward])
   }
+
+  test("an interrupted head move resolves to the old or the new commit") {
+    import org.apache.hadoop.fs.Path
+    import graft.ops.MetaFile
+    // the two states a crash inside a head's replace can leave: the tmp
+    // written with the head intact, then the head deleted with the tmp
+    // complete beside it
+    val dir = TestSpark.tmpDir("brcrash")
+    val c1 = Branching.init(base, dir)
+    Branching.branch(spark, dir, "main", "dev")
+    val c2 = Branching.commitOn(base.filter(col("k") =!= 4L), dir, "dev")
+    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val mainHead = new Path(s"$dir/_heads/main")
+    // main fast-forwarding to c2, crashed after writing its tmp
+    MetaFile.write(fs, new Path(s"$dir/_heads/.main.tmp-${java.util.UUID.randomUUID()}"), c2.toString)
+    assert(Branching.head(spark, dir, "main") == c1, "head intact: the old commit")
+    // … and crashed after deleting the head
+    assert(fs.delete(mainHead, false))
+    assert(Branching.head(spark, dir, "main") == c2, "head deleted: the complete replacement")
+    assert(Branching.readBranch(spark, dir, "main").count() == 3L)
+    assert(Branching.branches(spark, dir) == Seq("dev", "main"))
+    // the branch keeps working: the next move lands a real head file
+    val c3 = Branching.commitOn(base, dir, "main")
+    assert(MetaFile.read(fs, mainHead).contains(c3.toString))
+    assert(Branching.parents(spark, dir, c3) == Seq(c2))
+  }
 }

@@ -81,14 +81,6 @@ class OpsSpec extends AnyFunSuite {
       === Array((1L, "a"), (2L, "b2"), (4L, "d")))
   }
 
-  test("J6: insertMissing never updates, only appends absent keys") {
-    val target = Seq((1L, "keep")).toDF("k", "v")
-    val source = Seq((1L, "clobber"), (2L, "new")).toDF("k", "v")
-    val out = Upsert.insertMissing(target, source, Seq("k")).orderBy("k")
-      .as[(Long, String)].collect()
-    assert(out === Array((1L, "keep"), (2L, "new")))
-  }
-
   test("snapshotWrite swaps atomically and survives self-read") {
     val path = TestSpark.tmpDir("snap") + "/t"
     Seq((1L, "a")).toDF("k", "v").write.parquet(path)
@@ -107,7 +99,7 @@ class OpsSpec extends AnyFunSuite {
     val part = s"$root/d=2024-01-16"
     Upsert.snapshotWrite(Seq((2L, "b")).toDF("k", "v"), part)
     // simulate a crash between write and rename on a later run
-    val stale = new org.apache.hadoop.fs.Path(s"$root/.d=2024-01-16.tmp-deadbeef")
+    val stale = new org.apache.hadoop.fs.Path(s"$root/.d=2024-01-16.stage")
     val fs = stale.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.mkdirs(stale)
     assert(spark.read.parquet(root).count() === 2,
@@ -129,7 +121,7 @@ class OpsSpec extends AnyFunSuite {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     assert(fs.rename(new org.apache.hadoop.fs.Path(path),
       new org.apache.hadoop.fs.Path(parent, ".t.old")), "simulate rename-out, then crash")
-    fs.mkdirs(new org.apache.hadoop.fs.Path(parent, ".t.tmp-deadbeef")) // half-staged next
+    fs.mkdirs(new org.apache.hadoop.fs.Path(parent, ".t.stage")) // half-staged next
     // the complete retired snapshot is still on disk; recovery restores it
     assert(Upsert.recoverSnapshot(fs, new org.apache.hadoop.fs.Path(path)))
     spark.catalog.refreshByPath(path)
@@ -139,7 +131,7 @@ class OpsSpec extends AnyFunSuite {
     Upsert.snapshotWrite(Seq((1L, "v2")).toDF("k", "v"), path)
     assert(spark.read.parquet(path).as[(Long, String)].collect() === Array((1L, "v2")))
     assert(!fs.exists(new org.apache.hadoop.fs.Path(parent, ".t.old")))
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(parent, ".t.tmp-deadbeef")))
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(parent, ".t.stage")))
   }
 
   test("surrogate keys: deterministic, dense, continues from max") {

@@ -84,38 +84,6 @@ class Round8OpsSpec extends AnyFunSuite {
     } finally MvRewrite.clear()
   }
 
-  test("atomic put: one winner per slot, content never torn") {
-    import org.apache.hadoop.fs.Path
-    val dir = TestSpark.tmpDir("aput")
-    val fs = new Path(dir).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    // many threads race many slots; every slot gets exactly one winner
-    // and every read-back body is a COMPLETE payload (the torn-commit
-    // class: a claim visible before its content)
-    val wins = new java.util.concurrent.atomic.AtomicInteger(0)
-    val threads = (0 until 8).map { t =>
-      new Thread(() => {
-        (0 until 20).foreach { slot =>
-          val body = s"writer-$t-slot-$slot-" + ("x" * 64)
-          if (graft.ops.AtomicPut(fs, new Path(dir, s"slot-$slot"),
-            body.getBytes("UTF-8"))) { wins.incrementAndGet(); () }
-        }
-      })
-    }
-    threads.foreach(_.start()); threads.foreach(_.join())
-    assert(wins.get() == 20, s"exactly one winner per slot, got ${wins.get()}")
-    (0 until 20).foreach { slot =>
-      val in = fs.open(new Path(dir, s"slot-$slot"))
-      val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      assert(text.matches("writer-\\d-slot-" + slot + "-x{64}"),
-        s"slot $slot body must be complete, got '${text.take(40)}…'")
-    }
-    // no temp debris left behind
-    assert(!fs.listStatus(new Path(dir))
-      .exists(_.getPath.getName.startsWith(".claim-")))
-  }
-
   test("commitStagedDir: a commit since the scanned base is loudly stale") {
     import org.apache.hadoop.fs.Path
     import graft.ops.{Occ, VersionedTable}

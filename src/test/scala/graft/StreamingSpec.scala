@@ -4,8 +4,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.streaming.EventStream
 
-/** §2.9: AvailableNow file-stream equivalence with batch, and idempotent
-  * foreachBatch upsert convergence.
+/** §2.9: AvailableNow file-stream equivalence with batch, and the
+  * exactly-once foreachBatch upsert sink.
   */
 class StreamingSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -69,34 +69,6 @@ class StreamingSpec extends AnyFunSuite {
     assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty,
       "streaming interval join == batch bucketized range join")
     assert(got.count() > 0, "fixture produces matches")
-  }
-
-  test("foreachBatch keyed upsert converges under re-delivery") {
-    val in = TestSpark.tmpDir("stream-up-in")
-    val target = TestSpark.tmpDir("stream-up") + "/t"
-    val events = Tables.load(spark, "/root/testdata/sf0.001", "events")
-      .select($"user_id", $"event_type", $"ts", $"event_id", $"value")
-    events.write.parquet(s"$in/f1")
-    val schema = events.schema
-
-    def runOnce(checkpoint: String): Unit = {
-      val q = EventStream.upsertSink(
-        EventStream.fileSource(spark, s"$in/*", schema),
-        target, checkpoint, Seq("user_id", "event_type"), "ts")
-      q.awaitTermination()
-    }
-    runOnce(TestSpark.tmpDir("ck1"))
-    // materialize: the snapshot files are swapped away by the second run, so
-    // a lazy plan over them could not be re-executed afterwards
-    val afterFirst = spark.read.parquet(target).collect().toSet
-    val expect = graft.ops.Dedup.latestBy(events,
-      Seq($"user_id", $"event_type"), Seq($"ts"))
-    assert(afterFirst.size.toLong === expect.count())
-    // fresh checkpoint = full re-delivery of every file: table must converge
-    runOnce(TestSpark.tmpDir("ck2"))
-    val afterSecond = spark.read.parquet(target).collect().toSet
-    assert(afterSecond === afterFirst,
-      "re-delivered batches converge to the same snapshot")
   }
 
   test("committed sink: stream killed and replayed adds no version (exactly-once commits)") {

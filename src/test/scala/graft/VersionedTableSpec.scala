@@ -492,7 +492,7 @@ class VersionedTableSpec extends AnyFunSuite {
       }
     }.distinct.sorted
     assert(sitesOf("""flipPointer\(""") === Seq("Occ.scala:finalizePending", "VersionedTable.scala:publish"))
-    assert(sitesOf("""stampCommitTs\(""") === Seq("Occ.scala:finalizePending", "VersionedTable.scala:publish"))
+    assert(sitesOf("""commitTs\(""") === Seq("Occ.scala:finalizePending", "VersionedTable.scala:publish"))
     assert(sitesOf("""listVersions\(fs, dir\)\.filter\(_ > """) === Seq("VersionedTable.scala:stageWith"))
   }
 

@@ -16,6 +16,13 @@ class StreamAdmissionSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
+  /** The bytes of version `v`'s change-set data files. */
+  private def cdfBytes(t: String, v: Long): Long = {
+    val dir = new org.apache.hadoop.fs.Path(graft.ops.VersionedTable.verDir(t, v), "_cdf")
+    GraftMeta.dataFiles(dir.getFileSystem(spark.sparkContext.hadoopConfiguration), dir)
+      .map(_.getLen).sum
+  }
+
   private def drainCounts(df: org.apache.spark.sql.DataFrame,
       out: String, cp: String): Seq[String] = {
     val fs = new org.apache.hadoop.fs.Path(out)
@@ -66,16 +73,10 @@ class StreamAdmissionSpec extends AnyFunSuite {
     ChangeFeed.commit(Seq((1L, 1L), (2L, 2L)).toDF("k", "v"), t, Seq("k"))
     ChangeFeed.commit((1L to 500L).map(i => (i, i)).toDF("k", "v"),
       t, Seq("k"))
-    val fs = new org.apache.hadoop.fs.Path(t)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def cdfBytes(v: Long): Long =
-      fs.listStatus(new org.apache.hadoop.fs.Path(
-        graft.ops.VersionedTable.verDir(t, v), "_cdf"))
-        .filter(_.isFile).map(_.getLen).sum
     // budget fits v1+v2 together but not v3 with them; v3 alone exceeds
     // the budget and must STILL arrive (the progress guarantee)
-    val budget = cdfBytes(1L) + cdfBytes(2L)
-    assert(cdfBytes(3L) > budget, "the fat commit must exceed the budget")
+    val budget = cdfBytes(t, 1L) + cdfBytes(t, 2L)
+    assert(cdfBytes(t, 3L) > budget, "the fat commit must exceed the budget")
     val batches = drainCounts(
       CdfStream.read(spark, t, startingVersion = Some(0L),
         maxBytesPerTrigger = Some(budget)),
@@ -87,6 +88,28 @@ class StreamAdmissionSpec extends AnyFunSuite {
     assert(got.filter(col(ChangeFeed.CommitVersion) === 3L)
       .select("b").distinct().count() == 1,
       "the over-budget change-set must arrive whole, in its own trigger")
+  }
+
+  test("cdf stream: the byte budget counts change-set data files only") {
+    val root = TestSpark.tmpDir("admcdfd")
+    val t = s"$root/t"
+    ChangeFeed.commit(Seq((1L, 1L)).toDF("k", "v"), t, Seq("k"))
+    ChangeFeed.commit(Seq((1L, 2L), (2L, 2L)).toDF("k", "v"), t, Seq("k"))
+    // a committer that writes a summary into its `_SUCCESS` marker (as the
+    // S3A committers do): the marker is not change data
+    val fs = new org.apache.hadoop.fs.Path(t)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    Seq(1L, 2L).foreach { v =>
+      graft.ops.MetaFile.write(fs, new org.apache.hadoop.fs.Path(
+        graft.ops.VersionedTable.verDir(t, v), "_cdf/_SUCCESS"), """{"committer":"summary"}""" * 8)
+    }
+    // a budget of exactly both versions' data bytes admits both at once
+    val batches = drainCounts(
+      CdfStream.read(spark, t, startingVersion = Some(0L),
+        maxBytesPerTrigger = Some(cdfBytes(t, 1L) + cdfBytes(t, 2L))),
+      s"$root/out", s"$root/cp")
+    assert(batches == Seq("b=0"),
+      s"v1+v2 fit the budget exactly = one batch, got $batches")
   }
 
   test("file-position offsets: legacy parse and mid-version resume") {
