@@ -12,8 +12,11 @@ import org.apache.spark.sql.SparkSession
   *  - `TIMESTAMP_MICROS` parquet output: Spark's default INT96 is refused by
   *    Spark's own reader inside LIST elements (array<timestamp> columns) and
   *    by the engine's row/Group readers, which speak annotated INT64 micros;
-  *  - graft's optimizer rules, planner strategy and SQL functions
-  *    ([[graft.plans.GraftRules.register]]).
+  *  - graft's optimizer rules, planner strategy and SQL functions, and
+  *    graft's `file:` filesystem ([[graft.plans.GraftRules.register]]):
+  *    Hadoop's checksummed local filesystem with permissions set through
+  *    `java.nio` ([[graft.io.LocalFs]]), so writing a file or a dir on
+  *    local disk starts no `chmod` process.
   *
   * A caller with a setting of its own layers it onto [[builder]] before
   * [[start]] (the test session's warehouse dir) or sets it on the live

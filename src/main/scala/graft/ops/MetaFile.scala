@@ -24,7 +24,9 @@ import org.apache.hadoop.fs.{FileSystem, LocalFileSystem, Path, RawLocalFileSyst
   *    uniquely-named `.claim-*.tmp` and hard-link it into the slot: link
   *    creation is atomic and FAILS if the slot exists, which is at once the
   *    compare-and-swap and the content publication (a rename would not do:
-  *    POSIX rename silently overwrites the destination). HDFS
+  *    POSIX rename silently overwrites the destination). The winner then
+  *    links the tmp's `.crc` beside the slot, so a claimed file is
+  *    verified on read like every other control file. HDFS
   *    `create(overwrite = false)` is atomic under the namenode lease; object
   *    stores bind their conditional put (S3 If-None-Match, GCS
   *    if-generation-match, ABFS ETag) at the same place.
@@ -72,15 +74,25 @@ object MetaFile {
     */
   def claim(fs: FileSystem, p: Path, bytes: Array[Byte]): Boolean = fs match {
     case _: LocalFileSystem | _: RawLocalFileSystem =>
-      val dst = java.nio.file.Paths.get(p.toUri.getPath)
-      java.nio.file.Files.createDirectories(dst.getParent)
-      val tmp = dst.getParent.resolve(
-        s".claim-${java.util.UUID.randomUUID().toString.take(12)}.tmp")
-      java.nio.file.Files.write(tmp, bytes)
-      try { java.nio.file.Files.createLink(dst, tmp); true }
-      catch {
-        case _: java.nio.file.FileAlreadyExistsException => false
-      } finally { java.nio.file.Files.deleteIfExists(tmp); () }
+      // the tmp is written through `fs`, so a checksummed filesystem gives
+      // it a `.crc`; the winner links that beside the slot, and the slot is
+      // read back verified like every other control file
+      def local(f: Path) = java.nio.file.Paths.get(f.toUri.getPath)
+      val tmp = new Path(p.getParent, s".claim-${java.util.UUID.randomUUID().toString.take(12)}.tmp")
+      val out = fs.create(tmp, true)
+      try out.write(bytes) finally out.close()
+      try {
+        val won = try { java.nio.file.Files.createLink(local(p), local(tmp)); true }
+          catch { case _: java.nio.file.FileAlreadyExistsException => false }
+        fs match {
+          case c: LocalFileSystem if won && c.exists(c.getChecksumFile(tmp)) =>
+            val crc = local(c.getChecksumFile(p))
+            java.nio.file.Files.deleteIfExists(crc) // stale: no file held the slot
+            java.nio.file.Files.createLink(crc, local(c.getChecksumFile(tmp)))
+          case _ =>
+        }
+        won
+      } finally { fs.delete(tmp, false); () }
     case _ =>
       // HDFS: create(overwrite=false) is atomic under the namenode lease.
       // Object stores: bind the store's conditional put here.

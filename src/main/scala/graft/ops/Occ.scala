@@ -107,7 +107,8 @@ object Occ {
       // claim order so stamps stay ordered).
       if (!VersionedTable.hasCommitTs(fs, dir, v))
         MetaFile.claim(fs, VersionedTable.commitTsPath(dir, v),
-          VersionedTable.commitTs(fs, dir, v).getBytes(StandardCharsets.UTF_8))
+          VersionedTable.commitTs(fs, dir, VersionedTable.listVersions(fs, dir).filter(_ < v).lastOption)
+            .getBytes(StandardCharsets.UTF_8))
       if (!VersionedTable.readPtr(fs, dir).exists(_ >= v))
         VersionedTable.flipPointer(fs, dir, v)
     }

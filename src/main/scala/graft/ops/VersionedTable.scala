@@ -64,11 +64,11 @@ object VersionedTable {
     * in-commit-timestamp monotonicity rule. Without the clamp a clock step
     * backward makes stamps non-monotonic across versions, and readAsOf's
     * highest-version-with-ts<=t rule could pick a later version while
-    * skipping an earlier one whose stamp is larger.
+    * skipping an earlier one whose stamp is larger. `predecessor` is the
+    * version the new one follows, as its caller has already resolved it.
     */
-  private[ops] def commitTs(fs: FileSystem, dir: String, version: Long): String = {
-    val prev = listVersions(fs, dir).filter(_ < version).lastOption
-      .flatMap(v => MetaFile.read(fs, commitTsPath(dir, v)))
+  private[ops] def commitTs(fs: FileSystem, dir: String, predecessor: Option[Long]): String = {
+    val prev = predecessor.flatMap(v => MetaFile.read(fs, commitTsPath(dir, v)))
       .flatMap(_.trim.toLongOption)
     math.max(prev.map(_ + 1L).getOrElse(Long.MinValue), System.currentTimeMillis).toString
   }
@@ -340,7 +340,7 @@ object VersionedTable {
       .foreach { case (app, batch) =>
         MetaFile.write(fs, new Path(vd, TxnPrefix + app), batch.toString)
       }
-    MetaFile.write(fs, commitTsPath(dir, version), commitTs(fs, dir, version))
+    MetaFile.write(fs, commitTsPath(dir, version), commitTs(fs, dir, cur))
     flipPointer(fs, dir, version)
     spark.catalog.refreshByPath(vd.toString)
   }

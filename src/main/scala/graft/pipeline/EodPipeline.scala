@@ -214,8 +214,8 @@ final class EodPipeline(warehouse: String, minTickers: Long = 100L) {
   def backfillFromRest(spark: SparkSession, startDate: String, endDate: String,
       transportClass: String, bronzeStage: String): Seq[PipelineReport] = {
     import graft.source.EodDsv2
-    // ONE parallel fetch; localCheckpoint so the staging write and the date
-    // listing re-read the fetched rows, not the REST source
+    // ONE parallel fetch; localCheckpoint so a retried staging task re-reads
+    // the fetched rows, not the REST source
     val typed = EodDsv2.readRange(spark, startDate, endDate, transportClass)
       .localCheckpoint()
     // ONE partitioned write stages every day — a per-date filter+write loop
@@ -225,16 +225,19 @@ final class EodPipeline(warehouse: String, minTickers: Long = 100L) {
     // (trade_date first — readBronzeCsv binds its schema positionally).
     // overwrite: the stage is a scratch landing area owned by this backfill;
     // a restarted run re-stages the whole window (idempotent by design).
+    // The staged dates are observed on the same pass (bounded: one value
+    // per trading day), so listing them launches no job of its own.
+    val staged = Observation()
     typed.select(
         col("trade_date").cast("string").as("trade_date"), col("symbol"),
         col("open").cast("string"), col("high").cast("string"),
         col("low").cast("string"), col("close").cast("string"),
         col("volume").cast("string"),
         col("trade_date").cast("string").as("pdate"))
+      .observe(staged, collect_set(col("pdate")).as("dates"))
       .write.mode(SaveMode.Overwrite).partitionBy("pdate")
       .option("header", "true").option("emptyValue", "").csv(bronzeStage)
-    val dates = typed.select(col("trade_date").cast("string")).distinct()
-      .collect().map(_.getString(0)).sorted // bounded: one row per trading day
+    val dates = staged.get("dates").asInstanceOf[scala.collection.Seq[String]].sorted
     // every date came from the fetched rows, so each staged file is
     // non-empty: no V2 probe, just the causal replay
     dates.toIndexedSeq.map(dt => runDate(spark, s"$bronzeStage/pdate=$dt", dt))

@@ -87,13 +87,22 @@ object RankFilterToTopK extends Rule[LogicalPlan] with PredicateHelper {
   }
 }
 
-/** The one install path for graft's planner strategy, optimizer rules and
-  * SQL functions. It registers into a LIVE session, idempotently, so it
-  * reaches sessions built outside this library too: [[graft.GraftSession]]
-  * calls it at start and `SparkEntry.queries` before every catalog query.
+/** The one install path for graft's planner strategy, optimizer rules, SQL
+  * functions and local filesystem. It registers into a LIVE session,
+  * idempotently, so it reaches sessions built outside this library too:
+  * [[graft.GraftSession]] calls it at start and `SparkEntry.queries` before
+  * every catalog query.
+  *
+  * The local filesystem ([[graft.io.LocalFs]]) becomes the session's
+  * `file:` filesystem (`fs.file.impl` on the SparkContext's Hadoop
+  * configuration) and the JVM's cached `file:` instance, so no `mkdirs` or
+  * `create` on local disk forks a `chmod` process — in committers on task
+  * threads, driver-written versions and pointers, and any other caller
+  * that resolves a `file:` path through Hadoop's `FileSystem`.
   */
 object GraftRules {
   def register(spark: SparkSession): Unit = {
+    graft.io.LocalFs.install(spark.sparkContext.hadoopConfiguration)
     TopK.register(spark)
     val cur = spark.experimental.extraOptimizations
     if (!cur.exists(_ eq RankFilterToTopK))

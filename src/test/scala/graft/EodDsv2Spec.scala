@@ -89,7 +89,13 @@ class EodDsv2Spec extends AnyFunSuite {
     val wh = TestSpark.tmpDir("whdsv2")
     val stage = TestSpark.tmpDir("bronzedsv2")
     val pipe = new graft.pipeline.EodPipeline(wh, minTickers = 1)
-    val reports = pipe.backfillFromRest(spark, "2024-01-18", "2024-01-23", synthetic, stage)
+    var reports = Seq.empty[graft.pipeline.PipelineReport]
+    val jobs = TestSpark.jobsOf {
+      reports = pipe.backfillFromRest(spark, "2024-01-18", "2024-01-23", synthetic, stage)
+    }
+    // outside the replayed days: the fetch's checkpoint and the staging
+    // write, which also observes the date list
+    assert(jobs.count(_.runDateLine.isEmpty) === 2, jobs.mkString("\n"))
     // Thu 18, Fri 19, Mon 22, Tue 23 run; Sat 20 / Sun 21 produce no rows
     assert(reports.map(_.tradeDate) === Seq("2024-01-18", "2024-01-19", "2024-01-22", "2024-01-23"))
     assert(reports.forall(_.rowParity), "V5 parity for every backfilled day")

@@ -4,12 +4,12 @@ import java.nio.charset.StandardCharsets.UTF_8
 import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.hadoop.fs.Path
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import graft.model.Schemas
 import graft.ops.{DateDim, Normalize, Quality, SurrogateKeys, VersionedTable}
 import graft.pipeline.EodPipeline
 import graft.source.{EodSource, GraftMeta}
+import graft.TestSpark.{Job, jobsOf}
 
 /** End-to-end daily lifecycle (SURVEY §3.1): two days + a FORCE-reload rerun
   * over reference-shaped bronze CSVs; star-schema invariants after each run.
@@ -30,56 +30,6 @@ class EodPipelineSpec extends AnyFunSuite {
       file: String = null): String =
     writeCsv(bronze, Option(file).getOrElse(date),
       symbols.map(sym => s"$date,$sym,$px,$px,$px,$px,${px * 100}"))
-
-  /** One job a bracketed run launched: its description and the `runDate`
-    * source line it was called from — through its SQL execution's call site
-    * when the job runs on a helper thread (AQE stages, broadcasts).
-    */
-  private final case class Job(description: String, runDateLine: Option[Int])
-
-  private val RunDateFrame =
-    """graft\.pipeline\.EodPipeline\.runDate\(EodPipeline\.scala:(\d+)\)""".r.unanchored
-
-  /** The jobs `body` launches. The listener bus is asynchronous and
-    * delivers in order, so a marker job on each side brackets exactly them.
-    */
-  private def jobsOf(body: => Unit): Seq[Job] = {
-    val sc = spark.sparkContext
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[Job]
-    val execLine = new java.util.concurrent.ConcurrentHashMap[Long, Int]
-    def line(details: String) = RunDateFrame.findFirstMatchIn(details).map(_.group(1).toInt)
-    val listener = new SparkListener {
-      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
-        case s: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
-          line(s.details).orElse(s.rootExecutionId.flatMap(r => Option(execLine.get(r))))
-            .foreach(execLine.put(s.executionId, _))
-        case _ =>
-      }
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        def prop(k: String) = Option(e.properties).flatMap(p => Option(p.getProperty(k)))
-        seen.add(Job(prop("spark.job.description").getOrElse(""),
-          e.stageInfos.headOption.flatMap(st => line(st.details)).orElse(
-            Seq("spark.sql.execution.root.id", "spark.sql.execution.id").flatMap(prop)
-              .flatMap(id => Option(execLine.get(id.toLong))).headOption)))
-      }
-    }
-    def marker(name: String): Unit = {
-      sc.setJobDescription(name)
-      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
-    }
-    sc.addSparkListener(listener)
-    try {
-      marker("guard-begin")
-      body
-      marker("guard-end")
-      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
-      while (!seen.asScala.exists(_.description == "guard-end") && System.nanoTime() < deadline)
-        Thread.sleep(20)
-      assert(seen.asScala.exists(_.description == "guard-end"), "listener saw the closing marker")
-      seen.asScala.toSeq.dropWhile(_.description != "guard-begin").drop(1)
-        .takeWhile(_.description != "guard-end")
-    } finally sc.removeSparkListener(listener)
-  }
 
   /** `runDate`'s dims block in EodPipeline.scala: the source lines from the
     * `// DIM_SECURITY` marker up to the `// FACT` marker.

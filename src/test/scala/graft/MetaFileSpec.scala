@@ -3,7 +3,7 @@ package graft
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.ops.{MetaFile, SnapshotCatalog, VersionedTable}
+import graft.ops.{ActionLog, MetaFile, SnapshotCatalog, VersionedTable}
 
 /** The commit-point rule: `claim` has one winner per slot and never shows a
   * torn body, a crash at either state inside `replace` leaves every pointer
@@ -43,6 +43,19 @@ class MetaFileSpec extends AnyFunSuite {
     // no temp debris left behind
     assert(!fs.listStatus(new Path(dir))
       .exists(_.getPath.getName.startsWith(".claim-")))
+  }
+
+  test("a claimed record is checksummed: one flipped byte fails its read") {
+    val dir = TestSpark.tmpDir("mfcrc")
+    ActionLog.append(Seq(1L, 2L).toDF("id"), dir)
+    val rec = java.nio.file.Paths.get(dir, "_log", "00000001.json")
+    assert(java.nio.file.Files.exists(rec.resolveSibling(".00000001.json.crc")))
+    val bytes = java.nio.file.Files.readAllBytes(rec)
+    bytes(bytes.length / 2) = (bytes(bytes.length / 2) ^ 1).toByte
+    java.nio.file.Files.write(rec, bytes)
+    val e = intercept[Exception](ActionLog.read(spark, dir).collect())
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(_.isInstanceOf[org.apache.hadoop.fs.ChecksumException]), e.toString)
   }
 
   test("read is None when absent; replace swaps the content and leaves no tmp") {

@@ -4,6 +4,17 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.ops.VersionedTable
 import org.apache.hadoop.fs.Path
 
+/** The session's `file:` filesystem, recording every path it lists. */
+final class ListRecordingFs extends graft.io.LocalFs {
+  override def listStatus(p: Path): Array[org.apache.hadoop.fs.FileStatus] = {
+    ListRecordingFs.listed.add(p.toUri.getPath)
+    super.listStatus(p)
+  }
+}
+object ListRecordingFs {
+  val listed = new java.util.concurrent.ConcurrentLinkedQueue[String]
+}
+
 /** Crash-safety contract of the versioned-snapshot table: every simulated
   * writer death leaves readers a complete snapshot, and the next write heals
   * the debris. The writer is "killed" by reproducing the exact on-disk state
@@ -174,6 +185,39 @@ class VersionedTableSpec extends AnyFunSuite {
       Seq((1L, "a", java.sql.Date.valueOf("2022-01-08"), Some(true)),
         (2L, "b", java.sql.Date.valueOf("2022-01-09"), Some(false)),
         (3L, "c\uD83D\uDE00", java.sql.Date.valueOf("2022-01-10"), None)))
+  }
+
+  /** How often `body` lists `dir`, with [[ListRecordingFs]] as the cached
+    * `file:` filesystem while it runs.
+    */
+  private def listingsOf(dir: String)(body: => Unit): Int = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    def use(impl: Class[_]): Unit = {
+      conf.set("fs.file.impl", impl.getName)
+      org.apache.hadoop.fs.FileSystem.getLocal(conf).close()
+      assert(org.apache.hadoop.fs.FileSystem.getLocal(conf).getClass === impl)
+    }
+    use(classOf[ListRecordingFs])
+    try {
+      ListRecordingFs.listed.clear()
+      body
+      ListRecordingFs.listed.toArray.count(_ == new Path(dir).toUri.getPath)
+    } finally use(classOf[graft.io.LocalFs])
+  }
+
+  test("a single-writer commit lists the table root once") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.types._
+    val dir = TestSpark.tmpDir("vt17") + "/t"
+    val schema = StructType(Seq(StructField("k", LongType)))
+    VersionedTable.writeRows(spark, dir, schema, Seq(InternalRow(1L)))
+    // the dangling-version sweep lists the root; the commit stamp reads the
+    // predecessor the publish has already resolved
+    assert(listingsOf(dir)(VersionedTable.writeRows(spark, dir, schema,
+      Seq(InternalRow(1L), InternalRow(2L)))) === 1)
+    assert(VersionedTable.readRows(spark, dir, schema).map(_.getLong(0)) === Seq(1L, 2L))
+    assert(VersionedTable.commitTimestamp(spark, dir, 2L).get >
+      VersionedTable.commitTimestamp(spark, dir, 1L).get)
   }
 
   test("GraftMeta.dataFiles: hidden names are not data, a data subdir is refused") {
