@@ -1,7 +1,6 @@
 package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SaveMode}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.hadoop.fs.Path
 
@@ -20,10 +19,15 @@ import org.apache.hadoop.fs.Path
   *    broadcast-sized — a daily increment almost always is, so Spark picks a
   *    broadcast anti join and the TB-sized target never shuffles.
   *  - With a date-partitioned target and a single-date source, callers should
-  *    read only the affected partition's directory and rewrite only it, as
-  *    `EodPipeline.runDate` does: rewriting 1 partition of 3650 is what makes
-  *    the daily run O(day) instead of O(history). Reading the table root and
-  *    filtering on the date prunes the scan but still lists every partition.
+  *    read only the affected partition's directory and rewrite only it:
+  *    rewriting 1 partition of 3650 is what makes a daily run O(day) instead
+  *    of O(history). Reading the table root and filtering on the date prunes
+  *    the scan but still lists every partition.
+  *  - When the source holds every key of that partition, as the daily
+  *    pipeline's sources do (`EodPipeline.runDate`), the merge keeps no
+  *    target row but the NULL-key ones, which match nothing: the partition
+  *    is the source plus those rows, written by [[snapshotWrite]] with no
+  *    merge at all.
   */
 object Upsert {
 
@@ -33,28 +37,6 @@ object Upsert {
   def merge(target: DataFrame, source: DataFrame, keys: Seq[String]): DataFrame =
     target.join(source.select(keys.map(col): _*).distinct(), keys, "left_anti")
       .unionByName(source.select(target.columns.map(col).toIndexedSeq: _*))
-
-  /** [[merge]]'s rows computed by ONE window over target ∪ source instead
-    * of an anti join: every source row, plus each target row whose key no
-    * source row shares (a NULL key matches nothing, as in the anti join).
-    * The kept target rows carry `true` in the added boolean column
-    * `fromTarget`, so a caller can observe the survivors on its write pass
-    * and drop the column. The plan has a single hash exchange on the keys,
-    * where the anti join plans a distinct, a join and their exchanges — on
-    * a small daily partition each of those is a Spark job of fixed cost.
-    * The target is shuffled too, so this suits a target of one partition's
-    * size (the pipeline's daily partition), not a TB-sized table.
-    */
-  def mergeMarked(target: DataFrame, source: DataFrame, keys: Seq[String],
-      fromTarget: String): DataFrame = {
-    val allTarget = "__all_target"
-    target.withColumn(fromTarget, lit(true))
-      .unionByName(source.select(target.columns.map(col).toIndexedSeq: _*)
-        .withColumn(fromTarget, lit(false)))
-      .withColumn(allTarget, min(col(fromTarget)).over(Window.partitionBy(keys.map(col): _*)))
-      .filter(!col(fromTarget) || col(allTarget) || keys.map(col(_).isNull).reduce(_ || _))
-      .drop(allTarget)
-  }
 
   /** Apply a CDC changefeed — ops I(nsert)/U(pdate)/D(elete), each change
     * stamped with a monotone per-key sequence — to a target snapshot: the

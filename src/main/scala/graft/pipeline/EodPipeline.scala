@@ -25,20 +25,20 @@ final case class PipelineReport(
     factRows: Long,
     rowParity: Boolean)
 
-/** What one partition upsert observed on its write pass: the partition's
-  * rows before the merge (`target`), the rows of it the merge kept
-  * (`survivors`), the rows written and, when asked for, the distinct values
-  * of one column over the written rows (`keySet`).
+/** What one partition rewrite observed: the partition's rows before the
+  * write (`target`), the old rows it carried over (`survivors`), the rows
+  * written and, when asked for, the distinct values of one column over the
+  * written rows (`keySet`).
   */
 private final case class MergeCounts(target: Long, survivors: Long, written: Long,
     keySet: Seq[String])
 
 /** The daily ELT lifecycle of the reference
   * (`polygon_modern_elt_v2`, dags/get_securities_data.py:71-233) as one Spark
-  * driver program: bronze CSV → RAW (append, lineage) → CORE (dedup + MERGE)
-  * → DIM_SECURITY ∥ DIM_DATE (insert-only MERGEs of a few rows a day,
-  * key-disjoint, computed on the driver) → FACT (dims join + MERGE) →
-  * reconciliation metrics.
+  * driver program: bronze CSV → RAW (append, lineage) → CORE (dedup +
+  * partition rewrite) → DIM_SECURITY ∥ DIM_DATE (insert-only MERGEs of a
+  * few rows a day, key-disjoint, computed on the driver) → FACT (dims join
+  * + partition rewrite) → reconciliation metrics.
   *
   * Storage layout: warehouse-rooted parquet, RAW/CORE/FACT hive-partitioned
   * by `trade_date` so the reference's ubiquitous date-equality predicate
@@ -64,11 +64,24 @@ final class EodPipeline(warehouse: String, minTickers: Long = 100L) {
 
   /** Dims are [[VersionedTable]]s (pointer-resolved immutable snapshots) —
     * read them through these accessors, not `spark.read.parquet(path)`.
+    * The live version is decoded on the driver into a local relation (no
+    * listing, no Spark job); fails fast when it has no complete version.
     */
   def dimSecurity(spark: SparkSession): DataFrame =
-    VersionedTable.read(spark, dimSecurityPath)
+    readDim(spark, dimSecurityPath, Schemas.dimSecurity)
   def dimDate(spark: SparkSession): DataFrame =
-    VersionedTable.read(spark, dimDatePath)
+    readDim(spark, dimDatePath, Schemas.dimDate)
+
+  private def readDim(spark: SparkSession, dir: String, schema: StructType): DataFrame = {
+    if (!VersionedTable.exists(spark, dir)) sys.error(s"$dir: no complete snapshot")
+    localFrame(spark, schema, VersionedTable.readRows(spark, dir, schema))
+  }
+
+  /** Rows held on the driver as a DataFrame over a local relation. */
+  private def localFrame(spark: SparkSession, schema: StructType,
+      rows: Seq[InternalRow]): DataFrame =
+    org.apache.spark.sql.graftcol.toDataFrame(spark,
+      LocalRelation(DataTypeUtils.toAttributes(schema), rows))
 
   /** One date's partition of a `trade_date`-partitioned table. Only the
     * partition dir is listed, so the read costs O(day) however long the
@@ -79,12 +92,13 @@ final class EodPipeline(warehouse: String, minTickers: Long = 100L) {
     spark.read.schema(schema).option("basePath", tablePath)
       .parquet(s"$tablePath/trade_date=$tradeDate")
 
-  /** Single-date partition upsert: read only the affected partition, merge
-    * ([[Upsert.mergeMarked]]: one window, one exchange), swap that
-    * partition's directory. The rest of the table is untouched (never read,
-    * never rewritten). The partition's rows, the rows of it the merge keeps
-    * and the rows written — plus the written rows' distinct `keySetOf`
-    * values — are observed on the write pass itself.
+  /** Single-date partition upsert: the partition is rewritten as `source`
+    * plus the old partition's NULL-key rows and swapped in. `source` holds
+    * every non-NULL key of the partition ([[runDate]]'s invariant), so a
+    * MERGE would keep no old row but those, which match nothing. The rest
+    * of the table is never read or rewritten. The old partition's rows come
+    * from its footers; the carried rows, the rows written and the written
+    * rows' distinct `keySetOf` values are observed on the write pass.
     */
   private def upsertDatePartition(spark: SparkSession, tablePath: String,
       tradeDate: String, source: DataFrame, keys: Seq[String],
@@ -93,21 +107,21 @@ final class EodPipeline(warehouse: String, minTickers: Long = 100L) {
     val src = source.drop("trade_date")
     val p = new Path(partPath)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    Upsert.recoverSnapshot(fs, p) // heal a crash between a prior swap's renames
-    val rows = count(lit(1)).as("rows")
+    Upsert.recoverSnapshot(fs, p) // a prior swap's crash, healed before the old partition is read
     val fromTarget = "__from_target"
-    val target = if (fs.exists(p)) Some(Observation()) else None
-    val merged = target.fold(src.withColumn(fromTarget, lit(false))) { t =>
-      Upsert.mergeMarked(spark.read.schema(src.schema).parquet(partPath).observe(t, rows),
-        src, keys, fromTarget)
-    }
+    val batch = src.withColumn(fromTarget, lit(false))
+    val (target, rewritten) =
+      if (!fs.exists(p)) (0L, batch)
+      else (committedRows(spark, partPath),
+        spark.read.schema(src.schema).parquet(partPath)
+          .filter(keys.map(col(_).isNull).reduce(_ || _))
+          .withColumn(fromTarget, lit(true)).unionByName(batch))
     val written = Observation()
     val keySetAgg = keySetOf.map(c => collect_set(col(c)).as("keys")).toSeq
-    Upsert.snapshotWrite(merged.observe(written, rows,
+    Upsert.snapshotWrite(rewritten.observe(written, count(lit(1)).as("rows"),
       count_if(col(fromTarget)).as("survivors") +: keySetAgg: _*).drop(fromTarget), partPath)
     val w = written.get
-    MergeCounts(target.fold(0L)(_.get("rows").asInstanceOf[Long]),
-      w("survivors").asInstanceOf[Long], w("rows").asInstanceOf[Long],
+    MergeCounts(target, w("survivors").asInstanceOf[Long], w("rows").asInstanceOf[Long],
       keySetOf.fold(Seq.empty[String])(_ => w("keys").asInstanceOf[scala.collection.Seq[String]].toSeq))
   }
 
@@ -247,6 +261,11 @@ final class EodPipeline(warehouse: String, minTickers: Long = 100L) {
     * (FORCE=TRUE reload semantics) — W1 dedup keeps the latest by
     * (_ingest_ts, _src_file) exactly like merge_core.sql:13-16.
     *
+    * RAW keeps every accepted load of a date; CORE's batch is built from
+    * the date's whole RAW partition and FACT's from its whole CORE
+    * partition. So CORE's keys are a subset of RAW's and FACT's of CORE's:
+    * each write is its batch plus the old NULL-key rows, never a merge.
+    *
     * A day issues only its necessary writes. Every RAW/CORE/FACT read names
     * the date's partition dir, so no read lists the table's history. The V4
     * forecast and the day's symbol set ride the single CORE write as
@@ -257,7 +276,7 @@ final class EodPipeline(warehouse: String, minTickers: Long = 100L) {
   def runDate(spark: SparkSession, bronzeCsv: String, tradeDate: String): PipelineReport = {
     val rawRows = loadRaw(spark, bronzeCsv, tradeDate)
 
-    // CORE: the date's RAW partition → normalize → dedup-latest → MERGE.
+    // CORE: the date's RAW partition → normalize → dedup-latest → rewrite.
     val raw = readDay(spark, rawPath, Schemas.raw, tradeDate)
       .withColumn("symbol", Normalize.normKey(col("symbol")))
     val deduped = Dedup.latestBy(raw,
@@ -267,10 +286,10 @@ final class EodPipeline(warehouse: String, minTickers: Long = 100L) {
       .select(Schemas.core.fieldNames.map(col).toIndexedSeq: _*)
     val merge = upsertDatePartition(spark, corePath, tradeDate, coreBatch, Seq("symbol"),
       keySetOf = Some("symbol"))
-    // V4 (premerge_metrics.sql) from the merge's own counts. Each CORE
-    // partition holds unique `symbol` keys, so every existing row the merge
-    // replaced is one matched key, and the batch's keys are the rows it
-    // wrote beyond the survivors.
+    // V4 (premerge_metrics.sql) from the rewrite's own counts. Each CORE
+    // partition holds unique `symbol` keys and the batch holds all of them,
+    // so every existing row not carried over is one matched key, and the
+    // batch's keys are the rows written beyond the carried NULL-key rows.
     val estUpdates = merge.target - merge.survivors
     val keyRows = merge.written - merge.survivors
 
@@ -302,8 +321,7 @@ final class EodPipeline(warehouse: String, minTickers: Long = 100L) {
     // broadcast side is the DIM_SECURITY snapshot just committed, as the
     // rows the driver already holds: a local relation, never a re-read.
     val coreDay = readDay(spark, corePath, Schemas.core, tradeDate)
-    val dimSecDf = org.apache.spark.sql.graftcol.toDataFrame(spark, LocalRelation(
-      DataTypeUtils.toAttributes(Schemas.dimSecurity), dimSec0 ++ secDelta))
+    val dimSecDf = localFrame(spark, Schemas.dimSecurity, dimSec0 ++ secDelta)
     val factBatch = Normalize.withLoadTs(
       coreDay.join(broadcast(dimSecDf), Seq("symbol"))
         .withColumn("date_sk", date_format(col("trade_date"), "yyyyMMdd").cast("int")))

@@ -14,15 +14,14 @@ import org.apache.spark.unsafe.types.UTF8String
   * backfills the round-2 review called for (SURVEY §2.1 S1 "at scale, a
   * custom DataSource V2").
   *
-  * The driver-side fetch ([[RestFetch.fetchDay]]) is faithful to the
-  * reference's one-payload-per-day loop (eod_data_downloader.py:58-90) but
-  * serializes a multi-year backfill through the driver. Here each trading
-  * date is ONE [[InputPartition]]: a 10-year backfill plans ~2 500
-  * partitions and every executor slot fetches its own dates concurrently,
-  * bounded only by cluster width and the provider's rate limits (the retry
-  * policy — same budget/backoff/statuses as the reference's urllib3 session,
-  * eod_data_downloader.py:16-18,93-102 — runs PER PARTITION, so one slow
-  * date never blocks the others).
+  * The reference fetches one payload per day in a driver loop
+  * (eod_data_downloader.py:58-90), which serializes a multi-year backfill
+  * through the driver. Here each trading date is ONE [[InputPartition]]: a
+  * 10-year backfill plans ~2 500 partitions and every executor slot fetches
+  * its own dates concurrently, bounded only by cluster width and the
+  * provider's rate limits (the retry policy — same budget/backoff/statuses
+  * as the reference's urllib3 session, eod_data_downloader.py:16-18,93-102
+  * — runs PER PARTITION, so one slow date never blocks the others).
   *
   * Deliberate split of labor: the connector emits one RAW row per date —
   * `(trade_date DATE, status INT, body STRING)` — and the payload→records

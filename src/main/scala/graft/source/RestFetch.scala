@@ -1,19 +1,16 @@
 package graft.source
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-
 /** S1 connector resilience — retry with exponential backoff on transient
   * HTTP failures, mirroring the reference's requests session
   * (eod_data_downloader.py:16-18, 93-102): `API_TIMEOUT = 30 s`,
   * `MAX_RETRIES = 3`, `BACKOFF_FACTOR = 1`, retried statuses
   * 429/500/502/503/504, `raise_for_status()` after the final attempt.
   *
-  * The transport is INJECTABLE (a plain `() => Response` closure): connector
-  * I/O is driver-side by design (one bounded payload per trading day, §2.9),
-  * and injection makes the policy unit-testable in this offline container —
-  * a deployment passes a `java.net.http.HttpClient` call with the 30 s
-  * timeout.
+  * The transport is INJECTABLE (a plain `() => Response` closure), so the
+  * policy is unit-testable offline. Its one caller is the REST connector's
+  * partition reader ([[EodDsv2]]), which runs it once per trading date
+  * around a [[DayTransport]]; a deployment's transport is an HTTP call with
+  * the 30 s timeout.
   */
 object RestFetch {
 
@@ -49,36 +46,5 @@ object RestFetch {
       attempt += 1
     }
     last.fold(throw _, identity)
-  }
-
-  /** Extract the `results` records of a grouped-daily payload as raw JSON
-    * strings (`data.get("results") or []`, eod_data_downloader.py:125-147) —
-    * parsed BY Spark (read body → explode results → re-serialize records),
-    * so no JSON library beyond the engine is involved.
-    */
-  def recordsFromGroupedDaily(spark: SparkSession, body: String): Seq[String] = {
-    import org.apache.spark.sql.types.{ArrayType, StructType}
-    import spark.implicits._
-    val doc = spark.read.json(Seq(body).toDS())
-    // an absent or empty `results` infers as non-struct -> empty day
-    doc.schema.find(_.name == "results").map(_.dataType) match {
-      case Some(ArrayType(_: StructType, _)) =>
-        doc.select(explode(col("results")).as("r"))
-          .select(to_json(col("r"))).as[String].collect().toIndexedSeq
-      case _ => Seq.empty
-    }
-  }
-
-  /** S1 end-to-end: fetch one trading day's payload with the retry policy,
-    * fail fast on a non-2xx final status (`raise_for_status`), and hand the
-    * records to the typed JSON source.
-    */
-  def fetchDay(spark: SparkSession, transport: () => Response, tradeDate: String,
-      maxRetries: Int = MaxRetries, backoffFactor: Double = BackoffFactor,
-      sleeper: Long => Unit = Thread.sleep): DataFrame = {
-    val r = withRetry(transport, maxRetries, backoffFactor, sleeper = sleeper)
-    require(r.status >= 200 && r.status < 300,
-      s"EOD fetch $tradeDate: HTTP ${r.status} after retries")
-    EodSource.fromJsonRecords(spark, recordsFromGroupedDaily(spark, r.body), tradeDate)
   }
 }

@@ -45,6 +45,25 @@ class EodDsv2Spec extends AnyFunSuite {
       r.getDecimal(4).intValue === 3 && r.getDecimal(5).intValue === 25)
   }
 
+  /** Grouped-daily payload rows as the connector emits them, one per body. */
+  private def payloads(bodies: String*) =
+    bodies.map(b => (java.sql.Date.valueOf("2026-08-10"), 200, b)).toDF("trade_date", "status", "body")
+
+  test("payload parse: typed prices; a missing v is a NULL volume") {
+    val rows = EodDsv2.parseGroupedDaily(payloads(
+      """{"queryCount": 2, "results": [
+        |  {"T": "AAPL", "o": "189.5", "h": "191.2", "l": "188.9", "c": "190.4", "v": "51234567"},
+        |  {"T": "MSFT", "o": "421.1", "h": "425.0", "l": "419.8", "c": "424.3"}
+        |]}""".stripMargin)).orderBy("symbol").collect()
+    assert(rows.map(_.getAs[String]("symbol")).toSeq === Seq("AAPL", "MSFT"))
+    assert(rows(0).getDecimal(rows(0).fieldIndex("close")).toPlainString === "190.400000")
+    assert(rows(1).isNullAt(rows(1).fieldIndex("volume")), "missing v -> NULL")
+  }
+
+  test("payload parse: a missing or empty results key is an empty day") {
+    assert(EodDsv2.parseGroupedDaily(payloads("""{"queryCount": 0}""", """{"results": []}""")).isEmpty)
+  }
+
   test("retry policy runs per partition: two 503s then success still lands rows") {
     FlakyTransport.calls.clear()
     val typed = EodDsv2.readRange(spark, "2024-01-15", "2024-01-17",

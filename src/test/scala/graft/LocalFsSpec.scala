@@ -37,6 +37,11 @@ class LocalFsSpec extends AnyFunSuite {
     * an in-process JFR stream.
     */
   private def processStarts(body: => Unit): Seq[String] = {
+    // Spark deletes an unreachable session's artifact dir with an `rm -rf`
+    // process once the GC finds the session (each streaming query clones
+    // one): collect the sessions earlier code dropped before recording
+    System.gc()
+    Thread.sleep(500)
     val starts = new ConcurrentLinkedQueue[String]
     val delivered = new CountDownLatch(1)
     val rs = new jdk.jfr.consumer.RecordingStream()
@@ -69,6 +74,23 @@ class LocalFsSpec extends AnyFunSuite {
       parity = pipe.runDate(spark, day("2026-03-03", Seq("AAPL", "MSFT", "NVDA")), "2026-03-03").rowParity
     }
     assert(parity)
+    assert(starts === Nil, s"${starts.size} process starts, first: ${starts.take(3)}")
+  }
+
+  test("a one-batch parquet stream starts no process, its checkpoint included") {
+    val dir = TestSpark.tmpDir("lfsstream")
+    spark.range(10).write.parquet(s"$dir/in")
+    val schema = spark.read.parquet(s"$dir/in").schema
+    def stream(name: String): Unit =
+      spark.readStream.schema(schema).parquet(s"$dir/in").writeStream.format("parquet")
+        .option("checkpointLocation", s"$dir/$name-ckpt")
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start(s"$dir/$name").awaitTermination()
+    stream("warm-up")
+    // a session's artifact-dir cleanup runs whenever the GC finds the
+    // session, also inside this window; it is no checkpoint file operation
+    val starts = processStarts(stream("out")).filterNot(_.matches("rm -rf \\S*/artifacts-[^/ ]+/[^/ ]+"))
+    assert(spark.read.parquet(s"$dir/out").count() === 10)
     assert(starts === Nil, s"${starts.size} process starts, first: ${starts.take(3)}")
   }
 

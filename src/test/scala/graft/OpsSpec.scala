@@ -37,24 +37,6 @@ class OpsSpec extends AnyFunSuite {
     assert(out === Array((1L, "a", 10.0), (2L, "b2", 21.0), (3L, "c", 30.0)))
   }
 
-  test("J5 mergeMarked: merge's rows, NULL keys and duplicate keys included, survivors marked") {
-    // composite key; NULL keys on both sides never match, a duplicated
-    // source key keeps both rows, a duplicated unmatched target key too
-    val target = Seq[(Option[Long], String, String)]((Some(1L), "x", "t1"), (Some(2L), "x", "t2"),
-      (None, "x", "t-null"), (Some(3L), "y", "t3"), (Some(3L), "y", "t3-dup"), (Some(4L), null, "t4"))
-      .toDF("k", "g", "v")
-    val source = Seq[(Option[Long], String, String)]((Some(2L), "x", "s2"), (Some(2L), "x", "s2-dup"),
-      (None, "x", "s-null"), (Some(5L), "z", "s5"), (Some(4L), null, "s4"))
-      .toDF("k", "g", "v")
-    val keys = Seq("k", "g")
-    val marked = Upsert.mergeMarked(target, source, keys, "__t")
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.select("k", "g", "v").as[(Option[Long], String, String)].collect().toSeq.sortBy(_._3)
-    assert(rows(marked) === rows(Upsert.merge(target, source, keys)))
-    assert(marked.filter($"__t").select("v").as[String].collect().sorted ===
-      Array("t-null", "t1", "t3", "t3-dup", "t4"))
-  }
-
   test("J5 idempotence: merging the same source twice is a no-op") {
     val target = Seq((1L, 10.0), (2L, 20.0)).toDF("k", "v")
     val source = Seq((2L, 21.0), (3L, 30.0)).toDF("k", "v")

@@ -8,7 +8,6 @@ import graft.source.RestFetch.Response
   * injected transport — no network in this container, none needed.
   */
 class RestFetchSpec extends AnyFunSuite {
-  lazy val spark = TestSpark.spark
 
   private class Script(responses: Response*) {
     var calls = 0
@@ -43,30 +42,5 @@ class RestFetchSpec extends AnyFunSuite {
     val e = intercept[java.io.IOException](
       RestFetch.withRetry(boom, sleeper = _ => ()))
     assert(e.getMessage === "reset" && calls === 4)
-  }
-
-  test("fetchDay: grouped-daily payload -> typed frame; 5xx after retries throws") {
-    val body =
-      """{"queryCount": 2, "results": [
-        |  {"T": "AAPL", "o": "189.5", "h": "191.2", "l": "188.9", "c": "190.4", "v": "51234567"},
-        |  {"T": "MSFT", "o": "421.1", "h": "425.0", "l": "419.8", "c": "424.3"}
-        |]}""".stripMargin
-    val ok = new Script(Response(503, ""), Response(200, body))
-    val df = RestFetch.fetchDay(spark, ok.transport, "2026-08-10", sleeper = ok.sleeper)
-    val rows = df.orderBy("symbol").collect()
-    assert(rows.length === 2)
-    assert(rows(0).getAs[String]("symbol") === "AAPL")
-    assert(rows(0).getDecimal(rows(0).fieldIndex("close")).toPlainString === "190.400000")
-    assert(rows(1).isNullAt(rows(1).fieldIndex("volume")), "missing v -> NULL")
-
-    val bad = new Script(Seq.fill(4)(Response(502, "")): _*)
-    val e = intercept[IllegalArgumentException](
-      RestFetch.fetchDay(spark, bad.transport, "2026-08-10", sleeper = bad.sleeper))
-    assert(e.getMessage.contains("HTTP 502"))
-  }
-
-  test("empty / missing results key -> empty day (AirflowSkipException analogue)") {
-    assert(RestFetch.recordsFromGroupedDaily(spark, """{"queryCount": 0}""").isEmpty)
-    assert(RestFetch.recordsFromGroupedDaily(spark, """{"results": []}""").isEmpty)
   }
 }
