@@ -29,16 +29,4 @@ object Dedup {
       .filter(col("__rn") === 1)
       .drop("__rn")
   }
-
-  /** Exact duplicate removal by full-row or selected-column equality
-    * (hash-aggregate based; SURVEY §2.5 A2 and the exact-dedup operator of the
-    * training-data pipeline). Keeps the minimum `idCol` per group so the
-    * survivor is deterministic.
-    */
-  def exactByKey(df: DataFrame, keyCols: Seq[Column], idCol: Column): DataFrame = {
-    val w = Window.partitionBy(keyCols: _*).orderBy(idCol.asc)
-    df.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1)
-      .drop("__rn")
-  }
 }

@@ -231,8 +231,8 @@ object DeletionVectors {
   /** Fold the vectors back into clean files: rewrite the DV-applied
     * content as the next version (no `_dv` sidecar), capturing an EMPTY
     * change set when `capture` — compaction is dataChange=false, logical
-    * content is untouched. The crash-safe swap is the ordinary
-    * stage-then-publish.
+    * content is untouched. The commit is the ordinary
+    * stage-then-publish pointer flip.
     */
   def compact(spark: SparkSession, dir: String, numFiles: Int,
       capture: Boolean = false): Long = {

@@ -2,10 +2,11 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.hadoop.fs.Path
 import graft.source.GraftMeta
 
-/** Physical-layout helpers: bucketing for co-located joins.
+/** Physical-layout helpers: bucketing for co-located joins, Z-order and
+  * Hilbert clustering, and small-file compaction ([[binPackVersioned]],
+  * committed through the [[VersionedTable]] pointer flip).
   *
   * A table bucketed (and sorted) by its join key joins against another table
   * bucketed the same way with NO shuffle exchange on either side — the
@@ -105,74 +106,34 @@ object Layout {
       .option("parquet.block.size", blockBytes)
       .parquet(path)
 
-  /** Compact a parquet directory's small files: size the output file count
-    * from the ACTUAL on-disk bytes (ceil(total / targetBytes)) and rewrite
-    * through the crash-safe snapshot swap. The small-files problem is a
-    * first-order 100 TB concern — a daily pipeline appending hundreds of
-    * kilobyte-sized files per partition turns every downstream scan into a
-    * metadata storm (one task + one footer read per file). Streaming sinks
-    * run this as housekeeping per closed partition.
+  /** Small-file compaction of a [[VersionedTable]] — Delta's OPTIMIZE
+    * bin-packing semantics: rewrite ONLY the files smaller than
+    * `smallBytes`, packed into ~`smallBytes`-sized outputs (a count sized
+    * from the actual on-disk bytes); every file already at size is carried
+    * into the next immutable version as a RAW BYTE COPY, never re-encoded.
+    * The small-files problem is a first-order 100 TB concern — a sink
+    * appending hundreds of kilobyte-sized files turns every downstream scan
+    * into a metadata storm (one task + one footer read per file) — and this
+    * is its steady-state fix: a daily OPTIMIZE touches the day's small-file
+    * tail (kilobytes × thousands) and leaves the compacted history
+    * (terabytes) untouched. Same stage → publish commit as every write: the
+    * pointer flips only after the staged version is complete, and the txn
+    * map is carried.
     *
-    * Returns (filesBefore, filesAfter). No-op (no rewrite) when the layout
-    * is already at or below the target count.
-    */
-  def compact(spark: SparkSession, path: String, targetBytes: Long): (Int, Int) = {
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val entries = fs.listStatus(new Path(path))
-      .filterNot(st => GraftMeta.hidden(st.getPath.getName))
-    val subDirs = entries.filter(_.isDirectory)
-    val dataFiles = entries.filter(_.isFile)
-    // A Hive-partitioned directory (the layout streaming sinks produce) has
-    // its files in key=value subdirs — compact each partition independently
-    // so the rewrite never crosses partition boundaries. A hybrid layout
-    // (files AND subdirs at top level) is ambiguous: refuse rather than
-    // guess and flatten someone's partitioning.
-    if (subDirs.nonEmpty) {
-      require(dataFiles.isEmpty,
-        s"compact($path): mixed layout — ${dataFiles.length} top-level files alongside " +
-          s"${subDirs.length} subdirectories; compact partitions individually")
-      val perPart = subDirs.map(d => compact(spark, d.getPath.toString, targetBytes))
-      (perPart.map(_._1).sum, perPart.map(_._2).sum)
-    } else {
-      val before = dataFiles.length
-      val totalBytes = dataFiles.map(_.getLen).sum
-      val want = math.max(1, math.ceil(totalBytes.toDouble / targetBytes).toInt)
-      if (want >= before) (before, before)
-      else {
-        // localCheckpoint cuts lineage off the old snapshot so the swap can
-        // delete it; coalesce (not repartition) keeps the rewrite shuffle-free
-        val df = spark.read.parquet(path).localCheckpoint().coalesce(want)
-        Upsert.snapshotWrite(df, path)
-        (before, GraftMeta.dataFiles(fs, new Path(path)).size)
-      }
-    }
-  }
-
-  /** Selective OPTIMIZE on a [[VersionedTable]] — Delta's bin-packing
-    * semantics: rewrite ONLY the files smaller than `smallBytes`, packed
-    * into ~`smallBytes`-sized outputs; every file already at size is
-    * carried into the next immutable version as a RAW BYTE COPY, never
-    * re-encoded. This is the steady-state shape of table maintenance at
-    * 100 TB: a daily OPTIMIZE touches the day's small-file tail (kilobytes
-    * × thousands) and leaves the compacted history (terabytes) untouched —
-    * [[compact]]'s whole-dir rewrite would re-encode the table every day.
-    * Same stage → publish commit as every write: the pointer flips only
-    * after the staged version is complete, and the txn map is carried.
-    *
-    * Returns (version, rewritten, carried); no new version when fewer than
-    * two small files exist (nothing to pack).
+    * Returns (version, rewritten, carried); no new version when packing
+    * would not lower the small-file count (nothing to pack).
     */
   def binPackVersioned(spark: SparkSession, dir: String,
       smallBytes: Long): (Long, Int, Int) = {
-    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = VersionedTable.fsOf(spark, dir)
     val cur = VersionedTable.currentVersion(spark, dir).getOrElse(
       sys.error(s"binPackVersioned($dir): no complete snapshot"))
     val live = VersionedTable.verDir(dir, cur)
     val files = GraftMeta.dataFiles(fs, live)
     val (small, big) = files.partition(_.getLen < smallBytes)
-    if (small.size < 2) return (cur, 0, files.size)
     val want = math.max(1,
       math.ceil(small.map(_.getLen).sum.toDouble / smallBytes).toInt)
+    if (want >= small.size) return (cur, 0, files.size)
     val next = VersionedTable.stageWith(spark, dir) { vd =>
       spark.read.parquet(small.map(_.getPath.toString): _*).coalesce(want)
         .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(vd.toString)

@@ -18,7 +18,7 @@ import graft.source.GraftMeta
   *
   * Layout under `dir`:
   * {{{
-  *   dir/data/            # immutable parquet data files
+  *   dir/data/            # a VersionedTable: immutable data versions
   *   dir/_tombstones/     # parquet key files, one per delete call
   * }}}
   *
@@ -27,16 +27,20 @@ import graft.source.GraftMeta
   * appears in any tombstone file. The key set is assumed dim-sized
   * (broadcast side); position deletes are the follow-up when keys are not
   * compact. Readers remain correct mid-flight because a tombstone file is
-  * visible only once fully written (parquet commit), and compaction stages
-  * through the crash-safe snapshot swap.
+  * visible only once fully written (parquet commit), and compaction
+  * commits the folded read as the data table's next version through the
+  * pointer flip. The read lazily reads the live version, which is immutable
+  * until [[VersionedTable.gc]], so the fold needs no checkpoint.
   */
 object MergeOnRead {
 
   val DataDir = "data"
   val TombstoneDir = "_tombstones"
 
+  private def table(dir: String): String = s"$dir/$DataDir"
+
   def init(df: DataFrame, dir: String): Unit =
-    df.write.mode(SaveMode.Overwrite).parquet(s"$dir/$DataDir")
+    VersionedTable.write(df, table(dir))
 
   /** Record a delete of `keys` (single-column frame named `key`) — writes
     * one tombstone file; data files are NOT touched.
@@ -47,18 +51,18 @@ object MergeOnRead {
     keys.coalesce(1).write.mode(SaveMode.Append).parquet(s"$dir/$TombstoneDir")
   }
 
-  private def tombstones(spark: SparkSession, dir: String): Option[DataFrame] = {
-    val p = new Path(s"$dir/$TombstoneDir")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) Some(spark.read.parquet(p.toString)) else None
+  /** The side files under `dir/side` as one frame, None when there are none. */
+  private def sideFiles(spark: SparkSession, dir: String, side: String): Option[DataFrame] = {
+    val p = new Path(s"$dir/$side")
+    if (VersionedTable.fsOf(spark, dir).exists(p)) Some(spark.read.parquet(p.toString)) else None
   }
 
   /** Read with tombstones applied: a broadcast anti-join on the key column
     * — the per-read tax merge-on-read pays until [[compact]].
     */
   def read(spark: SparkSession, dir: String, keyCol: String): DataFrame = {
-    val data = spark.read.parquet(s"$dir/$DataDir")
-    tombstones(spark, dir) match {
+    val data = VersionedTable.read(spark, table(dir))
+    sideFiles(spark, dir, TombstoneDir) match {
       case None => data
       case Some(t) =>
         data.join(broadcast(t.distinct()),
@@ -67,17 +71,27 @@ object MergeOnRead {
   }
 
   /** Fold the tombstones into the data (rewrite once, clear the side
-    * files) — the maintenance operation that ends the read tax. Staged
-    * through the crash-safe snapshot swap; returns the tombstone-file
-    * count folded in.
+    * files) — the maintenance operation that ends the read tax. Returns
+    * the tombstone-file count folded in.
     */
-  def compact(spark: SparkSession, dir: String, keyCol: String): Int = {
-    val p = new Path(s"$dir/$TombstoneDir")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+  def compact(spark: SparkSession, dir: String, keyCol: String): Int =
+    fold(spark, dir, TombstoneDir)(read(spark, dir, keyCol))
+
+  /** Commit `folded` (a read through the side files under `dir/side`) as
+    * the data table's next version, drop versions past the gc window, then
+    * clear the side files. A crash before the clear leaves them applied to
+    * the folded version, where they delete nothing: it holds no tombstoned
+    * key, and a position tombstone names a file of an older version.
+    * Returns the side-file count folded, 0 (and no commit) when there are
+    * none.
+    */
+  private def fold(spark: SparkSession, dir: String, side: String)(folded: => DataFrame): Int = {
+    val p = new Path(s"$dir/$side")
+    val fs = VersionedTable.fsOf(spark, dir)
     if (!fs.exists(p)) return 0
     val n = GraftMeta.dataFiles(fs, p).size
-    val folded = read(spark, dir, keyCol).localCheckpoint() // cut lineage off the old files
-    Upsert.snapshotWrite(folded, s"$dir/$DataDir")
+    VersionedTable.write(folded, table(dir))
+    VersionedTable.gc(spark, table(dir))
     fs.delete(p, true)
     n
   }
@@ -92,8 +106,9 @@ object MergeOnRead {
   // file source's `_metadata` hidden columns (`file_path`, `row_index` —
   // public Spark 3.5+ API), which is exactly the (file, pos) pair Iceberg
   // writers record. Addresses are stable because data files are immutable
-  // until [[compactPos]], which re-addresses by construction (it rewrites
-  // the files and clears the tombstones in one crash-safe swap).
+  // until [[compactPos]], which re-addresses by construction (it commits
+  // the folded rows as new files of the next version and clears the
+  // tombstones).
   //
   // Scale: readers anti-join on (file, pos) — broadcast while the delete
   // set is dim-sized; at Iceberg scale the delete files are clustered by
@@ -104,22 +119,16 @@ object MergeOnRead {
 
   /** The data scan annotated with each row's (file, pos) address. */
   def readWithPos(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/$DataDir")
+    VersionedTable.read(spark, table(dir))
       .select(col("*"), col("_metadata.file_path").as("__file"),
         col("_metadata.row_index").as("__pos"))
-
-  private def posTombstones(spark: SparkSession, dir: String): Option[DataFrame] = {
-    val p = new Path(s"$dir/$PosDeleteDir")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) Some(spark.read.parquet(p.toString)) else None
-  }
 
   /** The live view with position tombstones applied, still carrying the
     * (__file, __pos) address columns (callers derive new deletes from it).
     */
   def readPosVisible(spark: SparkSession, dir: String): DataFrame = {
     val data = readWithPos(spark, dir)
-    posTombstones(spark, dir) match {
+    sideFiles(spark, dir, PosDeleteDir) match {
       case None => data
       case Some(t) =>
         data.join(broadcast(t.distinct()),
@@ -149,29 +158,19 @@ object MergeOnRead {
     posDeleteAddresses(readPosVisible(spark, dir).filter(cond)
       .select(col("__file").as("file"), col("__pos").as("pos")), dir)
 
-  /** Fold position tombstones into the data via the crash-safe snapshot
-    * swap; returns the tombstone-file count folded. Row addresses are
-    * re-assigned by the rewrite — which is safe exactly because the tomb-
-    * stone dir is cleared in the same maintenance operation.
+  /** Fold position tombstones into the data; returns the tombstone-file
+    * count folded. Row addresses are re-assigned by the rewrite — which is
+    * safe exactly because the tombstone dir is cleared in the same
+    * maintenance operation.
     */
-  def compactPos(spark: SparkSession, dir: String): Int = {
-    val p = new Path(s"$dir/$PosDeleteDir")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return 0
-    val n = GraftMeta.dataFiles(fs, p).size
-    val folded = readPos(spark, dir).localCheckpoint() // cut lineage off the old files
-    Upsert.snapshotWrite(folded, s"$dir/$DataDir")
-    fs.delete(p, true)
-    n
-  }
+  def compactPos(spark: SparkSession, dir: String): Int =
+    fold(spark, dir, PosDeleteDir)(readPos(spark, dir))
 
-  /** Data-file inventory (name -> (length, mtime)) — lets callers PROVE a
-    * delete touched nothing.
+  /** The live version's data-file inventory (name -> (length, mtime)) —
+    * lets callers PROVE a delete touched nothing.
     */
-  def dataFiles(spark: SparkSession, dir: String): Map[String, (Long, Long)] = {
-    val p = new Path(s"$dir/$DataDir")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    GraftMeta.dataFiles(fs, p)
+  def dataFiles(spark: SparkSession, dir: String): Map[String, (Long, Long)] =
+    GraftMeta.dataFiles(VersionedTable.fsOf(spark, dir),
+      new Path(VersionedTable.liveDir(spark, table(dir))))
       .map(st => st.getPath.getName -> (st.getLen, st.getModificationTime)).toMap
-  }
 }

@@ -9,27 +9,11 @@ import org.apache.spark.sql.functions._
   */
 object Quality {
 
-  /** V1: row-count threshold gate (MIN_EXPECTED_TICKERS,
-    * eod_data_downloader.py:17,138-145). Single-pass `observe`-free variant:
-    * one count action; throws on violation like the reference's fail-fast.
-    */
-  def requireMinRows(df: DataFrame, min: Long, what: String): Long = {
-    val n = df.count()
-    require(n >= min, s"$what: expected >= $min rows, got $n")
-    n
-  }
-
   /** V2: empty-result short-circuit (no trading day,
     * get_securities_data.py:109-112). Returns false when downstream stages
     * should be skipped.
     */
   def nonEmpty(df: DataFrame): Boolean = !df.isEmpty
-
-  /** V3 / P7: post-load existence check `SELECT COUNT(*) > 0 AS data_loaded`
-    * (check_loaded.sql:4-6) as a 1-row frame.
-    */
-  def checkLoaded(df: DataFrame): DataFrame =
-    df.agg((count(lit(1)) > 0).as("data_loaded"))
 
   /** V4: pre-merge forecast (premerge_metrics.sql:4-33) — raw rows, distinct
     * incoming keys, already-present keys, estimated inserts/updates. `raw` is

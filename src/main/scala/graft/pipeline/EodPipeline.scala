@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
@@ -93,10 +93,12 @@ final class EodPipeline(warehouse: String, minTickers: Long = 100L) {
       .parquet(s"$tablePath/trade_date=$tradeDate")
 
   /** Single-date partition upsert: the partition is rewritten as `source`
-    * plus the old partition's NULL-key rows and swapped in. `source` holds
-    * every non-NULL key of the partition ([[runDate]]'s invariant), so a
-    * MERGE would keep no old row but those, which match nothing. The rest
-    * of the table is never read or rewritten. The old partition's rows come
+    * plus the old partition's NULL-key rows and swapped in
+    * ([[swapPartition]]). `source` holds every non-NULL key of the
+    * partition ([[runDate]]'s invariant), so a MERGE would keep no old row
+    * but those, which match nothing. The rest of the table is never read or
+    * rewritten. A prior swap's crash is healed first, once per write, before
+    * the old partition is counted and read. The old partition's rows come
     * from its footers; the carried rows, the rows written and the written
     * rows' distinct `keySetOf` values are observed on the write pass.
     */
@@ -107,7 +109,7 @@ final class EodPipeline(warehouse: String, minTickers: Long = 100L) {
     val src = source.drop("trade_date")
     val p = new Path(partPath)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    Upsert.recoverSnapshot(fs, p) // a prior swap's crash, healed before the old partition is read
+    healSwap(fs, p)
     val fromTarget = "__from_target"
     val batch = src.withColumn(fromTarget, lit(false))
     val (target, rewritten) =
@@ -118,8 +120,8 @@ final class EodPipeline(warehouse: String, minTickers: Long = 100L) {
           .withColumn(fromTarget, lit(true)).unionByName(batch))
     val written = Observation()
     val keySetAgg = keySetOf.map(c => collect_set(col(c)).as("keys")).toSeq
-    Upsert.snapshotWrite(rewritten.observe(written, count(lit(1)).as("rows"),
-      count_if(col(fromTarget)).as("survivors") +: keySetAgg: _*).drop(fromTarget), partPath)
+    swapPartition(fs, rewritten.observe(written, count(lit(1)).as("rows"),
+      count_if(col(fromTarget)).as("survivors") +: keySetAgg: _*).drop(fromTarget), p)
     val w = written.get
     MergeCounts(target, w("survivors").asInstanceOf[Long], w("rows").asInstanceOf[Long],
       keySetOf.fold(Seq.empty[String])(_ => w("keys").asInstanceOf[scala.collection.Seq[String]].toSeq))
@@ -145,17 +147,66 @@ final class EodPipeline(warehouse: String, minTickers: Long = 100L) {
       VersionedTable.gc(spark, dir)
     }
 
+  /** The hidden sibling `.<name>.<suffix>` of a partition dir: a dot name
+    * is invisible to partition discovery, so a root reader never parses it
+    * as a `trade_date` value, and its one fixed name per partition lets a
+    * prior crash's leftover be swept with one delete, never a root listing.
+    */
+  private def sibling(part: Path, suffix: String): Path =
+    new Path(part.getParent, s".${part.getName}.$suffix")
+
+  /** The commit of a rewritten `trade_date` partition, which root readers
+    * must keep seeing as a plain hive dir: `df` (which may lazily read the
+    * live partition itself) is written to the `.stage` sibling, then two
+    * renames swap it in, never deleting live data before its replacement
+    * is in place:
+    *   1. `part` → `.part.old`  (live partition retired, still complete)
+    *   2. `.part.stage` → `part` (new partition goes live)
+    * A crash at any point leaves the last complete partition on disk; one
+    * between the renames leaves `part` missing and `.old` complete, which
+    * [[healSwap]] restores before the next write reads the partition. The
+    * reference gets the same durability from Snowflake's transactional
+    * MERGE (merge_core.sql:5-33).
+    */
+  private def swapPartition(fs: FileSystem, df: DataFrame, part: Path): Unit = {
+    val stage = sibling(part, "stage")
+    fs.delete(stage, true) // a prior crash between write and go-live
+    df.write.mode(SaveMode.Overwrite).parquet(stage.toString)
+    val retired = sibling(part, "old")
+    if (fs.exists(retired)) fs.delete(retired, true)
+    val hadLive = fs.exists(part)
+    if (hadLive && !fs.rename(part, retired))
+      throw new java.io.IOException(s"partition retire failed: $part -> $retired")
+    if (!fs.rename(stage, part)) {
+      if (hadLive) fs.rename(retired, part) // restore; the write is lost, the partition is not
+      throw new java.io.IOException(s"partition swap failed: $stage -> $part")
+    }
+    if (hadLive) fs.delete(retired, true)
+    // The session-level FileStatusCache still holds the pre-swap listing;
+    // without this, the next read of `part` fails with FILE_NOT_EXIST.
+    df.sparkSession.catalog.refreshByPath(part.toString)
+  }
+
+  /** Restore a partition whose [[swapPartition]] crashed between its
+    * renames (`part` missing, `.part.old` complete). Idempotent.
+    */
+  private def healSwap(fs: FileSystem, part: Path): Unit = {
+    val retired = sibling(part, "old")
+    if (!fs.exists(part) && fs.exists(retired)) fs.rename(retired, part)
+  }
+
   /** Stage 2-3 of the lifecycle: bronze CSV for one date → RAW append with
     * the V1 row-count gate evaluated by `observe` ON the write pass (one
-    * scan, not two). The pass writes into a hidden staging dir that no RAW
-    * reader lists; only a batch that passes the gate has its files moved
-    * into `trade_date=D`, so a rejected reload never touches rows an earlier
-    * load published, and a crash before the move publishes nothing.
+    * scan, not two). The pass writes into the partition's hidden `.stage`
+    * sibling, which no RAW reader lists; only a batch that passes the gate
+    * has its files moved into `trade_date=D`, so a rejected reload never
+    * touches rows an earlier load published, and a crash before the move
+    * publishes nothing. RAW appends, so it needs no [[swapPartition]].
     */
   def loadRaw(spark: SparkSession, bronzeCsv: String, tradeDate: String): Long = {
     val obs = Observation(s"v1-gate-$tradeDate")
     val part = new Path(s"$rawPath/trade_date=$tradeDate")
-    val stage = new Path(s"$rawPath/.trade_date=$tradeDate.stage")
+    val stage = sibling(part, "stage")
     val fs = part.getFileSystem(spark.sparkContext.hadoopConfiguration)
     EodSource.readBronzeCsv(spark, bronzeCsv)
       .drop("trade_date") // the partition dir carries it, as partitionBy would

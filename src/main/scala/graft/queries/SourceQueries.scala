@@ -456,26 +456,29 @@ object SourceQueries {
     },
 
     // ---------------------------------------------------------------- q85
-    // Small-file compaction (streaming-sink housekeeping): a 40-file layout
-    // is rewritten to a byte-sized target through the crash-safe snapshot
-    // swap; the query ASSERTS the file-count contract at runtime (a layout
+    // Small-file compaction (streaming-sink housekeeping): a 40-file
+    // VersionedTable is bin-packed to a byte-sized target and committed as
+    // its next version through the pointer flip; the query ASSERTS the
+    // file-count contract on the live version at runtime (a layout
     // regression turns the entry red, q59-style) and returns the compacted
     // data — the oracle proves the rewrite lost nothing.
     Q("q85_compaction",
       """SELECT o_orderpriority, count(*) AS n_orders,
         |  CAST(SUM(o_orderkey) AS BIGINT) AS key_sum
         |FROM orders GROUP BY 1""".stripMargin) { (s, dir) =>
+      import graft.ops.{Layout, VersionedTable}
       val path = scratch(s, dir, "q85")
-      Tables.load(s, dir, "orders").repartition(40)
-        .write.mode("overwrite").parquet(path)
+      VersionedTable.write(Tables.load(s, dir, "orders").repartition(40), path)
       val fs = new org.apache.hadoop.fs.Path(path)
         .getFileSystem(s.sparkContext.hadoopConfiguration)
-      val bytes = GraftMeta.dataFiles(fs, new org.apache.hadoop.fs.Path(path))
-        .map(_.getLen).sum
-      val (before, after) = graft.ops.Layout.compact(s, path, targetBytes = bytes / 4 + 1)
-      require(before == 40 && after <= 4,
-        s"compaction contract violated: $before files -> $after")
-      s.read.parquet(path)
+      def liveFiles() = GraftMeta.dataFiles(fs,
+        new org.apache.hadoop.fs.Path(VersionedTable.liveDir(s, path)))
+      val before = liveFiles()
+      Layout.binPackVersioned(s, path, smallBytes = before.map(_.getLen).sum / 4 + 1)
+      val after = liveFiles().size
+      require(before.size == 40 && after <= 4,
+        s"compaction contract violated: ${before.size} files -> $after")
+      VersionedTable.read(s, path)
         .groupBy(col("o_orderpriority"))
         .agg(count(lit(1)).as("n_orders"),
           sum(col("o_orderkey")).cast("bigint").as("key_sum"))
@@ -1085,7 +1088,7 @@ object SourceQueries {
     // never the mix. In-query requires measure all three states by join
     // cardinality. The oracle recomputes the published join (the renumber
     // cancels out). This is the Nessie/lakeFS catalog-commit shape on the
-    // same two-rename pointer protocol the table layer uses.
+    // same pointer-flip protocol the table layer uses.
     Q("q184_catalog_snapshot",
       """SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS n_orders,
         |  CAST(count(DISTINCT c_nationkey) AS BIGINT) AS n_nations
@@ -1325,8 +1328,8 @@ object SourceQueries {
     // kill both). Second delete is a predicate drip against the LIVE view.
     // In-query proofs: no data file changed (name/length/mtime inventory),
     // the anti-join read equals the batch expectation, compaction folds
-    // exactly two tombstone files through the crash-safe swap and the
-    // re-addressed table still matches, a second compaction is a no-op.
+    // exactly two tombstone files into the data table's next version and
+    // the re-addressed table still matches, a second compaction is a no-op.
     // The oracle recomputes survivors straight from the base table — the
     // duplicate collapse means survivors ARE the base rows minus the
     // predicate, which is what makes one-copy semantics SQL-checkable.
@@ -2849,7 +2852,7 @@ object SourceQueries {
     // the sidecar beating the equivalent position-delete parquet on bytes
     // (the format's reason to exist), and compaction folding the vectors
     // into clean files with an EMPTY capture (dataChange=false) through
-    // the crash-safe swap. At 100 TB this is kilobytes of bitmap instead
+    // the pointer flip. At 100 TB this is kilobytes of bitmap instead
     // of re-encoded terabytes per compliance delete. The oracle applies
     // both delete predicates to the base table.
     Q("q224_deletion_vectors",

@@ -100,9 +100,6 @@ private[source] class LogMicroBatchStream(path: String, schema: StructType,
       .map(_.stripSuffix(".json").toLong).sorted.lastOption.getOrElse(0L)
   }
 
-  private def addsOf(v: Long): Seq[String] =
-    ActionLog.actionsOf(SparkSession.active, path, v)._1
-
   /** Adds of a STREAMED version — loud on removes, Delta's "not
     * append-only" contract (a baseline version is a position, not a
     * delivery, and is never checked).

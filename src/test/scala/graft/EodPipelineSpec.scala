@@ -395,10 +395,14 @@ class EodPipelineSpec extends AnyFunSuite {
     // replacement not yet renamed into place
     val part = new Path(s"${pipe.corePath}/trade_date=$date")
     val fs = part.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(fs.rename(part, new Path(part.getParent, s".${part.getName}.old")))
+    val retired = new Path(part.getParent, s".${part.getName}.old")
+    val stage = new Path(part.getParent, s".${part.getName}.stage")
+    assert(fs.rename(part, retired))
+    fs.mkdirs(stage) // the half-staged next partition
     val r = load(2)
     assert((r.estInserts, r.estUpdates, r.coreRows) === ((1L, 1L, 3L)),
       s"AAPL matched, the first load's NULL-symbol row carried: $r")
+    assert(!fs.exists(retired) && !fs.exists(stage), "the reload leaves no sibling behind")
   }
 
   test("surrogate keys follow Spark's binary UTF-8 order, as SurrogateKeys.assign does") {

@@ -2,7 +2,8 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.ops.Layout
+import graft.ops.{Layout, VersionedTable}
+import graft.source.GraftMeta
 
 /** Bucketed layout: co-located joins run without a shuffle exchange. */
 class LayoutSpec extends AnyFunSuite {
@@ -29,26 +30,32 @@ class LayoutSpec extends AnyFunSuite {
 
   test("compact: small files merge to the byte-sized target, data unchanged") {
     val sf = "/root/testdata/sf0.001"
-    val dir = TestSpark.tmpDir("compact")
+    val dir = TestSpark.tmpDir("compact") + "/t"
     val src = Tables.load(spark, sf, "orders")
-    src.repartition(40).write.mode("overwrite").parquet(dir)
+    VersionedTable.write(src.repartition(40), dir)
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def files() = fs.listStatus(new org.apache.hadoop.fs.Path(dir))
-      .filter(st => st.isFile && !st.getPath.getName.startsWith("_"))
+    def files() = GraftMeta.dataFiles(fs,
+      new org.apache.hadoop.fs.Path(VersionedTable.liveDir(spark, dir)))
     val totalBytes = files().map(_.getLen).sum
-    val (before, after) = Layout.compact(spark, dir, targetBytes = totalBytes / 4 + 1)
+    val before = files().size
+    val (v2, rewritten, carried) = Layout.binPackVersioned(spark, dir, totalBytes / 4 + 1)
+    val after = files().size
     assert(before === 40)
+    assert((v2, rewritten, carried) === ((2L, 40, 0)))
     assert(after <= 4, s"expected <= 4 files, got $after")
     // lossless: same rows
-    assert(spark.read.parquet(dir).exceptAll(src).isEmpty)
-    assert(src.exceptAll(spark.read.parquet(dir)).isEmpty)
-    // converges: re-encoded files are smaller, so a second pass may shrink
-    // further, but the layout reaches a fixpoint where compact() no-ops
-    val (_, a2) = Layout.compact(spark, dir, targetBytes = totalBytes / 4 + 1)
-    val (b3, a3) = Layout.compact(spark, dir, targetBytes = totalBytes / 4 + 1)
+    assert(VersionedTable.read(spark, dir).exceptAll(src).isEmpty)
+    assert(src.exceptAll(VersionedTable.read(spark, dir)).isEmpty)
+    // converges: re-encoded files are smaller, so a second pass may pack
+    // further, but the layout reaches a fixpoint where a pass commits no
+    // new version
+    val (v3, _, _) = Layout.binPackVersioned(spark, dir, totalBytes / 4 + 1)
+    val a2 = files().size
     assert(a2 <= after)
-    assert(b3 === a2 && a3 === a2, "fixpoint layout must be left alone")
+    assert(Layout.binPackVersioned(spark, dir, totalBytes / 4 + 1) === ((v3, 0, a2)),
+      "fixpoint layout must be left alone")
+    assert(VersionedTable.currentVersion(spark, dir) === Some(v3))
   }
 
   test("sort-on-write enables row-group skipping: sorted layout scans fewer rows") {

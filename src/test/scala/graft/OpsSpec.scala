@@ -63,57 +63,61 @@ class OpsSpec extends AnyFunSuite {
       === Array((1L, "a"), (2L, "b2"), (4L, "d")))
   }
 
-  test("snapshotWrite swaps atomically and survives self-read") {
-    val path = TestSpark.tmpDir("snap") + "/t"
-    Seq((1L, "a")).toDF("k", "v").write.parquet(path)
-    val current = spark.read.parquet(path)
-    val merged = Upsert.merge(current, Seq((1L, "a2")).toDF("k", "v"), Seq("k"))
-    Upsert.snapshotWrite(merged, path) // merged lazily reads `path` itself
-    assert(spark.read.parquet(path).as[(Long, String)].collect() === Array((1L, "a2")))
+  test("the partition swap is the pipeline's own: no table-layer retire, heal or rename") {
+    import java.nio.file.Files
+    val sources = TestSpark.sourceFiles(Seq("src/main/scala", "src/main/java"), Seq(".scala", ".java"))
+    val Def = """\bdef\s+(\w+)""".r
+    // (file, enclosing def) of every match of `re`
+    def sitesOf(re: scala.util.matching.Regex): Seq[String] = sources.flatMap { p =>
+      val text = Files.readString(p)
+      re.findAllMatchIn(text).map { m =>
+        val enclosing = Def.findAllMatchIn(text.substring(0, m.start)).map(_.group(1)).toSeq.lastOption
+        s"${p.getFileName}:${enclosing.getOrElse("")}"
+      }
+    }.distinct.sorted
+    // the retired `.old` sibling is named in one place, and the heal that
+    // renames it back runs once per write, ahead of the partition's read
+    assert(sitesOf(""""old"|\.old"""".r) === Seq("EodPipeline.scala:healSwap",
+      "EodPipeline.scala:swapPartition"))
+    assert(sitesOf("""(?<!def )healSwap\(""".r) === Seq("EodPipeline.scala:upsertDatePartition"))
+    assert(sitesOf("""(?<!def )swapPartition\(""".r) === Seq("EodPipeline.scala:upsertDatePartition"))
+    assert(sitesOf("""\bsnapshotWrite\b|\brecoverSnapshot\b|Layout\.compact\b""".r) === Nil)
+    for (name <- Seq("Upsert.scala", "Layout.scala")) {
+      val text = Files.readString(sources.find(_.getFileName.toString == name).get)
+      assert(!text.contains("getFileSystem") && !text.contains("rename("),
+        s"$name holds filesystem code")
+    }
+    assert(!Files.readString(sources.find(_.getFileName.toString == "Upsert.scala").get)
+      .contains("import org.apache.hadoop"))
   }
 
   test("snapshotWrite staging is invisible to partition discovery and self-healing") {
-    // partitioned table root: a crash-leftover staging dir must not be parsed
-    // as a partition value on full-table reads, and must be swept on rerun
-    val root = TestSpark.tmpDir("snapstage") + "/t"
-    Seq((1L, "2024-01-15", "a")).toDF("k", "d", "v")
-      .write.partitionBy("d").parquet(root)
-    val part = s"$root/d=2024-01-16"
-    Upsert.snapshotWrite(Seq((2L, "b")).toDF("k", "v"), part)
-    // simulate a crash between write and rename on a later run
-    val stale = new org.apache.hadoop.fs.Path(s"$root/.d=2024-01-16.stage")
-    val fs = stale.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(stale)
-    assert(spark.read.parquet(root).count() === 2,
-      "dot-prefixed staging dir ignored by partition discovery")
-    Upsert.snapshotWrite(Seq((3L, "c")).toDF("k", "v"), part)
-    assert(!fs.exists(stale), "stale staging swept before writing")
-    assert(spark.read.parquet(root).count() === 2)
-  }
-
-  test("snapshot swap crash window: writer killed between retire and go-live loses nothing") {
-    // round-2 verdict: the old delete-then-rename swap could lose the table.
-    // Reproduce the worst crash instant of the NEW two-rename protocol —
-    // live already renamed aside, replacement not yet in place — and prove
-    // both snapshots still exist and recovery restores the live one.
-    val parent = TestSpark.tmpDir("snapcrash")
-    val path = s"$parent/t"
-    Seq((1L, "v1")).toDF("k", "v").write.parquet(path)
-    val fs = new org.apache.hadoop.fs.Path(path)
+    // the pipeline's partition commit: a reload that crashed between its
+    // stage write and its go-live rename leaves a complete copy of each
+    // partition in its `.stage` sibling; a full-table read must not parse
+    // it as a partition value, and the next reload must sweep it
+    val bronze = TestSpark.tmpDir("snapstage")
+    val pipe = new graft.pipeline.EodPipeline(TestSpark.tmpDir("snapstage-wh"), minTickers = 1)
+    val date = "2026-08-10"
+    val csv = new java.io.File(bronze, s"eod_prices_$date.csv").toString
+    java.nio.file.Files.write(java.nio.file.Paths.get(csv), java.util.Arrays.asList(
+      "trade_date,symbol,open,high,low,close,volume",
+      s"$date,AAPL,1,1,1,1,100", s"$date,MSFT,1,1,1,1,100"))
+    pipe.runDate(spark, csv, date)
+    val tables = Seq(pipe.corePath, pipe.factPath)
+    val fs = new org.apache.hadoop.fs.Path(pipe.corePath)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(fs.rename(new org.apache.hadoop.fs.Path(path),
-      new org.apache.hadoop.fs.Path(parent, ".t.old")), "simulate rename-out, then crash")
-    fs.mkdirs(new org.apache.hadoop.fs.Path(parent, ".t.stage")) // half-staged next
-    // the complete retired snapshot is still on disk; recovery restores it
-    assert(Upsert.recoverSnapshot(fs, new org.apache.hadoop.fs.Path(path)))
-    spark.catalog.refreshByPath(path)
-    assert(spark.read.parquet(path).as[(Long, String)].collect() === Array((1L, "v1")),
-      "no data loss at the crash instant")
-    // and the next write sweeps the stale staging dir and completes cleanly
-    Upsert.snapshotWrite(Seq((1L, "v2")).toDF("k", "v"), path)
-    assert(spark.read.parquet(path).as[(Long, String)].collect() === Array((1L, "v2")))
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(parent, ".t.old")))
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(parent, ".t.stage")))
+    val stages = tables.map { t =>
+      val stage = new org.apache.hadoop.fs.Path(s"$t/.trade_date=$date.stage")
+      spark.read.parquet(s"$t/trade_date=$date").write.parquet(stage.toString)
+      stage
+    }
+    def rootRows() = tables.map(spark.read.parquet(_).count())
+    assert(rootRows() === Seq(2L, 2L), "dot-prefixed staging dir ignored by partition discovery")
+    val r = pipe.runDate(spark, csv, date)
+    assert((r.coreRows, r.factRows) === ((2L, 2L)))
+    assert(stages.forall(!fs.exists(_)), "stale staging swept by the reload")
+    assert(rootRows() === Seq(2L, 2L))
   }
 
   test("surrogate keys: deterministic, dense, continues from max") {
